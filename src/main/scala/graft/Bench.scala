@@ -61,15 +61,56 @@ object Bench {
     // A/B pairs showed the adaptive re-optimization latency is pure
     // floor for that plan — see QuerySpec.aqe)
     val aqeEnv = sys.env.get("SPARK_GRAFT_AQE")
-    val results = QueryCatalog.all.sortBy(_.name)
-      .filter(sp => wanted.isEmpty || wanted.contains(sp.name))
-      .map { sp =>
-      // SPARK_GRAFT_BENCH_REPS: dev knob for long sweeps (100× replica
-      // runs don't need min-of-3 — the heavy kernels dwarf host noise)
-      val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-      spark.conf.set("spark.sql.adaptive.enabled",
-        aqeEnv.getOrElse(sp.aqe.toString))
-      val times = (1 to reps).map { r =>
+    // SPARK_GRAFT_BENCH_REPS: dev knob for long sweeps (100× replica
+    // runs don't need min-of-3 — the heavy kernels dwarf host noise)
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val (results, failed) = timeAll(spark, sfDir, reps, aqeEnv,
+      QueryCatalog.all.sortBy(_.name).filter(sp => wanted.isEmpty || wanted.contains(sp.name)))
+    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    // Per-artifact build seconds (additive field, round 15): the
+    // standing-artifact layer builds inside the FIRST rep of the first
+    // consumer, which min-of-N reporting discards — this keeps that
+    // one-time cost visible next to the warm per-query numbers.
+    // SPARK_GRAFT_NO_ARTIFACTS=1 benches the inline forms instead
+    // (then this map is empty and every consumer pays its own build).
+    val arts = graft.operators.Artifacts.buildSeconds.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    // additive field: queries whose rep threw, with the error class —
+    // kept out of `queries` and `total`, never reported as a timing
+    val fails = failed.map { case (k, e) => s"""{"name":"$k","error":"$e"}""" }
+      .mkString("[", ",", "]")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"artifacts":$arts,"sf":"$sfDir","failed":$fails}"""
+    // the full-surface line is ~7 KB and harness stdout captures have
+    // truncated it (BENCH_r08.json "parsed": null) — ALSO write it to a
+    // file the driver can read whole, and print it LAST (after
+    // spark.stop()) so no shutdown logging trails the parseable line
+    // relative default (resolves under the launch cwd) — a hardcoded
+    // absolute path wrote outside the working tree on foreign checkouts
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
+    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
+      (line + "\n").getBytes("UTF-8"))
+    catch { case _: Throwable => () }
+    spark.stop()
+    println(line)
+  }
+
+  /** Min-of-`reps` wall seconds per spec, in order. A spec whose rep
+    * throws is not timed: it is left out of the timings and returned in
+    * the second list with the error's class name, and its later reps
+    * are skipped. `aqe` overrides every spec's own AQE flag. */
+  private[graft] def timeAll(
+      spark: SparkSession,
+      sfDir: String,
+      reps: Int,
+      aqe: Option[String],
+      specs: Seq[QuerySpec]): (Seq[(String, Double)], Seq[(String, String)]) = {
+    val timed = specs.map { sp =>
+      spark.conf.set("spark.sql.adaptive.enabled", aqe.getOrElse(sp.aqe.toString))
+      // every Throwable: one query's StackOverflowError must not end
+      // the whole bench
+      sp.name -> (try Right((1 to reps).map { r =>
         // each timed run pays its own persists: CacheManager matches
         // canonicalized plans, so without this a second run would
         // silently reuse the first run's cached intermediates
@@ -83,35 +124,11 @@ object Bench {
         try sp.withConfs(spark) {
           sp.fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         }
-        catch { case _: Throwable => () }
         finally spark.sparkContext.setJobDescription(null)
         (System.nanoTime() - t0) / 1e9
-      }
-      sp.name -> times.min
+      }.min) catch { case e: Throwable => Left(e.getClass.getName) })
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    // Per-artifact build seconds (additive field, round 15): the
-    // standing-artifact layer builds inside the FIRST rep of the first
-    // consumer, which min-of-N reporting discards — this keeps that
-    // one-time cost visible next to the warm per-query numbers.
-    // SPARK_GRAFT_NO_ARTIFACTS=1 benches the inline forms instead
-    // (then this map is empty and every consumer pays its own build).
-    val arts = graft.operators.Artifacts.buildSeconds.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"artifacts":$arts,"sf":"$sfDir"}"""
-    // the full-surface line is ~7 KB and harness stdout captures have
-    // truncated it (BENCH_r08.json "parsed": null) — ALSO write it to a
-    // file the driver can read whole, and print it LAST (after
-    // spark.stop()) so no shutdown logging trails the parseable line
-    // relative default (resolves under the launch cwd) — a hardcoded
-    // absolute path wrote outside the working tree on foreign checkouts
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
-    spark.stop()
-    println(line)
+    (timed.collect { case (n, Right(t)) => n -> t },
+      timed.collect { case (n, Left(e)) => n -> e })
   }
 }

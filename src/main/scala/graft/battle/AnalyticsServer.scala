@@ -3,7 +3,6 @@ package graft.battle
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Minimal HTTP serving layer — the engine-side twin of the reference's
   * `server.py:1-8` (LangGraph dev server exposing the analytics graphs
@@ -33,18 +32,13 @@ final class AnalyticsServer(
     classifier: QuestionClassifier = QnaRouter,
     maxRows: Int = 100) {
 
-  private def renderRows(df: DataFrame, n: Int): IndexedSeq[String] =
-    df.limit(n)
-      .select(to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("j"))
-      .collect().map(_.getString(0)).toIndexedSeq
-
   // all serving state is precomputed: full tables for /table, the
-  // top-5 slices for /qna context assembly (QnaRouter.buildContext's
+  // top-N slices for /qna context assembly (QnaRouter.buildContext's
   // topN) — both bounded aggregates by construction
   private val rendered: Map[String, IndexedSeq[String]] =
-    tables.map { case (n, df) => n -> renderRows(df, maxRows) }
+    tables.map { case (n, df) => n -> QnaRouter.renderRows(df, maxRows) }
   private val renderedTop: Map[String, IndexedSeq[String]] =
-    tables.map { case (n, df) => n -> renderRows(df, 5) }
+    tables.map { case (n, df) => n -> QnaRouter.renderRows(df, QnaRouter.TopN) }
 
   private def jsonStr(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
@@ -55,16 +49,6 @@ final class AnalyticsServer(
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
-
-  /** The exact [[QnaRouter.buildContext]] assembly over the
-    * pre-rendered top-5 slices (same truncation rule). */
-  private def contextOf(needs: Seq[String]): String = {
-    val parts = needs.flatMap(n =>
-      renderedTop.get(n).map(rows => jsonStr(n) + ":[" + rows.mkString(",") + "]"))
-    val json = parts.mkString("{", ",", "}")
-    if (json.length <= QnaRouter.MaxContextChars) json
-    else json.substring(0, QnaRouter.MaxContextChars)
-  }
 
   private var server: HttpServer = _
 
@@ -115,7 +99,7 @@ final class AnalyticsServer(
                 respond(ex, 200,
                   s"""{"category":${jsonStr(category)},"needs":${
                     needs.map(jsonStr).mkString("[", ",", "]")},"context":${
-                    jsonStr(contextOf(needs))}$warning}""")
+                    jsonStr(QnaRouter.assemble(needs, renderedTop))}$warning}""")
             }
           case _ => respond(ex, 404, """{"error":"not found"}""")
         }

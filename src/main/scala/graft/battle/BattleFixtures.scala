@@ -81,13 +81,8 @@ object BattleFixtures {
 
   /** Normalized battles with archetypes attached via the relational
     * classifier (tier 2) on both sides. */
-  def classifiedBattles(spark: SparkSession, n: Int): DataFrame = {
-    val base = normalizedBattlesDf(spark, n)
-      .withColumn("battle_key", org.apache.spark.sql.functions.monotonically_increasing_id())
-    val meta = cardMetaDf(spark)
-    val withMy = DeckType.classifyDecks(base, meta, "my_cards", "my_deck_type", Seq("battle_key"))
-    DeckType.classifyDecks(withMy, meta, "opp_cards", "opp_deck_type", Seq("battle_key"))
-  }
+  def classifiedBattles(spark: SparkSession, n: Int): DataFrame =
+    DeckType.classifyBattles(normalizedBattlesDf(spark, n), DeckType.cardLookup(cardMetaDf(spark)))
 
   /** Raw battle-log JSON lines covering the reference's edge cases
     * (FIXTURES.md §1.1). */

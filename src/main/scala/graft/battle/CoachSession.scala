@@ -24,22 +24,22 @@ final class CoachSession(
   def analyzeUser(rawBattles: DataFrame): UserWorkflow.UserTables =
     UserWorkflow.run(spark, rawBattles, cardMeta)
 
+  /** The two meta context tables, each rendered once per session. */
+  private lazy val metaRows = new ContextRows(Map(
+    "meta_deck_summary" -> meta.deckSummary,
+    "meta_matchups" -> meta.matchupSummary))
+
   /** qa_answer (:621-642): classify → select tables → assemble context
     * → health check. The returned context is what the expert LLM call
     * receives — render it with [[coach]] (LLM-backed via [[LlmExpert]],
-    * or the deterministic [[EchoExpert]] for CI flows). */
+    * or the deterministic [[EchoExpert]] for CI flows). Every table is
+    * rendered on its first use and reused after ([[ContextRows]]), so
+    * repeat answers only assemble strings; the context equals
+    * [[QnaRouter.buildContext]] over the same tables. */
   def answer(question: String, user: UserWorkflow.UserTables): CoachSession.Answer = {
     val (category, needs) = classifier.classify(question)
-    val tables = Map(
-      "user_summary" -> user.summaryTable,
-      "user_deck_summary" -> user.deckTypeSummary,
-      "user_matchups" -> user.deckTypeMatchups,
-      "card_performance" -> user.cardBest,
-      "meta_deck_summary" -> meta.deckSummary,
-      "meta_matchups" -> meta.matchupSummary)
-    val context = QnaRouter.buildContext(needs, tables)
-    val games = user.summary.collect()(0).getAs[Long]("games")
-    CoachSession.Answer(category, needs, context, QnaRouter.dataHealthWarning(category, games))
+    val context = QnaRouter.assemble(needs, user.contextRows(needs) ++ metaRows(needs))
+    CoachSession.Answer(category, needs, context, QnaRouter.dataHealthWarning(category, user.games))
   }
 
   /** The full expert_answer flow (phase2_qna_workflow.py:328-433):

@@ -8,13 +8,18 @@ import org.apache.spark.sql.functions._
   * computed from the card-metadata dimension.
   *
   * Two tiers (SURVEY §2.4):
-  *  - `classifyDeck`: plain Scala function over a broadcastable Map —
-  *    mirrors the reference exactly; used by unit/property tests and as
-  *    a UDF where a column-level classifier is convenient.
-  *  - `classifyDecks`: relational decomposition — explode cards →
-  *    broadcast-join metadata → groupBy features → CASE cascade. Fully
-  *    Catalyst-optimizable (predicate pushdown, partial agg, codegen)
-  *    and the scale path for classifying billions of decks.
+  *  - `classifyDeck`: plain Scala function over a Map — mirrors the
+  *    reference exactly. It is the reference the tests compare tier 2
+  *    against, and usable as a UDF where a column-level classifier is
+  *    convenient.
+  *  - `classifyDecks`: one row-level projection over the deck array.
+  *    The card dimension (keyed by name) becomes a map literal built
+  *    once per workflow call ([[cardLookup]]); counts, the elixir sum
+  *    and the 4-card cycle are higher-order functions over the looked-up
+  *    cards; the CASE cascade sits on top. Every feature comes from the
+  *    row's own deck, so there is no explode, no join back and no
+  *    shuffle: the input plan is read once, and a row is classified
+  *    wherever it already is — the scale path for billions of decks.
   *
   * Semantics preserved from the reference:
   *  - avg elixir = sum(known elixirs) / 8.0 — FIXED denominator 8, null
@@ -23,7 +28,7 @@ import org.apache.spark.sql.functions._
   *  - 4-card cycle cost = sum of the 4 cheapest known elixirs
   *  - cascade: Siege (X-Bow or Mortar) → Bait (≥3 bait pieces) →
   *    Cycle (cycle cost ≤ 9) → Bridge Spam (≥2 pieces) → Beatdown
-  *    (≥1 big tank AND avg ≥ 3.5) → Hybrid; empty deck → Hybrid
+  *    (≥1 big tank AND avg ≥ 3.5) → Hybrid; empty or null deck → Hybrid
   */
 object DeckType {
 
@@ -54,56 +59,60 @@ object DeckType {
   }
 
   // ------------------------------------------------------------ tier 2
-  /** The cascade as a Column over feature columns. */
-  private def cascade: Column =
-    when(col("has_xbow") || col("has_mortar"), "Siege")
-      .when(col("bait_count") >= 3, "Bait")
-      .when(col("cycle_cost") <= 9, "Cycle")
-      .when(col("bridge_count") >= 2, "Bridge Spam")
-      .when(col("tank_count") >= 1 && col("avg_elixir") >= 3.5, "Beatdown")
-      .otherwise("Hybrid")
-
-  /** Classify a deck column on `df`. `idCols` must uniquely key rows;
-    * all other columns are re-joined after aggregation. cardMeta is the
-    * (tiny) metadata dimension — always broadcast.
-    *
-    * Pipeline: explode_outer(cards) → broadcast left join meta →
-    * groupBy(id) feature agg → CASE. Empty decks survive via
-    * explode_outer and classify as Hybrid (cycle default 12, no flags).
-    */
-  def classifyDecks(
-      df: DataFrame,
-      cardMeta: DataFrame,
-      cardsCol: String,
-      outCol: String,
-      idCols: Seq[String]): DataFrame = {
-    val ids = idCols.map(col)
-    val exploded = df
-      .select(ids :+ col(cardsCol).as("__cards"): _*)
-      .select(ids :+ explode_outer(col("__cards")).as("__card"): _*)
-      .join(broadcast(cardMeta.select(
-        col("name").as("__card"), col("elixir"),
-        col("is_big_tank"), col("is_bait_piece"), col("is_bridge_spam_piece"))),
-        Seq("__card"), "left")
-    val feats = exploded
-      .groupBy(ids: _*)
-      .agg(
-        max(when(col("__card") === "X-Bow", true).otherwise(false)).as("has_xbow"),
-        max(when(col("__card") === "Mortar", true).otherwise(false)).as("has_mortar"),
-        sum(when(col("is_bait_piece"), 1).otherwise(0)).as("bait_count"),
-        sum(when(col("is_bridge_spam_piece"), 1).otherwise(0)).as("bridge_count"),
-        sum(when(col("is_big_tank"), 1).otherwise(0)).as("tank_count"),
-        count(col("elixir")).as("known_elixirs"),
-        sum(coalesce(col("elixir"), lit(0))).as("elixir_sum"),
-        sort_array(collect_list(col("elixir"))).as("known_sorted"))
-      .withColumn("avg_elixir",
-        when(col("known_elixirs") === 0, 3.0)
-          .otherwise(col("elixir_sum").cast("double") / 8.0))
-      .withColumn("cycle_cost",
-        when(col("known_elixirs") === 0, 12.0)
-          .otherwise(expr(
-            "CAST(aggregate(slice(known_sorted, 1, 4), 0, (acc, x) -> acc + x) AS DOUBLE)")))
-    val classified = feats.select(ids :+ cascade.as(outCol): _*)
-    df.join(classified, idCols)
+  /** The card dimension as a `map<name, struct<elixir, is_big_tank,
+    * is_bait_piece, is_bridge_spam_piece>>` literal. Collects the
+    * (tiny) dimension once; build it once per workflow call and pass it
+    * to every [[classifyDecks]] of that call. A null flag counts as
+    * false. */
+  def cardLookup(cardMeta: DataFrame): Column = {
+    val traits = cardMeta
+      .select(col("name"), col("elixir").cast("int"),
+        col("is_big_tank").cast("boolean"), col("is_bait_piece").cast("boolean"),
+        col("is_bridge_spam_piece").cast("boolean"))
+      .collect()
+      .collect { case r if !r.isNullAt(0) =>
+        r.getString(0) -> CardTraits(
+          if (r.isNullAt(1)) None else Some(r.getInt(1)),
+          !r.isNullAt(2) && r.getBoolean(2),
+          !r.isNullAt(3) && r.getBoolean(3),
+          !r.isNullAt(4) && r.getBoolean(4))
+      }
+      .toMap
+    typedLit(traits)
   }
+
+  /** Archetype of one deck column: the cascade over features computed
+    * from the deck's own cards through `lookup` ([[cardLookup]]). */
+  private def deckType(cards: Column, lookup: Column): Column = {
+    val deck = coalesce(cards, typedLit(Seq.empty[String]))
+    val known = filter(transform(deck, c => element_at(lookup, c)), _.isNotNull)
+    def count(flag: String): Column = size(filter(known, _.getField(flag)))
+    val elixirs = filter(transform(known, _.getField("elixir")), _.isNotNull)
+    def total(xs: Column): Column = aggregate(xs, lit(0), _ + _).cast("double")
+    val noElixir = size(elixirs) === 0
+    val avg = when(noElixir, 3.0).otherwise(total(elixirs) / 8.0)
+    val cycle = when(noElixir, 12.0).otherwise(total(slice(array_sort(elixirs), 1, 4)))
+    when(array_contains(deck, "X-Bow") || array_contains(deck, "Mortar"), "Siege")
+      .when(count("is_bait_piece") >= 3, "Bait")
+      .when(cycle <= 9, "Cycle")
+      .when(count("is_bridge_spam_piece") >= 2, "Bridge Spam")
+      .when(count("is_big_tank") >= 1 && avg >= 3.5, "Beatdown")
+      .otherwise("Hybrid")
+  }
+
+  /** `df` plus `outCol`, the archetype of the deck in `cardsCol`. */
+  def classifyDecks(df: DataFrame, lookup: Column, cardsCol: String, outCol: String): DataFrame =
+    df.withColumn(outCol, deckType(col(cardsCol), lookup))
+
+  /** Normalized battles plus `my_deck_type` and `opp_deck_type`. */
+  def classifyBattles(battles: DataFrame, lookup: Column): DataFrame =
+    classifyDecks(classifyDecks(battles, lookup, "my_cards", "my_deck_type"),
+      lookup, "opp_cards", "opp_deck_type")
 }
+
+/** The classification-relevant part of a [[CardMeta]] row. */
+private[battle] final case class CardTraits(
+    elixir: Option[Int],
+    is_big_tank: Boolean,
+    is_bait_piece: Boolean,
+    is_bridge_spam_piece: Boolean)

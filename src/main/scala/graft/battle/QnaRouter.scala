@@ -63,24 +63,35 @@ object QnaRouter extends QuestionClassifier {
     * (phase2_qna_workflow.py:397-398). */
   val MaxContextChars: Int = 4000
 
-  /** Per-route table selection + top-N limit + JSON rendering
-    * (prep_*_context_node :54-220: tables are shipped as JSON rows,
-    * user tables limited to top 5). */
-  def buildContext(
-      needs: Seq[String],
-      tables: Map[String, DataFrame],
-      topN: Int = 5): String = {
-    val parts = needs.flatMap { name =>
-      tables.get(name).map { df =>
-        val rows = df.limit(topN)
-          .select(to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("j"))
-          .collect().map(_.getString(0))
-        "\"" + name + "\":[" + rows.mkString(",") + "]"
-      }
-    }
+  /** Rows shipped per context table (prep_*_context_node :54-220: user
+    * tables limited to top 5). */
+  val TopN: Int = 5
+
+  /** One table's first `n` rows as JSON objects — the payload of a
+    * context block. */
+  def renderRows(df: DataFrame, n: Int): IndexedSeq[String] =
+    df.limit(n)
+      .select(to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("j"))
+      .collect().map(_.getString(0)).toIndexedSeq
+
+  /** Context JSON over already-rendered rows: one `"name":[rows]` block
+    * per need, in order, skipping names absent from `rows`; truncated at
+    * [[MaxContextChars]] (phase2_qna_workflow.py:397-398). No Spark. */
+  def assemble(needs: Seq[String], rows: Map[String, Seq[String]]): String = {
+    val parts = needs.flatMap(name =>
+      rows.get(name).map(r => "\"" + name + "\":[" + r.mkString(",") + "]"))
     val json = parts.mkString("{", ",", "}")
     if (json.length <= MaxContextChars) json else json.substring(0, MaxContextChars)
   }
+
+  /** Per-route table selection + top-N limit + JSON rendering
+    * (prep_*_context_node :54-220: tables are shipped as JSON rows):
+    * [[renderRows]] of each needed table, then [[assemble]]. */
+  def buildContext(
+      needs: Seq[String],
+      tables: Map[String, DataFrame],
+      topN: Int = TopN): String =
+    assemble(needs, needs.distinct.flatMap(n => tables.get(n).map(df => n -> renderRows(df, topN))).toMap)
 
   /** enough_data_node (:289-326): warn when games_played < 20; meta
     * questions exempt. */
@@ -88,4 +99,20 @@ object QnaRouter extends QuestionClassifier {
     if (category != "meta" && gamesPlayed < threshold)
       Some(s"Low data: only $gamesPlayed ranked games (< $threshold)")
     else None
+}
+
+/** Context rows of a fixed set of tables, each table rendered
+  * ([[QnaRouter.renderRows]], top [[QnaRouter.TopN]]) on its first use
+  * and kept for the life of this object, so answers over the same
+  * tables start no Spark job after the first. Safe under concurrent
+  * callers: a table is rendered at most once. */
+final class ContextRows(tables: Map[String, DataFrame]) {
+  private final class Slot(df: DataFrame) {
+    lazy val rows: IndexedSeq[String] = QnaRouter.renderRows(df, QnaRouter.TopN)
+  }
+  private val slots = tables.map { case (name, df) => name -> new Slot(df) }
+
+  /** Rendered rows of the `needs` this object holds, by name. */
+  def apply(needs: Seq[String]): Map[String, Seq[String]] =
+    needs.distinct.flatMap(n => slots.get(n).map(s => n -> s.rows)).toMap
 }

@@ -22,17 +22,29 @@ object UserWorkflow {
       cardBest: DataFrame,
       cardWorst: DataFrame,
       deckBest: DataFrame,
-      deckWorst: DataFrame)
+      deckWorst: DataFrame) {
+
+    /** The player's four Phase 2 context tables by [[QnaRouter]] name,
+      * each rendered on its first use and then reused by every answer
+      * over these tables (build_user_llm_tables_node computes them
+      * once, user_workflow.py:323-363). */
+    private[battle] val contextRows = new ContextRows(Map(
+      "user_summary" -> summaryTable,
+      "user_deck_summary" -> deckTypeSummary,
+      "user_matchups" -> deckTypeMatchups,
+      "card_performance" -> cardBest))
+
+    /** Ranked games played, read from [[summary]] on first use. */
+    private[battle] lazy val games: Long = summary.collect()(0).getAs[Long]("games")
+  }
 
   /** raw battle-log DataFrame (BattleSchema.raw) + card metadata →
-    * normalize → classify both sides → cache → six aggregations from
-    * the one cached input (mirrors the reference computing all
-    * analytics from one normalized list, user_workflow.py:265-290). */
+    * normalize → classify both sides (one projection) → cache → six
+    * aggregations from the one cached input (mirrors the reference
+    * computing all analytics from one normalized list,
+    * user_workflow.py:265-290). */
   def run(spark: SparkSession, rawBattles: DataFrame, cardMeta: DataFrame): UserTables = {
-    val normalized = Normalize(rawBattles)
-      .withColumn("battle_key", monotonically_increasing_id())
-    val withMy = DeckType.classifyDecks(normalized, cardMeta, "my_cards", "my_deck_type", Seq("battle_key"))
-    val classified = DeckType.classifyDecks(withMy, cardMeta, "opp_cards", "opp_deck_type", Seq("battle_key"))
+    val classified = DeckType.classifyBattles(Normalize(rawBattles), DeckType.cardLookup(cardMeta))
       .cache()
     UserTables(
       normalized = classified,
@@ -95,7 +107,8 @@ object MetaWorkflow {
     * used-index exclusion, battle-log fetch per cohort): leaderboard →
     * salted exact-k cohort sampling (tags never resampled across loops)
     * → battle-log fetch through the RestClient boundary → normalize →
-    * two-sided classification → the convergence loop above.
+    * two-sided classification (one projection, card lookup built once
+    * for all cohorts) → the convergence loop above.
     *
     * The per-loop cohort collect is bounded by cohortK (50 in the
     * reference) and mirrors its driver-side control flow; battle data
@@ -114,6 +127,7 @@ object MetaWorkflow {
     import graft.sources.RestBattleSource
     val top = RestBattleSource.fetchTopPlayers(spark, client, topLimit)
       .select(col("tag")).cache()
+    val lookup = DeckType.cardLookup(cardMeta)
     val batches = new Iterator[DataFrame] {
       private var used: DataFrame = top.limit(0)
       private var loopNo = 0
@@ -123,11 +137,7 @@ object MetaWorkflow {
         val cohort = PlayerSampler.sampleUnused(top, used, cohortK, "tag", s"loop$loopNo")
         val tags = cohort.collect().map(_.getString(0)).toSeq
         used = used.union(cohort)
-        val raw = RestBattleSource.fetchBattles(spark, client, tags)
-        val normalized = Normalize(raw)
-          .withColumn("battle_key", monotonically_increasing_id())
-        val withMy = DeckType.classifyDecks(normalized, cardMeta, "my_cards", "my_deck_type", Seq("battle_key"))
-        DeckType.classifyDecks(withMy, cardMeta, "opp_cards", "opp_deck_type", Seq("battle_key"))
+        DeckType.classifyBattles(Normalize(RestBattleSource.fetchBattles(spark, client, tags)), lookup)
       }
     }
     run(spark, batches, minTotal, minPerType, maxLoops, summaryMinGames, matchupMinGames)

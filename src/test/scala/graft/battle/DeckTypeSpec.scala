@@ -53,14 +53,21 @@ class DeckTypeSpec extends SparkSpec {
 
   test("tier-2 relational classifier agrees with tier-1 on all fixture decks") {
     import spark.implicits._
-    val decks = Seq(siegeDeck, baitDeck, cycleDeck, bridgeDeck, beatdownDeck,
+    val fixtureDecks = Seq(siegeDeck, baitDeck, cycleDeck, bridgeDeck, beatdownDeck,
       hybridDeck, mirrorDeck, Seq.empty[String], Seq.fill(8)("NotACard"))
+    // plus seeded random decks of 0–11 cards over the fixture pool and an
+    // unknown card (duplicates allowed), and a null card array (≡ empty)
+    val pool = BattleFixtures.cardMeta.map(_.name) :+ "Unknown Card"
+    val rnd = new scala.util.Random(20251201)
+    val randomDecks = Seq.fill(5000)(Seq.fill(rnd.nextInt(12))(pool(rnd.nextInt(pool.size))))
+    val decks = fixtureDecks ++ randomDecks :+ (null: Seq[String])
     val df = decks.zipWithIndex.map { case (d, i) => (i.toLong, d) }.toDF("deck_id", "cards")
-    val out = DeckType.classifyDecks(df, BattleFixtures.cardMetaDf(spark),
-      "cards", "deck_type", Seq("deck_id"))
+    val out = DeckType.classifyDecks(df, DeckType.cardLookup(BattleFixtures.cardMetaDf(spark)),
+      "cards", "deck_type")
       .collect().map(r => r.getAs[Long]("deck_id") -> r.getAs[String]("deck_type")).toMap
+    assert(out.size === decks.size)
     decks.zipWithIndex.foreach { case (d, i) =>
-      assert(out(i.toLong) === DeckType.classifyDeck(d, meta), s"deck $i: $d")
+      assert(out(i.toLong) === DeckType.classifyDeck(Option(d).getOrElse(Nil), meta), s"deck $i: $d")
     }
   }
 }
