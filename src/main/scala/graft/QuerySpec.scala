@@ -43,7 +43,14 @@ final case class QuerySpec(
 
   /** Run `body` with [[confs]] applied, restoring prior values after —
     * the scoping helper Verify/Bench/specs share. */
-  def withConfs[T](spark: SparkSession)(body: => T): T = {
+  def withConfs[T](spark: SparkSession)(body: => T): T = QuerySpec.scoped(spark, confs)(body)
+}
+
+object QuerySpec {
+
+  /** Run `body` with `confs` set on the session, restoring each prior
+    * value (or unsetting it) after. */
+  def scoped[T](spark: SparkSession, confs: Map[String, String])(body: => T): T = {
     val prior = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body

@@ -1,5 +1,6 @@
 package graft.battle
 
+import graft.Json
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import org.apache.spark.sql.DataFrame
@@ -32,23 +33,16 @@ final class AnalyticsServer(
     classifier: QuestionClassifier = QnaRouter,
     maxRows: Int = 100) {
 
-  // all serving state is precomputed: full tables for /table, the
-  // top-N slices for /qna context assembly (QnaRouter.buildContext's
-  // topN) — both bounded aggregates by construction
+  // all serving state is precomputed from ONE render per table: its
+  // first maxRows rows for /table, the top-N prefix for /qna context
+  // assembly (QnaRouter.buildContext's topN) — both bounded aggregates
+  // by construction
+  private val renderedAll: Map[String, IndexedSeq[String]] =
+    tables.map { case (n, df) => n -> QnaRouter.renderRows(df, math.max(maxRows, QnaRouter.TopN)) }
   private val rendered: Map[String, IndexedSeq[String]] =
-    tables.map { case (n, df) => n -> QnaRouter.renderRows(df, maxRows) }
+    renderedAll.map { case (n, rows) => n -> rows.take(maxRows) }
   private val renderedTop: Map[String, IndexedSeq[String]] =
-    tables.map { case (n, df) => n -> QnaRouter.renderRows(df, QnaRouter.TopN) }
-
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+    renderedAll.map { case (n, rows) => n -> rows.take(QnaRouter.TopN) }
 
   private var server: HttpServer = _
 
@@ -81,13 +75,13 @@ final class AnalyticsServer(
               s"""{"status":"ok","tables":${rendered.size},"games":$gamesPlayed}""")
           case "/tables" =>
             respond(ex, 200,
-              rendered.keys.toSeq.sorted.map(jsonStr).mkString("[", ",", "]"))
+              rendered.keys.toSeq.sorted.map(Json.str).mkString("[", ",", "]"))
           case p if p.startsWith("/table/") =>
             val name = p.stripPrefix("/table/")
             rendered.get(name) match {
               case Some(rows) => respond(ex, 200, rows.mkString("[", ",", "]"))
               case None => respond(ex, 404,
-                s"""{"error":"unknown table","table":${jsonStr(name)}}""")
+                s"""{"error":"unknown table","table":${Json.str(name)}}""")
             }
           case "/qna" =>
             queryParam(ex, "q") match {
@@ -95,17 +89,17 @@ final class AnalyticsServer(
               case Some(q) =>
                 val (category, needs) = classifier.classify(q)
                 val warning = QnaRouter.dataHealthWarning(category, gamesPlayed)
-                  .map(w => s""","warning":${jsonStr(w)}""").getOrElse("")
+                  .map(w => s""","warning":${Json.str(w)}""").getOrElse("")
                 respond(ex, 200,
-                  s"""{"category":${jsonStr(category)},"needs":${
-                    needs.map(jsonStr).mkString("[", ",", "]")},"context":${
-                    jsonStr(QnaRouter.assemble(needs, renderedTop))}$warning}""")
+                  s"""{"category":${Json.str(category)},"needs":${
+                    needs.map(Json.str).mkString("[", ",", "]")},"context":${
+                    Json.str(QnaRouter.assemble(needs, renderedTop))}$warning}""")
             }
           case _ => respond(ex, 404, """{"error":"not found"}""")
         }
       } catch {
         case e: Exception => respond(ex, 500,
-          s"""{"error":${jsonStr(String.valueOf(e.getMessage))}}""")
+          s"""{"error":${Json.str(String.valueOf(e.getMessage))}}""")
       }
     })
     server.start()

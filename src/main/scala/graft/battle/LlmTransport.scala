@@ -1,33 +1,23 @@
 package graft.battle
 
+import graft.Json
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 /** Shared OpenAI-compatible chat-completions transport
   * (llm_client.py:39-49) behind [[LlmClassifier]] and [[LlmExpert]]:
   * JDK HttpURLConnection (no added dependencies, explicit timeouts),
-  * JSON string escaping, request-body assembly, and reply-content
+  * request-body assembly, and reply-content
   * extraction. Callers own their validation cascades — this layer only
   * moves bytes and lifts `choices[0].message.content`. */
 private[battle] object LlmTransport {
 
-  /** JSON string literal with full control-char escaping. */
-  def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** A chat-completions request body: system + user message pair with
     * the caller's token budget. */
   def requestBody(model: String, maxTokens: Int, system: String, user: String): String =
-    s"""{"model": ${jstr(model)}, "max_tokens": $maxTokens, "messages": [
-       |{"role": "system", "content": ${jstr(system)}},
-       |{"role": "user", "content": ${jstr(user)}}]}""".stripMargin
+    s"""{"model": ${Json.str(model)}, "max_tokens": $maxTokens, "messages": [
+       |{"role": "system", "content": ${Json.str(system)}},
+       |{"role": "user", "content": ${Json.str(user)}}]}""".stripMargin
 
   /** POST `body` to `{baseUrl}/v1/chat/completions`; returns the raw
     * reply body, throws on transport errors and non-200 statuses. */

@@ -7,7 +7,9 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Fused dot product over two double arrays as a native Catalyst
-  * expression with whole-stage codegen.
+  * expression with whole-stage codegen, registered as `graft_dot` by
+  * `graft.plans.GraftExtensions` (required in every session that runs
+  * catalog queries).
   *
   * The composable form — `aggregate(zip_with(a, b, (x,y) -> x*y), 0d,
   * (acc,x) -> acc+x)` — materializes an intermediate array and runs two
@@ -17,8 +19,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * generated code, stays inside WholeStageCodegen, and allocates
   * nothing.
   *
-  * Semantics are EXACTLY those of the HOF form (so the FuseDotProduct
-  * optimizer rule is a sound rewrite on every input): null input → null;
+  * Semantics are EXACTLY those of the HOF form (DotProductDSpec keeps
+  * it as the reference): null input → null;
   * mismatched lengths → null (zip_with pads with null, null
   * propagates through the fold); any null element → null; otherwise a
   * left-to-right fold in index order, so even the floating-point

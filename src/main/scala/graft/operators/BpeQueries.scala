@@ -726,30 +726,13 @@ object BpeQueries {
         "'" + p.replace("\\", "\\\\").replace("'", "\\'") + s"', CAST($c AS BIGINT)"
       }
       .mkString("map(", ", ", ")")
-    // candidate arm for a piece of length l ending at position i
-    def cand(l: Int): String =
-      s"""IF(i >= $l AND element_at($mapLit, substring(w, i - $l + 1, $l)) IS NOT NULL,
-         |  (element_at(dp, i - $l + 1) DIV 32
-         |   + element_at($mapLit, substring(w, i - $l + 1, $l))) * 32
-         |  + (element_at(dp, i - $l + 1) % 32 + 1),
-         |  CAST(NULL AS BIGINT))""".stripMargin
-    val arms = (1 to UniPieceLen).map(cand).mkString("least(", ",\n", ")")
     // NATIVE DP (round 15, guide §4): the `aggregate` HOF fold is a
     // CodegenFallback — every DP step interpreted, and each arm's two
     // element_at lookups LINEAR-scan the ~(cap+alphabet)-entry map
     // literal with UTF8String compares. graft_uni_viterbi replays the
     // identical integer DP (UniViterbiSpec pins fold == native on the
     // real vocab) as one hash-lookup loop inside the codegen span.
-    // Sessions without GraftExtensions keep the fold form.
-    val encExpr =
-      if (s.catalog.functionExists("graft_uni_viterbi"))
-        expr(s"graft_uni_viterbi(w, $mapLit, $UniPieceLen)")
-      else expr(
-        s"""aggregate(
-           |  sequence(1, length(w)),
-           |  array(CAST(0 AS BIGINT)),
-           |  (dp, i) -> concat(dp, array($arms)),
-           |  dp -> element_at(dp, size(dp)))""".stripMargin)
+    val encExpr = expr(s"graft_uni_viterbi(w, $mapLit, $UniPieceLen)")
     val dict = vocab(s, dir).filter(length(col("w")) <= UniWordLen)
       .withColumn("enc", encExpr)
       .select(col("w"), expr("enc % 32").as("n_uni"), expr("enc DIV 32").as("cost"))

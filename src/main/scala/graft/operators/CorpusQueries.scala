@@ -814,10 +814,10 @@ object CorpusQueries {
       .withColumn("sfac", (col("qmx") - col("qmn")) / lit(255.0))
       .withColumn("nq", size(col("v")).cast("double") * col("qmn") * col("qmn"))
       .withColumn("sa", expr("aggregate(q, CAST(0.0 AS DOUBLE), (a, x) -> a + x)"))
-      .withColumn("saa", VectorMath.dot(s, "q", "q"))
+      .withColumn("saa", VectorMath.dot("q", "q"))
       .withColumn("dn", sqrt(col("nq") + lit(2.0) * col("qmn") * col("sfac") * col("sa")
         + col("sfac") * col("sfac") * col("saa")))
-      .withColumn("nrm", VectorMath.norm(s, "v"))
+      .withColumn("nrm", VectorMath.norm("v"))
       .select(col("vec_id"), col("v"), col("nrm"), col("q"), col("sa"),
         col("dn"), col("qmn"), col("sfac"), col("nq"))
     // the panel quantizes its own PRUNED scan (the old shape persisted
@@ -845,12 +845,12 @@ object CorpusQueries {
       when(col("qdn") * col("dn") === lit(0.0), lit(0.0)).otherwise(
         (col("nq") + col("qmn") * col("sfac") * (col("qsa") + col("sa"))
           + col("sfac") * col("sfac") * col("sdot")) / (col("qdn") * col("dn")))
-    val simERaw = VectorMath.cosine(s, "qv", "v", col("qn"), col("nrm"))
+    val simERaw = VectorMath.cosine("qv", "v", col("qn"), col("nrm"))
     def pack(sim: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       (floor(sim * lit(1e6) + lit(0.5)).cast("long") + lit(MuShift)) * lit(1L << 35) +
         (lit(VMask) - col("vec_id"))
     val tops = quant.join(broadcast(qset), col("qid") =!= col("vec_id"))
-      .withColumn("sdot", VectorMath.dot(s, "qq", "q"))
+      .withColumn("sdot", VectorMath.dot("qq", "q"))
       .select(col("qid"), pack(simQRaw).as("pkq"), pack(simERaw).as("pke"))
       .groupBy(col("qid"))
       .agg(expr("graft_topk(pkq, 5)").as("qt"), expr("graft_topk(pke, 5)").as("et"))
@@ -1383,10 +1383,9 @@ object CorpusQueries {
     * mergeable (min is associative) so snapshots combine for free.
     *
     * Scale: the ONLY corpus-scale work is the distinct-gram pass q122
-    * already pays; the 64 digests ride one graft_md5_keyed call
-    * (single byte-conversion kernel, q25's move) and collapse via
-    * 64 parallel min-aggregates — map-side combined, ONE shuffle of
-    * 64 columns per source, S×64 rows of state afterwards. The pair
+    * already pays; the 64 minima ride one graft_minhash_hex
+    * aggregate ([[srcMinhashSigs]]) — map-side combined, ONE shuffle
+    * of 64 slots per source, S×64 rows of state afterwards. The pair
     * compare is an (h, digest) equi-join on that S×64 frame (never
     * vocab-scale), zero-filled from the S×S domain (q12). Estimates
     * are exact integers: match count + 10⁶·matches div 64. */
@@ -1404,26 +1403,12 @@ object CorpusQueries {
     * — allocated its way to 180–245 s of cold first-touch at the 100×
     * replica, and the digest arithmetic itself is a small fraction of
     * that. Values are pinned byte-identical to the builtin chain (and
-    * the oracle's min(md5(h || ':' || g))) by MinHashHexSpec; sessions
-    * without GraftExtensions keep the builtin fallback. */
+    * the oracle's min(md5(h || ':' || g))) by MinHashHexSpec. */
   private def srcMinhashSigs(s: SparkSession, dir: String): DataFrame =
     Artifacts.frame(s, dir, "src_minhash_sigs") {
-      val sg = srcGrams8(s, dir)
-      if (s.catalog.functionExists("graft_minhash_hex"))
-        sg.groupBy(col("source"))
-          .agg(expr(s"graft_minhash_hex(g, $SrcHashes)").as("mhx"))
-          .select(col("source"), posexplode(col("mhx")).as(Seq("h", "m")))
-      else {
-        val hashed = sg.withColumn("hx", array((0 until SrcHashes).map(h =>
-          md5(concat(lit(h.toString), lit(":"), col("g")))): _*))
-        val wide = hashed.groupBy(col("source")).agg(
-          min(element_at(col("hx"), 1)).as("mh0"),
-          (1 until SrcHashes).map(h =>
-            min(element_at(col("hx"), h + 1)).as(s"mh$h")): _*)
-        wide.select(col("source"), explode(array((0 until SrcHashes).map(h =>
-            struct(lit(h).as("h"), col(s"mh$h").as("m"))): _*)).as("p"))
-          .select(col("source"), col("p.h").as("h"), col("p.m").as("m"))
-      }
+      srcGrams8(s, dir).groupBy(col("source"))
+        .agg(expr(s"graft_minhash_hex(g, $SrcHashes)").as("mhx"))
+        .select(col("source"), posexplode(col("mhx")).as(Seq("h", "m")))
     }
 
   private def q135(s: SparkSession, dir: String): DataFrame = {

@@ -81,31 +81,6 @@ object DedupQueries {
     * shingle → 16 minhashes (min of md5(h:shingle)) → 8 band signatures
     * → bucket self-join → candidate pairs → exact-Jaccard filter ≥ 0.5.
     * Lexicographic min over md5 hex == a valid random permutation min. */
-  /** MinHash band signatures of a (doc_id, s) shingle frame:
-    * (doc_id, n, band, bh) — n is the doc's shingle-set size
-    * (piggybacked on the minhash aggregate so no separate sizes pass),
-    * bh the md5 band signature. 16 minhashes as 16 parallel
-    * min-aggregates over the (doc, shingle) rows — no row explosion,
-    * map-side partial agg, ONE shuffle of 16 columns per doc (vs
-    * exploding 16× and shuffling every hash row). The native
-    * graft_md5_keyed kernel computes all 16 digests with one byte
-    * conversion (values byte-identical to md5(concat(h,':',s)) —
-    * Md5KeyedSpec pins it); sessions without GraftExtensions fall back
-    * to the builtin chain. Band signature = md5 of "hh:minhash" pairs
-    * joined in h order — byte-identical to the oracle's
-    * string_agg(... ORDER BY h). Shared by q25 (candidate generation)
-    * and q103 (the recall harness), so the two cannot drift. */
-  /** Shingles + the 16 keyed digests (one `hx` array column) — the
-    * shared front of [[bandsOf]] and q175's long-format minhashes. */
-  private def hashedShingles(sh: DataFrame): DataFrame = {
-    val s = sh.sparkSession
-    if (s.catalog.functionExists("graft_md5_keyed"))
-      sh.withColumn("hx", expr(s"graft_md5_keyed(s, $NumHashes)"))
-    else
-      sh.withColumn("hx", array((0 until NumHashes).map(h =>
-        md5(concat(lit(h.toString), lit(":"), col("s")))): _*))
-  }
-
   /** Per-doc 16-component minhash vector (WIDE) + shingle count — the
     * one shingle-scale aggregate both the band signatures and q175's
     * estimates derive from.
@@ -119,22 +94,13 @@ object DedupQueries {
     * into a fixed 16×16-byte raw buffer, hex emitted once per DOC
     * (MinHashHexSpec pins slot h == min(element_at(graft_md5_keyed))).
     * Doc-scale groups need the object-agg fallback threshold raised
-    * (the q157 rule) — [[minhashWide]] scopes it around the build.
-    * Sessions without GraftExtensions keep the composed chain. */
-  private def wideMinhashOf(sh: DataFrame): DataFrame = {
-    val s = sh.sparkSession
-    if (s.catalog.functionExists("graft_minhash_hex")) {
-      sh.groupBy(col("doc_id")).agg(
-        count(lit(1)).as("n"),
-        expr(s"graft_minhash_hex(s, $NumHashes)").as("mhs"))
-        .select(col("doc_id") +: col("n") +: (0 until NumHashes).map(h =>
-          element_at(col("mhs"), h + 1).as(s"mh$h")): _*)
-    } else
-      hashedShingles(sh).groupBy(col("doc_id")).agg(
-        count(lit(1)).as("n"),
-        (0 until NumHashes).map(h =>
-          min(element_at(col("hx"), h + 1)).as(s"mh$h")): _*)
-  }
+    * (the q157 rule) — [[minhashWide]] scopes it around the build. */
+  private def wideMinhashOf(sh: DataFrame): DataFrame =
+    sh.groupBy(col("doc_id")).agg(
+      count(lit(1)).as("n"),
+      expr(s"graft_minhash_hex(s, $NumHashes)").as("mhs"))
+      .select(col("doc_id") +: col("n") +: (0 until NumHashes).map(h =>
+        element_at(col("mhs"), h + 1).as(s"mh$h")): _*)
 
   private def bandsFrom(mh: DataFrame): DataFrame = {
     val bandStructs = (0 until NumHashes / RowsPerBand).map { b =>
@@ -149,6 +115,17 @@ object DedupQueries {
       .select(col("doc_id"), col("n"), col("p.band").as("band"), col("p.bh").as("bh"))
   }
 
+  /** MinHash band signatures of a (doc_id, s) shingle frame:
+    * (doc_id, n, band, bh) — n is the doc's shingle-set size
+    * (piggybacked on the minhash aggregate so no separate sizes pass),
+    * bh the md5 band signature. 16 minhashes as 16 parallel
+    * min-aggregates over the (doc, shingle) rows — no row explosion,
+    * map-side partial agg, ONE shuffle of 16 columns per doc (vs
+    * exploding 16× and shuffling every hash row). Band signature = md5
+    * of "hh:minhash" pairs joined in h order — byte-identical to the
+    * oracle's string_agg(... ORDER BY h). Shared by q25 (candidate
+    * generation) and q103 (the recall harness), so the two cannot
+    * drift. */
   private def bandsOf(sh: DataFrame): DataFrame = bandsFrom(wideMinhashOf(sh))
 
   /** The wide minhash table as a STANDING ARTIFACT: at corpus scale
@@ -162,20 +139,10 @@ object DedupQueries {
     // scoped threshold covers exactly the doc-group object aggregate
     // (session-wide it would weaken every other object agg's
     // memory-safety fallback — the q157 QuerySpec.confs rationale)
-    withScopedConf(s, "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      (1 << 20).toString) {
+    QuerySpec.scoped(s,
+      Map("spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> (1 << 20).toString)) {
       Artifacts.frame(s, dir, "minhash_wide")(wideMinhashOf(shingles(s, dir)))
     }
-
-  private def withScopedConf[T](s: SparkSession, k: String, v: String)(body: => T): T = {
-    val prior = s.conf.getOption(k)
-    s.conf.set(k, v)
-    try body
-    finally prior match {
-      case Some(p) => s.conf.set(k, p)
-      case None => s.conf.unset(k)
-    }
-  }
 
   /** The band-collision pair kernel stays the plain (band, bh)
     * equi-self-join — an ATTEMPTED round-15 replacement is on record:

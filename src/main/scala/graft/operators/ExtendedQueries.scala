@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QuerySpec, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -156,9 +156,6 @@ object ExtendedQueries {
   private[operators] val NdPlanes = 12
   private val NdSeed = 1000
 
-  private def ndPlane(t: Int, i: Int): IndexedSeq[Double] =
-    (0 until 64).map(d => SimilarityQueries.planeComponent(NdSeed + t * NdPlanes + i, d))
-
   /** LSH-prefiltered near-dup top-k over any (vec_id, embedding) frame.
     * Factored out so NearDupRecallSpec can run it on planted-duplicate
     * inputs. */
@@ -173,26 +170,12 @@ object ExtendedQueries {
     // partition — an explicit count pins the parallelism.
     val base = emb
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", VectorMath.norm(s, "v"))
+      .withColumn("nrm", VectorMath.norm("v"))
       .repartition(nShuffle, col("vec_id"))
-    // All 16 table codes in one pass: the native LshSignCodes kernel when
-    // GraftExtensions is installed (a flat double[] plane matrix, one
-    // tight codegen loop), else the composable when(dot > 0) form —
-    // identical codes on well-formed vectors (LshSignCodesSpec).
-    val codesCol: Column =
-      if (s.catalog.functionExists("graft_lsh_codes"))
-        expr(s"graft_lsh_codes(v, $NdSeed, $NdTables, $NdPlanes, 64)")
-      else {
-        def dotPlane(t: Int, i: Int): Column = {
-          val arr = ndPlane(t, i).map(x => if (x > 0) "1.0D" else "-1.0D")
-            .mkString("array(", ",", ")")
-          VectorMath.dot(s, "v", arr)
-        }
-        def code(t: Int): Column = (0 until NdPlanes)
-          .map(i => when(dotPlane(t, i) > 0, lit(1 << i)).otherwise(lit(0)))
-          .reduce(_ + _)
-        array((0 until NdTables).map(code): _*)
-      }
+    // All 16 table codes in one pass: the native LshSignCodes kernel (a
+    // flat double[] plane matrix, one tight codegen loop; LshSignCodesSpec
+    // pins it equal to the composed when(dot > 0) form).
+    val codesCol = expr(s"graft_lsh_codes(v, $NdSeed, $NdTables, $NdPlanes, 64)")
     // The repartition between the codes Project and the posexplode is a
     // deliberate optimizer barrier: collapsed into the Generate, the
     // signature computation leaves whole-stage codegen and runs
@@ -212,7 +195,7 @@ object ExtendedQueries {
     val va = base.select(col("vec_id").as("vec_a"), col("v").as("va"), col("nrm").as("na"))
     val vb = base.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("nrm").as("nb"))
     cands.join(va, Seq("vec_a")).join(vb, Seq("vec_b"))
-      .withColumn("sim", Det.rate(VectorMath.cosine(s, "va", "vb", col("na"), col("nb"))))
+      .withColumn("sim", Det.rate(VectorMath.cosine("va", "vb", col("na"), col("nb"))))
       .filter(col("sim") >= 0.3)
       .orderBy(col("sim").desc, col("vec_a"), col("vec_b"))
       .limit(k)

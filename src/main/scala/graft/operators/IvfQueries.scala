@@ -43,7 +43,7 @@ object IvfQueries {
   private def normed(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", VectorMath.norm(s, "v"))
+      .withColumn("nrm", VectorMath.norm("v"))
 
   /** argmax-cosine cell assignment against a broadcast centroid table
     * (cell, cv, cnrm). The similarity is rounded to 1e-6 BEFORE the
@@ -51,7 +51,7 @@ object IvfQueries {
     * can never flip an assignment between engines/runs. */
   private def assign(s: SparkSession, vectors: DataFrame, centroids: DataFrame): DataFrame =
     vectors.crossJoin(broadcast(centroids))
-      .withColumn("sim", Det.rate(VectorMath.cosine(s, "v", "cv", col("nrm"), col("cnrm"))))
+      .withColumn("sim", Det.rate(VectorMath.cosine("v", "cv", col("nrm"), col("cnrm"))))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cell"))))
       .filter(col("rk") === 1)
@@ -147,7 +147,7 @@ object IvfQueries {
       // an eager materialize-count + unpersist per iteration was
       // measured as 2 extra jobs (~0.3 s) for kilobytes of cache
       centroids = updated
-        .withColumn("cnrm", VectorMath.norm(s, "cv"))
+        .withColumn("cnrm", VectorMath.norm("cv"))
         .persist()
     }
     // vectors stay cached for the final assign (the caller's first
@@ -161,7 +161,7 @@ object IvfQueries {
     // other-cell similarity is exactly the second-ranked row; on ties
     // both equal the tied value, same as max-over-others).
     val scored = vectors.crossJoin(broadcast(centroids))
-      .withColumn("sim", Det.rate(VectorMath.cosine(s, "v", "cv", col("nrm"), col("cnrm"))))
+      .withColumn("sim", Det.rate(VectorMath.cosine("v", "cv", col("nrm"), col("cnrm"))))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cell"))))
       .filter(col("rk") <= 2)
@@ -239,7 +239,7 @@ object IvfQueries {
       nprobe: Int = NProbe, topK: Int = TopK): DataFrame = {
     val centroids = s.read.parquet(s"$indexPath/centroids")
     val probes = queries.crossJoin(broadcast(centroids))
-      .withColumn("csim", Det.rate(VectorMath.cosine(s, "qv", "cv", col("qn"), col("cnrm"))))
+      .withColumn("csim", Det.rate(VectorMath.cosine("qv", "cv", col("qn"), col("cnrm"))))
       .withColumn("prk", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("csim").desc, col("cell"))))
       .filter(col("prk") <= nprobe)
@@ -251,7 +251,7 @@ object IvfQueries {
       .select(col("vec_id").as("cid"), col("v").as("cv2"), col("nrm").as("cn"), col("cell"))
     probes.join(vectors, Seq("cell"))
       .filter(col("qid") =!= col("cid"))
-      .withColumn("sim", Det.rate(VectorMath.cosine(s, "qv", "cv2", col("qn"), col("cn"))))
+      .withColumn("sim", Det.rate(VectorMath.cosine("qv", "cv2", col("qn"), col("cn"))))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))).cast("long"))
       .filter(col("rn") <= topK)
@@ -271,7 +271,7 @@ object IvfQueries {
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     // probe the nprobe nearest cells per query
     val probes = queries.crossJoin(broadcast(centroids))
-      .withColumn("csim", Det.rate(VectorMath.cosine(s, "qv", "cv", col("qn"), col("cnrm"))))
+      .withColumn("csim", Det.rate(VectorMath.cosine("qv", "cv", col("qn"), col("cnrm"))))
       .withColumn("prk", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("csim").desc, col("cell"))))
       .filter(col("prk") <= NProbe)
@@ -281,7 +281,7 @@ object IvfQueries {
         assigned.select(col("vec_id").as("cid"), col("v").as("cv2"), col("nrm").as("cn"), col("cell")),
         Seq("cell"))
       .filter(col("qid") =!= col("cid"))
-      .withColumn("sim", Det.rate(VectorMath.cosine(s, "qv", "cv2", col("qn"), col("cn"))))
+      .withColumn("sim", Det.rate(VectorMath.cosine("qv", "cv2", col("qn"), col("cn"))))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))).cast("long"))
       .filter(col("rn") <= TopK)

@@ -67,13 +67,13 @@ object MultimodalQueries {
 
   private def q52(s: SparkSession, dir: String): DataFrame = {
     val feats = mediaFeatures(s, dir)
-      .withColumn("nrm", VectorMath.norm(s, "v"))
+      .withColumn("nrm", VectorMath.norm("v"))
     val q = feats.filter(col("vec_id") % 100 === 0)
       .orderBy(col("vec_id")).limit(SimilarityQueries.EvalPanelCap)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     val c = feats.select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
     c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("sim", Det.rate(VectorMath.cosine(s, "qv", "cv", col("qn"), col("cn"))))
+      .withColumn("sim", Det.rate(VectorMath.cosine("qv", "cv", col("qn"), col("cn"))))
       .withColumn("rn", row_number()
         .over(Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid")))
         .cast("long"))

@@ -56,12 +56,9 @@ object ProfilingQueries {
     // graft_lev with a bound runs a banded (Ukkonen) byte DP — only the
     // 2k+1 diagonal (33² → 33·17 cells) with whole-row early exit,
     // returning k+1 past the bound, which the `dist <= 8` filter treats
-    // exactly like the unbounded distance. Sessions without
-    // GraftExtensions fall back to the builtin's thresholded DP (-1 →
-    // out-of-bound); identical kept rows (LevenshteinDSpec pins it).
-    val dist =
-      if (s.catalog.functionExists("graft_lev")) expr("graft_lev(name_a, name_b, 8)")
-      else nullif(levenshtein(col("name_a"), col("name_b"), 8), lit(-1))
+    // exactly like the unbounded distance (LevenshteinDSpec pins the
+    // kept rows equal to the builtin's thresholded DP).
+    val dist = expr("graft_lev(name_a, name_b, 8)")
     a.join(broadcast(b), col("p_brand") === col("brand_b") && col("pfx") === col("pfx_b")
         && col("pk_a") < col("pk_b")
         // free triangle-inequality prune: |len(a)−len(b)| > 8 ⇒ dist > 8

@@ -73,13 +73,13 @@ object RetrievalQueries {
     // ---- dense list: cosine to the query doc's embedding, top-K ----
     val base = Tables.embeddings(s, dir)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", VectorMath.norm(s, "v"))
+      .withColumn("nrm", VectorMath.norm("v"))
     val qv = base.filter(col("vec_id") === 0L)
       .select(col("v").as("qv"), col("nrm").as("qn"))
     val denseTop = base.filter(col("vec_id") =!= 0L)
       .crossJoin(broadcast(qv))
       .select(col("vec_id").as("doc_id"),
-        Det.rate(VectorMath.cosine(s, "v", "qv", col("nrm"), col("qn"))).as("dense_score"))
+        Det.rate(VectorMath.cosine("v", "qv", col("nrm"), col("qn"))).as("dense_score"))
       .orderBy(col("dense_score").desc, col("doc_id"))
       .limit(TopK)
     // ---- fuse: rank within each ≤K-row list, RRF-sum ----

@@ -41,7 +41,7 @@ object SimilarityQueries {
   private def normed(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", VectorMath.norm(s, "v"))
+      .withColumn("nrm", VectorMath.norm("v"))
 
   // ---------------------------------------------------------------- q28
   private def q28(s: SparkSession, dir: String): DataFrame = {
@@ -51,7 +51,7 @@ object SimilarityQueries {
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     val c = base.select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
     c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("sim", Det.rate(VectorMath.cosine(s, "qv", "cv", col("qn"), col("cn"))))
+      .withColumn("sim", Det.rate(VectorMath.cosine("qv", "cv", col("qn"), col("cn"))))
       .withColumn("rn", row_number()
         .over(Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid")))
         .cast("long"))
@@ -95,11 +95,10 @@ object SimilarityQueries {
     val base = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label").cast("long").as("label"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", VectorMath.norm(s, "v"))
+      .withColumn("nrm", VectorMath.norm("v"))
     val bucket = (0 until 8).map { j =>
       val plane = typedLit((0 until 64).map(d => planeComponent(j, d)))
-      val dotJ = expr(s"aggregate(zip_with(v, p$j, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
-      (plane.as(s"p$j"), when(dotJ > 0, lit(1 << j)).otherwise(lit(0)))
+      (plane.as(s"p$j"), when(VectorMath.dot("v", s"p$j") > 0, lit(1 << j)).otherwise(lit(0)))
     }
     base.select(Seq(col("vec_id"), col("label"), col("v"), col("nrm")) ++ bucket.map(_._1): _*)
       .withColumn("bucket", bucket.map(_._2).reduce(_ + _))
@@ -116,7 +115,7 @@ object SimilarityQueries {
     // equi-join on bucket — the ANN win: hash shuffle, not a cross join
     q.join(c, Seq("bucket"))
       .filter(col("qid") =!= col("cid"))
-      .withColumn("sim", Det.rate(VectorMath.cosine(s, "qv", "cv", col("qn"), col("cn"))))
+      .withColumn("sim", Det.rate(VectorMath.cosine("qv", "cv", col("qn"), col("cn"))))
       .withColumn("rn", row_number()
         .over(Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid")))
         .cast("long"))
@@ -178,7 +177,7 @@ object SimilarityQueries {
     val base = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label").cast("long").as("label"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", VectorMath.norm(s, "v"))
+      .withColumn("nrm", VectorMath.norm("v"))
     val q = base.filter(col("vec_id") % 50 === 0)
       .orderBy(col("vec_id")).limit(EvalPanelCap)
       .select(col("vec_id").as("qid"), col("label").as("true_label"),
@@ -186,7 +185,7 @@ object SimilarityQueries {
     val c = base.select(col("vec_id").as("cid"), col("label").as("nbr_label"),
       col("v").as("cv"), col("nrm").as("cn"))
     val nbrs = c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("sim", Det.rate(VectorMath.cosine(s, "qv", "cv", col("qn"), col("cn"))))
+      .withColumn("sim", Det.rate(VectorMath.cosine("qv", "cv", col("qn"), col("cn"))))
       .withColumn("rn", row_number()
         .over(Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))))
       .filter(col("rn") <= VoteK)
@@ -268,7 +267,7 @@ object SimilarityQueries {
       col("v").as("cv"), col("nrm").as("cn"), col("bucket"))
     q.join(c, Seq("bucket"))
       .filter(col("qid") =!= col("neg_id") && col("q_label") =!= col("neg_label"))
-      .withColumn("sim", Det.rate(VectorMath.cosine(s, "qv", "cv", col("qn"), col("cn"))))
+      .withColumn("sim", Det.rate(VectorMath.cosine("qv", "cv", col("qn"), col("cn"))))
       .filter(col("sim") < NegDupTau)
       .withColumn("rn", row_number()
         .over(Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("neg_id")))
@@ -421,7 +420,7 @@ object SimilarityQueries {
     val base = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label").cast("long").as("label"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", VectorMath.norm(s, "v"))
+      .withColumn("nrm", VectorMath.norm("v"))
     val labCnt = base.groupBy(col("label")).agg(count(lit(1)).as("n_lab"))
     val q = base.filter(col("vec_id") % 50 === 0)
       .orderBy(col("vec_id")).limit(EvalPanelCap)
@@ -431,7 +430,7 @@ object SimilarityQueries {
       .select(col("vec_id").as("cid"), col("label").as("nbr_label"),
         col("v").as("cv"), col("nrm").as("cn"))
       .join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("sim", Det.rate(VectorMath.cosine(s, "qv", "cv", col("qn"), col("cn"))))
+      .withColumn("sim", Det.rate(VectorMath.cosine("qv", "cv", col("qn"), col("cn"))))
       .withColumn("rn", row_number()
         .over(Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid")))
         .cast("long"))
@@ -537,7 +536,7 @@ object SimilarityQueries {
     val base = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label").cast("long").as("label"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", VectorMath.norm(s, "v"))
+      .withColumn("nrm", VectorMath.norm("v"))
       .filter(col("nrm") > 0)
     val codes = base
       .select(col("label"), posexplode(

@@ -1,21 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector math over array<double> columns. Uses the native codegen'd
-  * `graft_dot` expression (graft.functions.DotProductD) when the
-  * session has GraftExtensions installed, else the composable
-  * higher-order-function form — numerically identical (both fold
-  * left-to-right in index order). */
+/** Vector math over array<double> columns, on the native codegen'd
+  * `graft_dot` expression (graft.functions.DotProductD). The session
+  * must have `graft.plans.GraftExtensions` installed. */
 object VectorMath {
 
-  def dot(s: SparkSession, a: String, b: String): Column =
-    if (s.catalog.functionExists("graft_dot")) expr(s"graft_dot($a, $b)")
-    else expr(
-      s"aggregate(zip_with($a, $b, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
+  def dot(a: String, b: String): Column = expr(s"graft_dot($a, $b)")
 
-  def norm(s: SparkSession, v: String): Column = sqrt(dot(s, v, v))
+  def norm(v: String): Column = sqrt(dot(v, v))
 
   /** Cosine similarity with the zero-norm contract: when either side
     * has zero norm (an all-zero embedding in the corpus, or a derived
@@ -25,8 +20,8 @@ object VectorMath {
     * ordering, where a NULL would sort FIRST) instead of Spark's ANSI
     * DIVIDE_BY_ZERO error / DuckDB's IEEE NaN. Surfaced by the 100×
     * replica sweep's degenerate-denominator audit. */
-  def cosine(s: SparkSession, a: String, b: String, na: Column, nb: Column): Column =
-    when(na * nb === lit(0.0), lit(0.0)).otherwise(dot(s, a, b) / (na * nb))
+  def cosine(a: String, b: String, na: Column, nb: Column): Column =
+    when(na * nb === lit(0.0), lit(0.0)).otherwise(dot(a, b) / (na * nb))
 
   /** Oracle-side (DuckDB) twin of [[cosine]] — same zero-norm contract,
     * same expression shape, for the hand-written oracle texts. */

@@ -1,12 +1,17 @@
 package graft.plans
 
 import graft.functions.{AdjPairs, CellDupStats, CellKnnPairs, CellTopPairs, DotProductD, GramJoin, GramMd5, GramStructs, LevenshteinD, LnSmall, Log2Q20, LshSignCodes, Md5Keyed, MinHashHex, OuterMoments, RpMoments, SimHashAgg, SkipPairs, TopKLongs, UniViterbi}
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.MapData
+import org.apache.spark.sql.types.Decimal
 
 /** Engine extension point (SparkSessionExtensions): registers graft's
-  * native expressions as SQL functions. Install with
+  * native expressions as SQL functions. Required: every query that uses
+  * a kernel calls its `graft_*` function with no fallback, so a session
+  * without the extension fails those queries at analysis with
+  * UNRESOLVED_ROUTINE. Install with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
   * (done by Verify/Bench/tests) or `withExtensions(new GraftExtensions)`.
   */
@@ -19,29 +24,38 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     * Unevaluable/ClassCast error mid-analysis; surface the standard
     * NON_FOLDABLE_INPUT / UNEXPECTED_INPUT_TYPE analysis errors naming
     * the function and argument instead. */
-  private def intLit(fn: String, argName: String, e: Expression): Int = {
+  private def intLit(fn: String, argName: String, e: Expression): Int =
+    literal(fn, argName, "INT", e) { case n: Number => n.intValue }
+
+  /** [[intLit]] for a DOUBLE argument (a similarity threshold `tau`);
+    * accepts any numeric literal, decimals included. */
+  private def doubleLit(fn: String, argName: String, e: Expression): Double =
+    literal(fn, argName, "DOUBLE", e) {
+      case n: Number => n.doubleValue
+      case d: Decimal => d.toDouble
+    }
+
+  private def literal[T](fn: String, argName: String, sqlType: String, e: Expression)(
+      value: PartialFunction[Any, T]): T = {
     if (!e.foldable)
-      throw new org.apache.spark.sql.AnalysisException(
+      throw new AnalysisException(
         errorClass = "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT",
         messageParameters = Map(
           "sqlExpr" -> s""""$fn"""",
           "inputName" -> s"`$argName`",
-          "inputType" -> "\"INT\"",
+          "inputType" -> s""""$sqlType"""",
           "inputExpr" -> s""""${e.sql}""""),
         cause = None)
-    e.eval() match {
-      case n: Number => n.intValue
-      case _ =>
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
-          messageParameters = Map(
-            "sqlExpr" -> s""""$fn"""",
-            "paramIndex" -> s"`$argName`",
-            "requiredType" -> "\"INT\"",
-            "inputSql" -> s""""${e.sql}"""",
-            "inputType" -> s""""${e.dataType.catalogString}""""),
-          cause = None)
-    }
+    value.applyOrElse(e.eval(), (_: Any) =>
+      throw new AnalysisException(
+        errorClass = "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
+        messageParameters = Map(
+          "sqlExpr" -> s""""$fn"""",
+          "paramIndex" -> s"`$argName`",
+          "requiredType" -> s""""$sqlType"""",
+          "inputSql" -> s""""${e.sql}"""",
+          "inputType" -> s""""${e.dataType.catalogString}""""),
+        cause = None))
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -147,68 +161,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((
       FunctionIdentifier("graft_cell_dups"),
       new ExpressionInfo(classOf[CellDupStats].getName, "graft_cell_dups"),
-      (children: Seq[Expression]) => {
-        // tau must be a foldable numeric literal (the SemDeDup
-        // threshold baked into the expression at plan time)
-        val t = children(3)
-        if (!t.foldable)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT",
-            messageParameters = Map(
-              "sqlExpr" -> "\"graft_cell_dups\"",
-              "inputName" -> "`tau`",
-              "inputType" -> "\"DOUBLE\"",
-              "inputExpr" -> s""""${t.sql}""""),
-            cause = None)
-        val tau = t.eval() match {
-          case n: Number => n.doubleValue
-          case d: org.apache.spark.sql.types.Decimal => d.toDouble
-          case other => throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
-            messageParameters = Map(
-              "sqlExpr" -> "\"graft_cell_dups\"",
-              "paramIndex" -> "`tau`",
-              "requiredType" -> "\"DOUBLE\"",
-              "inputSql" -> s""""${t.sql}"""",
-              "inputType" -> s""""${t.dataType.catalogString}""""),
-            cause = None)
-        }
-        CellDupStats(children(0), children(1), children(2), tau)
-          .toAggregateExpression()
-      }))
+      (children: Seq[Expression]) =>
+        // tau: the SemDeDup threshold baked into the expression at plan time
+        CellDupStats(children(0), children(1), children(2),
+          doubleLit("graft_cell_dups", "tau", children(3)))
+          .toAggregateExpression()))
     ext.injectFunction((
       FunctionIdentifier("graft_cell_top_pairs"),
       new ExpressionInfo(classOf[CellTopPairs].getName, "graft_cell_top_pairs"),
-      (children: Seq[Expression]) => {
-        // tau: foldable numeric literal (the similarity floor baked
-        // into the expression at plan time — the cell_dups contract)
-        val t = children(3)
-        if (!t.foldable)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT",
-            messageParameters = Map(
-              "sqlExpr" -> "\"graft_cell_top_pairs\"",
-              "inputName" -> "`tau`",
-              "inputType" -> "\"DOUBLE\"",
-              "inputExpr" -> s""""${t.sql}""""),
-            cause = None)
-        val tau = t.eval() match {
-          case n: Number => n.doubleValue
-          case d: org.apache.spark.sql.types.Decimal => d.toDouble
-          case other => throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE",
-            messageParameters = Map(
-              "sqlExpr" -> "\"graft_cell_top_pairs\"",
-              "paramIndex" -> "`tau`",
-              "requiredType" -> "\"DOUBLE\"",
-              "inputSql" -> s""""${t.sql}"""",
-              "inputType" -> s""""${t.dataType.catalogString}""""),
-            cause = None)
-        }
-        CellTopPairs(children(0), children(1), children(2), tau,
+      (children: Seq[Expression]) =>
+        // tau: the similarity floor baked into the expression at plan time
+        CellTopPairs(children(0), children(1), children(2),
+          doubleLit("graft_cell_top_pairs", "tau", children(3)),
           intLit("graft_cell_top_pairs", "k", children(4)))
-          .toAggregateExpression()
-      }))
+          .toAggregateExpression()))
     ext.injectFunction((
       FunctionIdentifier("graft_uni_viterbi"),
       new ExpressionInfo(classOf[UniViterbi].getName, "graft_uni_viterbi"),
@@ -216,17 +182,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         // (w, map(piece, cost, ...), maxPieceLen) — the map must be a
         // foldable literal (the trained piece-cost table); it is
         // evaluated here, once, into plain driver data
-        val tbl = children(1)
-        if (!tbl.foldable)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT",
-            messageParameters = Map(
-              "sqlExpr" -> "\"graft_uni_viterbi\"",
-              "inputName" -> "`costTable`",
-              "inputType" -> "\"MAP<STRING, BIGINT>\"",
-              "inputExpr" -> s""""${tbl.sql}""""),
-            cause = None)
-        val md = tbl.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.MapData]
+        val md = literal("graft_uni_viterbi", "costTable", "MAP<STRING, BIGINT>",
+          children(1)) { case m: MapData => m }
         val keys = md.keyArray()
         val vals = md.valueArray()
         val pairs = (0 until md.numElements()).map(i =>
@@ -234,6 +191,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         UniViterbi(children(0), pairs,
           intLit("graft_uni_viterbi", "maxPieceLen", children(2)))
       }))
-    ext.injectOptimizerRule(_ => new FuseDotProduct)
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Json
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** Chart sink (plots.py:21-141, meta_workflow.py:94-184): the reference
@@ -28,12 +29,12 @@ object ChartSpec {
     val cols = df.limit(0).columns
     s"""{
        |  "$$schema": "https://vega.github.io/schema/vega-lite/v5.json",
-       |  "title": ${jsonStr(title)},
+       |  "title": ${Json.str(title)},
        |  "data": {"values": ${values(rows, cols)}},
        |  "mark": {"type": "arc"},
        |  "encoding": {
-       |    "theta": {"field": ${jsonStr(valueField)}, "type": "quantitative"},
-       |    "color": {"field": ${jsonStr(categoryField)}, "type": "nominal"}
+       |    "theta": {"field": ${Json.str(valueField)}, "type": "quantitative"},
+       |    "color": {"field": ${Json.str(categoryField)}, "type": "nominal"}
        |  }
        |}""".stripMargin
   }
@@ -51,12 +52,12 @@ object ChartSpec {
     val cols = df.limit(0).columns
     s"""{
        |  "$$schema": "https://vega.github.io/schema/vega-lite/v5.json",
-       |  "title": ${jsonStr(title)},
+       |  "title": ${Json.str(title)},
        |  "data": {"values": ${values(rows, cols)}},
-       |  "mark": {"type": ${jsonStr(mark)}},
+       |  "mark": {"type": ${Json.str(mark)}},
        |  "encoding": {
-       |    "x": {"field": ${jsonStr(xField)}, "type": ${jsonStr(xType)}, "sort": null, "axis": {"labelAngle": -45}},
-       |    "y": {"field": ${jsonStr(yField)}, "type": ${jsonStr(yType)}}
+       |    "x": {"field": ${Json.str(xField)}, "type": ${Json.str(xType)}, "sort": null, "axis": {"labelAngle": -45}},
+       |    "y": {"field": ${Json.str(yField)}, "type": ${Json.str(yType)}}
        |  }
        |}""".stripMargin
   }
@@ -67,27 +68,17 @@ object ChartSpec {
   private def values(rows: Array[Row], cols: Array[String]): String =
     rows.map { r =>
       cols.zipWithIndex.map { case (c, i) =>
-        s"${jsonStr(c)}: ${jsonVal(r.get(i))}"
+        s"${Json.str(c)}: ${jsonVal(r.get(i))}"
       }.mkString("{", ", ", "}")
     }.mkString("[", ", ", "]")
 
   private def jsonVal(v: Any): String = v match {
     case null => "null"
-    case s: String => jsonStr(s)
+    case s: String => Json.str(s)
     case b: Boolean => b.toString
     case d: Double => if (d == d.floor && !d.isInfinite && math.abs(d) < 1e15) f"$d%.1f" else d.toString
     case f: Float => jsonVal(f.toDouble)
     case n: Number => n.toString
-    case other => jsonStr(other.toString)
+    case other => Json.str(other.toString)
   }
-
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

@@ -68,6 +68,22 @@ class AnalyticsServerSpec extends SparkSpec {
     }
   }
 
+  test("construction renders each table once: one Spark job per table") {
+    // single-partition frames, so rendering one table is exactly one job
+    val tables = Seq("user_summary", "user_deck_summary", "card_performance")
+      .map(_ -> spark.range(0, 200, 1, 1).toDF("id")).toMap
+    val (srv, jobs) = jobsStartedBy(new AnalyticsServer(tables, gamesPlayed = 40))
+    assert(jobs === tables.size)
+    val base = s"http://127.0.0.1:${srv.start()}"
+    try {
+      val (_, rows) = get(base, "/table/card_performance")
+      assert(rows.count(_ == '{') === 100, "/table serves the first maxRows rows")
+      val (_, qna) = get(base, "/qna?q=best%20card")
+      val expect = QnaRouter.buildContext(Seq("card_performance"), tables)
+      assert(qna.contains("\"context\":" + graft.Json.str(expect)), qna)
+    } finally srv.stop()
+  }
+
   test("served rows equal the engine's own JSON rendering (no drift)") {
     withServer(games = 40) { base =>
       val classified = BattleFixtures.classifiedBattles(spark, 40)

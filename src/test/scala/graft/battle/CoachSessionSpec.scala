@@ -1,9 +1,7 @@
 package graft.battle
 
 import graft.{SparkEntry, SparkSpec}
-import java.util.concurrent.{Callable, ConcurrentLinkedQueue, Executors}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import scala.jdk.CollectionConverters._
+import java.util.concurrent.{Callable, Executors}
 
 class CoachSessionSpec extends SparkSpec {
 
@@ -12,33 +10,6 @@ class CoachSessionSpec extends SparkSpec {
     BattleFixtures.cardMetaDf(spark),
     () => Iterator.continually(BattleFixtures.classifiedBattles(spark, 30)).take(10),
     minTotal = 100L, minPerType = 20L)
-
-  /** `body`'s result and the number of Spark jobs it started. Jobs are
-    * told apart by job group; a marker job run after `body` flushes the
-    * asynchronous listener queue, so every job of `body` has been seen
-    * once the marker has. */
-  private def jobsStartedBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"counted-${System.nanoTime()}"
-    val marker = s"$group-marker"
-    val groups = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val result = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(marker), "marker job never reached the listener")
-      (result, groups.asScala.count(_ == group))
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** The tables a coach answer draws from, by QnaRouter name. */
   private def contextTables(coach: CoachSession, user: UserWorkflow.UserTables) = Map(

@@ -31,22 +31,24 @@ class DotProductDSpec extends SparkSpec {
     assert(out.toSeq === Seq(Some(11.0), None, None))
   }
 
-  test("FuseDotProduct rewrites the HOF pattern into graft_dot in the optimized plan") {
-    // parquet-backed input so ConvertToLocalRelation can't pre-evaluate
-    val df = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .selectExpr("transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
-      .selectExpr(
-        "aggregate(zip_with(v, v, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, w) -> acc + w) AS d")
-    val optimized = df.queryExecution.optimizedPlan.toString
-    assert(optimized.contains("graft_dot"), s"no fusion in:\n$optimized")
-    // fused result equals the unfused (rule-bypassing) computation
-    val fused = df.collect().map(_.getDouble(0))
+  test("q29 computes its eight plane dots with graft_dot, no HOF fold") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ZipWith}
     import spark.implicits._
-    val seqs = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-      .selectExpr("transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
-      .as[Seq[Double]].collect()
-    val expected = seqs.map(v => v.foldLeft(0.0)((acc, x) => acc + x * x))
-    assert(fused.toSeq === expected.toSeq)
+    // a one-row embeddings table is enough: only the plan is inspected
+    val dir = java.nio.file.Files.createTempDirectory("q29-plan").toString
+    try {
+      Seq((1L, Seq.fill(64)(0.5f), 0)).toDF("vec_id", "embedding", "label")
+        .write.parquet(s"$dir/embeddings.parquet")
+      val plan = graft.QueryCatalog.byName("q29_cosine_lsh").fn(spark, dir)
+        .queryExecution.optimizedPlan
+      val exprs = plan.flatMap(_.expressions)
+      assert(!exprs.exists(_.exists {
+        case _: ArrayAggregate | _: ZipWith => true
+        case _ => false
+      }), s"HOF fold left in:\n$plan")
+      val planes = exprs.flatMap(_.collect { case d: DotProductD if d.right.foldable => d.right })
+      assert(planes.distinct.size === 8, s"plane dots in:\n$plan")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("interpreted eval agrees with codegen") {

@@ -47,5 +47,17 @@ class Md5KeyedSpec extends SparkSpec {
       Seq("x").toDF("s").selectExpr("graft_lev(s, s, s)").collect()
     }
     assert(e2.getMessage.contains("graft_lev"), e2.getMessage)
+    // the DOUBLE threshold of the cell kernels goes through the same check
+    val cells = Seq((1L, Seq(1.0, 0.0), 1.0, 0.5)).toDF("id", "v", "nrm", "t")
+    val e3 = intercept[org.apache.spark.sql.AnalysisException] {
+      cells.selectExpr("graft_cell_dups(id, v, nrm, t)").collect()
+    }
+    assert(e3.getMessage.contains("graft_cell_dups"), e3.getMessage)
+    assert(e3.getMessage.contains("foldable"), e3.getMessage)
+    val e4 = intercept[org.apache.spark.sql.AnalysisException] {
+      cells.selectExpr("graft_cell_top_pairs(id, v, nrm, 'high', 3)").collect()
+    }
+    assert(e4.getMessage.contains("graft_cell_top_pairs"), e4.getMessage)
+    assert(e4.getMessage.contains("DOUBLE"), e4.getMessage)
   }
 }

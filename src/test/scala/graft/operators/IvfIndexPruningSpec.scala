@@ -13,7 +13,7 @@ class IvfIndexPruningSpec extends SparkSpec {
 
   private def queries = Tables.embeddings(spark, dir)
     .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-    .withColumn("nrm", VectorMath.norm(spark, "v"))
+    .withColumn("nrm", VectorMath.norm("v"))
     .filter(col("vec_id") % 250 === 0)
     .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
 
@@ -37,7 +37,7 @@ class IvfIndexPruningSpec extends SparkSpec {
     val unpruned = {
       val centroids = spark.read.parquet(s"$idx/centroids")
       val probes = queries.crossJoin(broadcast(centroids))
-        .withColumn("csim", Det.rate(VectorMath.dot(spark, "qv", "cv") / (col("qn") * col("cnrm"))))
+        .withColumn("csim", Det.rate(VectorMath.dot("qv", "cv") / (col("qn") * col("cnrm"))))
         .withColumn("prk", org.apache.spark.sql.functions.row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
             .orderBy(col("csim").desc, col("cell"))))
@@ -47,7 +47,7 @@ class IvfIndexPruningSpec extends SparkSpec {
         .select(col("vec_id").as("cid"), col("v").as("cv2"), col("nrm").as("cn"), col("cell"))
       probes.join(vectors, Seq("cell"))
         .filter(col("qid") =!= col("cid"))
-        .withColumn("sim", Det.rate(VectorMath.dot(spark, "qv", "cv2") / (col("qn") * col("cn"))))
+        .withColumn("sim", Det.rate(VectorMath.dot("qv", "cv2") / (col("qn") * col("cn"))))
         .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
             .orderBy(col("sim").desc, col("cid"))).cast("long"))

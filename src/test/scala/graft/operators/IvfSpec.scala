@@ -80,7 +80,7 @@ class IvfSpec extends SparkSpec {
     val ref = b.assigned
       .crossJoin(broadcast(b.centroids.select(
         col("cell").as("ccell"), col("cv"), col("cnrm"))))
-      .withColumn("sim", Det.rate(VectorMath.cosine(spark, "v", "cv", col("nrm"), col("cnrm"))))
+      .withColumn("sim", Det.rate(VectorMath.cosine("v", "cv", col("nrm"), col("cnrm"))))
       .groupBy(col("vec_id"), col("cell"))
       .agg(max(when(col("ccell") === col("cell"), col("sim"))).as("a_sim"),
         max(when(col("ccell") =!= col("cell"), col("sim"))).as("b_sim"))

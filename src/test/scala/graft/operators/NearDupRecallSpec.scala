@@ -55,12 +55,12 @@ class NearDupRecallSpec extends SparkSpec {
         expr("transform(embedding, x -> CAST(x * 1.02 + 0.001 AS FLOAT))").as("embedding"))
     val all = base.unionByName(planted)
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", VectorMath.norm(spark, "v"))
+      .withColumn("nrm", VectorMath.norm("v"))
     val a = all.select(col("vec_id").as("vec_a"), col("v").as("va"), col("nrm").as("na"))
     val b = all.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("nrm").as("nb"))
     // the exact quadratic baseline — spec-only, never a registered query
     val exact = a.join(broadcast(b), col("vec_a") < col("vec_b"))
-      .withColumn("sim", Det.rate(VectorMath.dot(spark, "va", "vb") / (col("na") * col("nb"))))
+      .withColumn("sim", Det.rate(VectorMath.dot("va", "vb") / (col("na") * col("nb"))))
       .filter(col("sim") >= 0.9)
       .select(col("vec_a"), col("vec_b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -46,9 +46,9 @@ class ZeroNormSpec extends SparkSpec {
       (Seq(0.0, 0.0, 0.0), Seq(2.0, 4.0, 4.0)),   // zero left: contract 0.0
       (Seq(0.0, 0.0, 0.0), Seq(0.0, 0.0, 0.0)))   // zero both: contract 0.0
       .toDF("a", "b")
-      .withColumn("na", VectorMath.norm(spark, "a"))
-      .withColumn("nb", VectorMath.norm(spark, "b"))
-      .withColumn("sim", VectorMath.cosine(spark, "a", "b", col("na"), col("nb")))
+      .withColumn("na", VectorMath.norm("a"))
+      .withColumn("nb", VectorMath.norm("b"))
+      .withColumn("sim", VectorMath.cosine("a", "b", col("na"), col("nb")))
     val sims = df.orderBy(monotonically_increasing_id()).collect().map(_.getAs[Double]("sim"))
     assert(math.abs(sims(0) - 1.0) < 1e-12)
     assert(sims(1) === 0.0)
