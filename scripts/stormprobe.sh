@@ -21,8 +21,8 @@ USERT=$(awk '/^user/{print $2}' "$OUT.time" | awk -Fm '{print $1*60+$2}' | sed '
 SYST=$(awk '/^sys/{print $2}' "$OUT.time" | awk -Fm '{print $1*60+$2}' | sed 's/s//')
 Q=$(grep -o '"q59_bm25_scoring":[0-9.]*' "$OUT.json" 2>/dev/null | cut -d: -f2)
 # a probe that produced no per-query time is BROKEN (missing replica
-# dir, unbuilt classes, JVM crash — graft.Bench swallows per-query
-# exceptions, so an empty/0 time must never read as CALM)
+# dir, unbuilt classes, JVM crash — graft.Bench lists a throwing query
+# under "failed" with no time, so an empty/0 time must never read as CALM)
 if [ -z "${Q:-}" ] || awk -v q="$Q" 'BEGIN{exit !(q < 0.2)}'; then
   echo "BROKEN wall=$REAL user=${USERT}s sys=${SYST}s q59=${Q:-none} dir=$DIR (probe did not run — see $OUT.log)"
   exit 2

@@ -1,70 +1,23 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.sum
 
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitioning is sized to the DATA, not the thread count:
-    // at bench scale (sf0.1) the largest shuffle moves a few MB, so the
-    // production ~128 MB/partition rule puts partitions in the single
-    // digits and every extra partition is pure task-scheduling floor.
-    // A/B at sf0.1/local[32]: 8 parts beat 32 on BOTH the light-query
-    // floor (-30 ms/query) and the heavy kernels (q54 2.2→1.8 s,
-    // q70 2.2→1.7 s, q80 1.9→1.7 s); full suite 48.1→42.5 s. At real
-    // scale this knob grows with shuffle bytes (SCALE.md) — override
-    // with SPARK_GRAFT_PARTS.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS",
-      math.min(cpus.toInt, 8).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // dev A/B knob; AQE ON measured FASTER even at bench scale (21.5s
-      // vs 24.0s total at sf0.1 — runtime partition coalescing beats the
-      // per-stage re-optimization latency), so the default stands
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    // dev A/B knob: SPARK_GRAFT_CONF="k=v;k=v" applies arbitrary session
-    // confs before the warmup (runtime-settable SQL confs only)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm up JVM/codegen/shuffle/parquet machinery once so the first
-    // timed query doesn't absorb session startup.
-    spark.range(1000000L).agg(sum("id")).collect()
-    Tables.all.foreach { t =>
-      // events needs its typed loader (parquet TIMESTAMP(NANOS) — the
-      // generic reader throws before the nanosAsLong conf is ever set,
-      // leaving events the one cold table in every timed first run)
-      try {
-        val df = if (t == "events") Tables.events(spark, sfDir)
-                 else Tables.load(spark, sfDir, t)
-        df.limit(1).collect()
-      } catch { case _: Throwable => () }
-    }
-    // best-of-3 per query: the VM host shows heavy transient steal-time
-    // noise (observed 2x swings between identical runs); min-of-N is the
-    // standard way to report the machine's actual capability.
-    //
-    // The timed action is a noop-format write, not count(): under count()
-    // Catalyst's EliminateSorts legally drops a top-level ORDER BY, so
-    // final sorts would be excluded from the timing. The noop sink runs
-    // the full plan users actually execute and discards rows executor-side.
+    val env = Harness.env
+    val spark = env.session("graft-bench")
+    Harness.warm(spark, env.sfDir)
+    // best-of-N per query (SPARK_GRAFT_BENCH_REPS, default 3): the VM
+    // host shows heavy transient steal-time noise (observed 2x swings
+    // between identical runs); min-of-N is the standard way to report
+    // the machine's actual capability.
     // optional args = query-name filter (dev tool: time a subset)
     val wanted = args.toSet
     // SPARK_GRAFT_AQE (the A/B knob) overrides every per-spec flag;
     // otherwise each QuerySpec chooses (aqe=false only where two full
     // A/B pairs showed the adaptive re-optimization latency is pure
     // floor for that plan — see QuerySpec.aqe)
-    val aqeEnv = sys.env.get("SPARK_GRAFT_AQE")
-    // SPARK_GRAFT_BENCH_REPS: dev knob for long sweeps (100× replica
-    // runs don't need min-of-3 — the heavy kernels dwarf host noise)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val (results, failed) = timeAll(spark, sfDir, reps, aqeEnv,
+    val (results, failed) = timeAll(spark, env.sfDir, env.reps, env.aqe,
       QueryCatalog.all.sortBy(_.name).filter(sp => wanted.isEmpty || wanted.contains(sp.name)))
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -81,7 +34,7 @@ object Bench {
     // kept out of `queries` and `total`, never reported as a timing
     val fails = failed.map { case (k, e) => s"""{"name":"$k","error":"$e"}""" }
       .mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"artifacts":$arts,"sf":"$sfDir","failed":$fails}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"artifacts":$arts,"sf":"${env.sfDir}","failed":$fails}"""
     // the full-surface line is ~7 KB and harness stdout captures have
     // truncated it (BENCH_r08.json "parsed": null) — ALSO write it to a
     // file the driver can read whole, and print it LAST (after
@@ -91,7 +44,9 @@ object Bench {
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] could not write $outFile: ${e.getClass.getName}: ${e.getMessage}")
+    }
     spark.stop()
     println(line)
   }
@@ -107,26 +62,10 @@ object Bench {
       aqe: Option[String],
       specs: Seq[QuerySpec]): (Seq[(String, Double)], Seq[(String, String)]) = {
     val timed = specs.map { sp =>
-      spark.conf.set("spark.sql.adaptive.enabled", aqe.getOrElse(sp.aqe.toString))
       // every Throwable: one query's StackOverflowError must not end
       // the whole bench
-      sp.name -> (try Right((1 to reps).map { r =>
-        // each timed run pays its own persists: CacheManager matches
-        // canonicalized plans, so without this a second run would
-        // silently reuse the first run's cached intermediates
-        spark.catalog.clearCache()
-        // name-tag the SQL execution so event-log tooling (sortaudit)
-        // can pair executions to queries by NAME instead of by sorted
-        // order, which silently shifted every pairing after a failed
-        // query or with reps > 1 (r13 ADVICE)
-        spark.sparkContext.setJobDescription(s"graft-bench:${sp.name}:rep$r")
-        val t0 = System.nanoTime()
-        try sp.withConfs(spark) {
-          sp.fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        }
-        finally spark.sparkContext.setJobDescription(null)
-        (System.nanoTime() - t0) / 1e9
-      }.min) catch { case e: Throwable => Left(e.getClass.getName) })
+      sp.name -> (try Right((1 to reps).map(r => Harness.timed(spark, sp, sfDir, r, aqe).seconds).min)
+        catch { case e: Throwable => Left(e.getClass.getName) })
     }
     (timed.collect { case (n, Right(t)) => n -> t },
       timed.collect { case (n, Left(e)) => n -> e })

@@ -46,12 +46,13 @@ object SparkEntry {
 /** All registered query specs, grouped by operator family. */
 object QueryCatalog {
 
-  /** Resolve one spec by its registered name. Auxiliary drivers
-    * (QTime / FloorProbe / PlanAudit / ScratchTime) MUST go through
-    * this + [[QuerySpec.withConfs]] rather than the bare name→fn map:
-    * a spec's execution confs (e.g. q157's object-agg sort-fallback
-    * threshold) are applied by Verify/Bench, and a probe that skips
-    * them measures a different plan than the recorded numbers. */
+  /** Resolve one spec by its registered name. Any program that runs a
+    * query by name MUST go through this + [[QuerySpec.withConfs]] (or
+    * [[Harness.timed]], which applies both the confs and the spec's AQE
+    * flag) rather than the bare name→fn map: a spec's execution confs
+    * (e.g. q157's object-agg sort-fallback threshold) are applied by
+    * Verify/Bench, and a probe that skips them measures a different
+    * plan than the recorded numbers. */
   def byName(name: String): QuerySpec =
     all.find(_.name == name).getOrElse(throw new NoSuchElementException(
       s"no registered query named '$name'"))

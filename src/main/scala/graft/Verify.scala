@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,15 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val wanted = rest.toSet // optional extra args: dev-only query filter
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.env.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     QueryCatalog.all
       .filter(sp => wanted.isEmpty || wanted.contains(sp.name))
@@ -27,7 +18,8 @@ object Verify {
           .parquet(s"$outDir/${sp.name}")
       }
       catch { case e: Throwable =>
-        System.err.println(s"[verify] ${sp.name} failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${sp.name} failed: ${e.getClass.getName}: ${e.getMessage}")
+        e.printStackTrace()
       }
       // queries that persist intermediates (IVF centroids, LSH shingle
       // tables) must not stack cached blocks across a 51-query session

@@ -1,7 +1,5 @@
 package graft.battle
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end battle-domain demo: the engine-side replication of the
   * reference's notebook flow (clash_agent_demo.ipynb cells 1-6, minus
   * network and LLM): Phase 0 meta convergence loop → meta tables,
@@ -12,14 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object BattleDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-battle-demo")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.env.session("graft-battle-demo")
 
     // ---- Phase 1: raw JSON → normalize → classify → user analytics
     println("=== Phase 1: normalize raw battle log ===")

@@ -22,7 +22,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * digest and the 32-byte hex payload remain as allocations. Values
   * are pinned against the builtin in Md5KeyedSpec, so the DuckDB
   * oracles (which replicate the same md5('h:' || s) family) are
-  * untouched. */
+  * untouched.
+  *
+  * No catalog query calls it: the minhash queries use
+  * `graft_minhash_hex`. It stays registered as MinHashHexSpec's
+  * reference (slot h == min(element_at(graft_md5_keyed))) and for
+  * perfbench's by-name kernel pass, which calls every `graft_*`
+  * function. */
 object Md5KeyedKernel {
 
   private val MaxKeys = 64

@@ -195,8 +195,8 @@ object WindowSkewQueries {
       // accuracy 1000 → rank-error ≤ 1e-3, a 10× margin under the
       // ε=0.01 contract this query emits; the sketch value itself is
       // never output, so the parameter is output-invariant while the
-      // insert cost is ~2/3 of the accuracy-10000 form (FloorProbe,
-      // SCALE.md round 11)
+      // insert cost is ~2/3 of the accuracy-10000 form (phase-split
+      // probe, SCALE.md round 11)
       .agg(expr(s"approx_percentile(x, $pArr, 1000)").as("av"))
       .select(col("g"), posexplode(col("av")).as(Seq("pi", "av")))
       .select(col("g"), lit("q").as("c"),

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{ClassifierQueries, SelectionQueries}
 import graft.streaming.{CentroidStream, GramStream, PackingStream, QualityStream, SpanStream}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -30,6 +29,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    stream length; reference centroids are the first K streamed
   *    vectors (deterministic; the state/throughput measurement does
   *    not depend on centroid quality).
+  *
+  * The session shape comes from the env contract ([[Harness.env]]); the
+  * replica runs in SCALE.md used SPARK_GRAFT_CPUS=32 SPARK_GRAFT_PARTS=32.
   */
 object ScratchStream10x {
   def main(args: Array[String]): Unit = {
@@ -43,15 +45,9 @@ object ScratchStream10x {
     // match the corpus the replica in `dir` was scaled from (previously
     // hardcoded to sf0.1, which silently mixed corpora for other dirs)
     val baseDir = if (args.length > 4) args(4) else "/root/testdata/sf0.1"
-    val builder = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    if (rocks) builder.config("spark.sql.streaming.stateStore.providerClass",
+    val spark = Harness.env.session("graft-stream10x")
+    if (rocks) spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     println(s"STREAMCFG dir=$dir baseDir=$baseDir shards=$shards " +

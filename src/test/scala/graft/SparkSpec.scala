@@ -7,16 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for all suites (one JVM-wide session —
-  * Spark session startup dominates test time otherwise). */
+  * Spark session startup dominates test time otherwise). Fixed at 4
+  * cores and 4 partitions, whatever the env says: the plan-shape specs
+  * expect 4 partitions. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(4, 4, "graft-test")
 }
 
 trait SparkSpec extends AnyFunSuite {
