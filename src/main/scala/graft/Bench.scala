@@ -41,7 +41,7 @@ object Bench {
     // spark.stop()) so no shutdown logging trails the parseable line
     // relative default (resolves under the launch cwd) — a hardcoded
     // absolute path wrote outside the working tree on foreign checkouts
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
+    val outFile = env.benchOut
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (line + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>

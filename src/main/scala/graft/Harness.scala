@@ -45,10 +45,14 @@ object Harness {
     *              MB, so every extra partition is task-scheduling floor
     *              (A/B at local[32]: 8 beat 32, full suite 48.1 → 42.5 s).
     * @param aqe   A/B knob: overrides every spec's own AQE flag.
-    * @param confs A/B knob: runtime-settable session confs.
-    * @param reps  timed reps per query (min-of-N in `Bench`). */
+    * @param confs A/B knob: runtime-settable session confs — also how a
+    *              run picks the artifact mode (`spark.graft.artifacts`)
+    *              and the wide gram digest (`spark.graft.wideDigest`).
+    * @param reps  timed reps per query (min-of-N in `Bench`).
+    * @param benchOut file `Bench` writes its JSON line to.
+    * @param plotsDir directory `BattleDemo` writes its chart files to. */
   final case class Env(sfDir: String, cpus: Int, parts: Int, aqe: Option[String],
-      confs: Seq[(String, String)], reps: Int) {
+      confs: Seq[(String, String)], reps: Int, benchOut: String, plotsDir: String) {
 
     /** A session of this shape with [[aqe]] and [[confs]] applied. */
     def session(app: String): SparkSession = {
@@ -59,19 +63,36 @@ object Harness {
     }
   }
 
+  /** Env names that used to pick a mode and now fail loudly, each with
+    * its SPARK_GRAFT_CONF spelling: an old recipe must not quietly run
+    * in the default mode instead. */
+  private val retired = Seq(
+    "SPARK_GRAFT_NO_ARTIFACTS" -> "spark.graft.artifacts=off",
+    "SPARK_GRAFT_ARTIFACT_STORE" -> "spark.graft.artifacts=<absolute store path>",
+    "SPARK_GRAFT_WIDE_DIGEST" -> "spark.graft.wideDigest=1")
+
   /** SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 4), SPARK_GRAFT_PARTS
     * (default min(cpus, 8)), SPARK_GRAFT_AQE, SPARK_GRAFT_CONF
-    * ("k=v;k=v") and SPARK_GRAFT_BENCH_REPS (default 3). */
-  def env: Env = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    * ("k=v;k=v"), SPARK_GRAFT_BENCH_REPS (default 3),
+    * SPARK_GRAFT_BENCH_OUT (default BENCH_LAST.json) and
+    * SPARK_GRAFT_PLOTS_DIR (default plots). */
+  def env: Env = fromEnv(sys.env)
+
+  private[graft] def fromEnv(vars: Map[String, String]): Env = {
+    retired.find { case (k, _) => vars.contains(k) }.foreach { case (k, conf) =>
+      throw new IllegalArgumentException(s"$k is retired: set SPARK_GRAFT_CONF=\"$conf\" instead")
+    }
+    val cpus = vars.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     Env(
-      sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+      sfDir = vars.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
       cpus = cpus,
-      parts = sys.env.get("SPARK_GRAFT_PARTS").map(_.toInt).getOrElse(math.min(cpus, 8)),
-      aqe = sys.env.get("SPARK_GRAFT_AQE"),
-      confs = sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(";"))
+      parts = vars.get("SPARK_GRAFT_PARTS").map(_.toInt).getOrElse(math.min(cpus, 8)),
+      aqe = vars.get("SPARK_GRAFT_AQE"),
+      confs = vars.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(";"))
         .filter(_.contains("=")).map { kv => val Array(k, v) = kv.split("=", 2); k -> v },
-      reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
+      reps = vars.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt,
+      benchOut = vars.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json"),
+      plotsDir = vars.getOrElse("SPARK_GRAFT_PLOTS_DIR", "plots"))
   }
 
   /** Warm up JVM/codegen/shuffle/parquet machinery once so the first

@@ -74,28 +74,42 @@ object Tables {
     * schema inference (~160 ms against the bench floor — a footer read
     * + merge per DataFrame creation, 3 creations per benched query).
     * The schema is a property of the file CONTENTS, so the memo key is
-    * built from content-tracking file state: for a plain file its
-    * (mtime, len); for a DIRECTORY table (Spark-written fixtures) the
-    * (name, mtime, len) of every child — a directory's own mtime/len
-    * does not change when a part file is rewritten in place, so keying
-    * on the children is what makes rewrite-invalidates-entry actually
-    * hold. One cheap listing (~1 ms) instead of a footer read.
-    * Production engines do the same thing through a catalog. */
+    * the path plus its [[fileState]]: one cheap listing (~1 ms) instead
+    * of a footer read. Production engines do the same thing through a
+    * catalog. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
+  /** Content-tracking state of one table path, None when it is absent:
+    * (mtime, len) for a plain file; for a DIRECTORY table (Spark-written
+    * fixtures) the (name, mtime, len) of every child — a directory's own
+    * mtime/len does not change when a part file is rewritten in place,
+    * so keying on the children is what makes rewrite-invalidates-entry
+    * actually hold. File-status calls only; no Spark job. */
+  private def fileState(spark: SparkSession, path: String): Option[String] = {
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(hPath)
-    val state =
+    val status = try Some(fs.getFileStatus(hPath))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.map { st =>
       if (!st.isDirectory) s"${st.getModificationTime}:${st.getLen}"
       else fs.listStatus(hPath).toSeq.sortBy(_.getPath.getName)
         .map(c => s"${c.getPath.getName}@${c.getModificationTime}:${c.getLen}")
         .mkString(",")
-    val key = s"$path@$state"
-    val schema = schemaCache.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+    }
+  }
+
+  /** The [[fileState]] of every table in [[all]] present under `dir`:
+    * changes whenever any input table is rewritten, so derived state
+    * keyed on it (the standing artifacts) can never outlive its data. */
+  private[graft] def fingerprint(spark: SparkSession, dir: String): String =
+    all.flatMap(t => fileState(spark, s"$dir/$t.parquet").map(st => s"$t=$st")).mkString(";")
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val state = fileState(spark, path)
+      .getOrElse(throw new java.io.FileNotFoundException(s"table $name: no file at $path"))
+    val schema = schemaCache.computeIfAbsent(s"$path@$state", _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

@@ -10,7 +10,8 @@ package graft.battle
   */
 object BattleDemo {
   def main(args: Array[String]): Unit = {
-    val spark = graft.Harness.env.session("graft-battle-demo")
+    val env = graft.Harness.env
+    val spark = env.session("graft-battle-demo")
 
     // ---- Phase 1: raw JSON → normalize → classify → user analytics
     println("=== Phase 1: normalize raw battle log ===")
@@ -44,7 +45,7 @@ object BattleDemo {
     // ---- Plot bundle: the notebook's on-disk chart files (cell 4),
     // written fully offline — Vega-Lite spec + rasterized PNG each
     println("=== plot bundle ===")
-    val plotsDir = sys.env.getOrElse("SPARK_GRAFT_PLOTS_DIR", "plots")
+    val plotsDir = env.plotsDir
     val userPlots = PlotBundle.userPlots(classified, plotsDir)
     val metaPlots = PlotBundle.metaPlots(
       deckSummary, MetaAnalytics.metaMatchupSummary(matrix, minGames = 4), plotsDir)

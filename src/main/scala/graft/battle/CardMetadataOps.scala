@@ -1,22 +1,7 @@
 package graft.battle
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-/** Small ingestion-side parity utilities. */
-object TagOps {
-
-  /** normalize_player_tag (src/api/battles.py:6-17): trim, uppercase,
-    * ensure a leading '#'. */
-  def normalizeTag(tag: Column): Column = {
-    val t = upper(trim(tag))
-    when(t.startsWith("#"), t).otherwise(concat(lit("#"), t))
-  }
-
-  /** URL-encoded form ('#' → '%23', battles.py:33-35). */
-  def urlEncodeTag(tag: Column): Column =
-    regexp_replace(normalizeTag(tag), "#", "%23")
-}
 
 /** Card-metadata maintenance (update_cardsdata.py:30-54): merge freshly
   * fetched card stats into the existing metadata dimension by name.

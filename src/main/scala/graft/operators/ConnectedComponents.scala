@@ -48,17 +48,12 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
-  private val debug = sys.env.contains("GRAFT_CC_DEBUG")
-  private def dbg(msg: => String): Unit = if (debug) System.err.println(s"[cc] $msg")
-
   /** @param nodes single column `id`
     * @param edges columns `src`, `dst` — undirected; symmetrized inside,
     *              so pass each pair once in either orientation
     * @return (id, component) where component = min reachable node id
     */
   def run(nodes: DataFrame, edges: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val t0 = System.nanoTime()
-    def el = f"${(System.nanoTime() - t0) / 1e9}%.2f"
     val spark = nodes.sparkSession
     val parts = math.max(spark.conf.get("spark.sql.shuffle.partitions", "32").toInt, 1)
     val part = new HashPartitioner(parts)
@@ -85,7 +80,6 @@ object ConnectedComponents {
     var curSum = lsum(cur)
     var prevSum = curSum + 1 // force ≥1 confirmation round
     var rounds = 0
-    dbg(s"init done at ${el}s sum=$curSum")
     while (curSum != prevSum && rounds < maxRounds) {
       // narrow join: sym and cur share the partitioner — no shuffle here
       val offered = sym.join(cur).map { case (_, (dst, lbl)) => (dst, lbl) }
@@ -97,7 +91,6 @@ object ConnectedComponents {
       cur.unpersist(blocking = false)
       cur = next
       rounds += 1
-      dbg(s"round $rounds done at ${el}s sum=$curSum")
     }
     // A maxRounds exit without sum-convergence means labels are only
     // partially propagated — silently returning them would hand the
@@ -123,7 +116,6 @@ object ConnectedComponents {
       cur.map { case (id, c) => Row(id, c) },
       StructType(Seq(StructField("id", LongType), StructField("component", LongType)))))
     out.count()
-    dbg(s"materialized labels at ${el}s")
     sym.unpersist(blocking = false)
     cur.unpersist(blocking = false)
     out
@@ -153,7 +145,6 @@ object ConnectedComponents {
     catch {
       case e: IllegalArgumentException if e.getMessage != null &&
         e.getMessage.contains("did not converge") =>
-        dbg("min-label hit round cap; falling back to star contraction")
         runStars(nodes, edges)
     }
 
@@ -226,7 +217,6 @@ object ConnectedComponents {
       cur.unpersist(blocking = false)
       cur = next
       rounds += 1
-      dbg(s"stars round $rounds edges=${curSum._1}")
     }
     if (curSum != prevSum) {
       cur.unpersist(blocking = false) // same throw-path hygiene as run()

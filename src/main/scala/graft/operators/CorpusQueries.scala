@@ -586,8 +586,8 @@ object CorpusQueries {
       docGrams8Build(s, dir))
 
   /** The documented ≥10⁹-gram widening, now BUILT behind a flag: with
-    * `spark.graft.wideDigest=1` (or env `SPARK_GRAFT_WIDE_DIGEST=1`)
-    * every gram digest carries a SECOND independent 60-bit column
+    * session conf `spark.graft.wideDigest=1` (mains set it through
+    * SPARK_GRAFT_CONF) every gram digest carries a SECOND independent 60-bit column
     * (md5 hex chars 16–30) and all membership joins key on BOTH — 120
     * bits keeps the birthday expectation ≪ 1 far past 10⁹ distinct
     * grams, where the single column's guarantee (pinned zero-collision
@@ -597,8 +597,7 @@ object CorpusQueries {
     * under distinct names so a store never serves one width to a
     * session configured for the other. */
   private[graft] def wideDigest(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.wideDigest",
-      sys.env.getOrElse("SPARK_GRAFT_WIDE_DIGEST", "")) == "1"
+    s.conf.get("spark.graft.wideDigest", "") == "1"
 
   /** The digest join key set under the configured width. */
   private def ghKeys(s: SparkSession): Seq[String] =

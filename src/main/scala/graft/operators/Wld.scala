@@ -26,9 +26,11 @@ object Wld {
 
   /** win_rate = wins/games rounded for cross-engine hash stability.
     * Draws count in the denominator but not the numerator
-    * (user_analytics.py:224-226). */
+    * (user_analytics.py:224-226); a zero-games group rates 0.0
+    * (user_analytics.py:213-220). */
   def winRate: Column =
-    Det.rate(col("wins").cast("double") / col("games")).as("win_rate")
+    when(col("games") === 0L, lit(0.0))
+      .otherwise(Det.rate(col("wins").cast("double") / col("games"))).as("win_rate")
 
   /** POV swap: win↔loss, draw fixed (meta_analytics.py:32-38). */
   def flip(result: Column): Column =

@@ -60,4 +60,34 @@ class HarnessSpec extends SparkSpec {
     assert(printed.contains("[harness] ok final plan:"), printed)
     assert(!printed.contains("[harness] boom"), printed)
   }
+
+  test("only Harness reads the environment") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: no $root")
+    val reads = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Harness.scala")
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("sys.env") || line.contains("System.getenv") =>
+            s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    assert(reads.isEmpty, s"env reads outside Harness.env:\n${reads.mkString("\n")}")
+  }
+
+  test("env applies its defaults and fails loudly on a retired name") {
+    val e = Harness.fromEnv(Map("SPARK_GRAFT_CPUS" -> "2"))
+    assert((e.parts, e.reps, e.benchOut, e.plotsDir) === ((2, 3, "BENCH_LAST.json", "plots")))
+    val conf = Harness.fromEnv(Map("SPARK_GRAFT_CONF" -> "spark.graft.artifacts=off;a=b=c"))
+    assert(conf.confs === Seq("spark.graft.artifacts" -> "off", "a" -> "b=c"))
+    Seq(
+      "SPARK_GRAFT_NO_ARTIFACTS" -> "spark.graft.artifacts=off",
+      "SPARK_GRAFT_ARTIFACT_STORE" -> "spark.graft.artifacts=",
+      "SPARK_GRAFT_WIDE_DIGEST" -> "spark.graft.wideDigest=1").foreach { case (name, spelling) =>
+      val ex = intercept[IllegalArgumentException](Harness.fromEnv(Map(name -> "1")))
+      assert(ex.getMessage.contains(name) && ex.getMessage.contains(s"SPARK_GRAFT_CONF=\"$spelling"),
+        ex.getMessage)
+    }
+  }
 }

@@ -1,19 +1,8 @@
 package graft.battle
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class CardMetadataOpsSpec extends SparkSpec {
-
-  test("normalizeTag trims, uppercases, ensures leading #; urlEncode swaps to %23") {
-    import spark.implicits._
-    val df = Seq("  abc123 ", "#QQQ", "x#y").toDF("tag")
-      .select(TagOps.normalizeTag(col("tag")).as("n"), TagOps.urlEncodeTag(col("tag")).as("u"))
-    val rows = df.collect().map(r => (r.getString(0), r.getString(1)))
-    assert(rows(0) === ("#ABC123", "%23ABC123"))
-    assert(rows(1) === ("#QQQ", "%23QQQ"))
-    assert(rows(2) === ("#X#Y", "%23X%23Y"))
-  }
 
   test("backfill: fetched elixir wins on presence (even null), appends new cards") {
     import spark.implicits._

@@ -164,11 +164,14 @@ class ArtifactsSpec extends SparkSpec {
     assert(art.forall(r => r.getAs[Long]("nbg") >= 1L && r.getAs[Long]("nll") >= 0L))
   }
 
+  /** The BPE trainer's word-frequency input, derived off the raw rows. */
+  private def words(d: String) = graft.Tables.documents(spark, d)
+    .select(explode(split(col("text"), " ")).as("w"))
+    .filter(length(col("w")) > 0)
+    .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+
   test("bpe ntok dictionary artifact == full segmentation ground truth") {
-    val words = graft.Tables.documents(spark, dir)
-      .select(explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+    val words = this.words(dir)
     val t = BpeQueries.trained(spark, dir)
     // the merge table must be the standalone trainer's
     assert(t.merges === BpeQueries.trainMerges(words, 8))
@@ -200,7 +203,7 @@ class ArtifactsSpec extends SparkSpec {
       "alpha bravo charlie delta echo foxtrot golf hotel india juliet",
       "alpha bravo charlie delta echo foxtrot golf hotel india kilo",
       "lima mike november oscar papa quebec romeo sierra tango uniform"))
-    spark.conf.set("spark.graft.artifactStore", storeDir)
+    spark.conf.set(Artifacts.ModeKey, storeDir)
     try {
       val first = DedupQueries.jaccardPairs(spark, corpusDir)
         .orderBy(col("doc_a"), col("doc_b")).collect().toSeq
@@ -209,17 +212,18 @@ class ArtifactsSpec extends SparkSpec {
       val stored = new java.io.File(storeDir).listFiles()
         .filter(_.getName.endsWith("_neardup_pairs_v1"))
       assert(stored.length === 1, "one parquet artifact dir expected")
-      // a NEW session-equivalent (memo cleared) with DIFFERENT current
-      // corpus content must still serve the STORED artifact — proof the
-      // read path loads the standing table instead of rebuilding
+      // a NEW session-equivalent (memo cleared) over the same corpus
+      // must serve the STORED artifact: a scan of the standing table,
+      // not a rebuild from the corpus
       Artifacts.reset()
-      writeDocs(Seq("totally different words now", "nothing shared here"))
-      val second = DedupQueries.jaccardPairs(spark, corpusDir)
-        .orderBy(col("doc_a"), col("doc_b")).collect().toSeq
+      val served = DedupQueries.jaccardPairs(spark, corpusDir)
+      assert(served.inputFiles.nonEmpty &&
+        served.inputFiles.forall(_.contains(stored.head.getName)), served.inputFiles.mkString(","))
+      val second = served.orderBy(col("doc_a"), col("doc_b")).collect().toSeq
       assert(second === first,
         "store hit must serve the written artifact, not re-derive")
     } finally {
-      spark.conf.unset("spark.graft.artifactStore")
+      spark.conf.unset(Artifacts.ModeKey)
       Artifacts.reset() // drop entries built against the temp store/corpus
     }
   }
@@ -266,7 +270,7 @@ class ArtifactsSpec extends SparkSpec {
       .map { case (t, i) => (i, t, "en", "web", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
-    spark.conf.set("spark.graft.artifactStore", storeDir)
+    spark.conf.set(Artifacts.ModeKey, storeDir)
     try {
       val first = DedupQueries.jaccardPairs(spark, corpusDir)
         .orderBy(col("doc_a"), col("doc_b")).collect().toSeq
@@ -285,7 +289,7 @@ class ArtifactsSpec extends SparkSpec {
         "missing _SUCCESS must trigger a rebuild, not serve the truncated dir")
       assert(new java.io.File(artDir, "_SUCCESS").exists())
     } finally {
-      spark.conf.unset("spark.graft.artifactStore")
+      spark.conf.unset(Artifacts.ModeKey)
       Artifacts.reset()
     }
   }
@@ -309,7 +313,7 @@ class ArtifactsSpec extends SparkSpec {
       // flip the conf WITHOUT resetting: the next touch must build the
       // store-backed form (previously the stale memo entry kept serving
       // the checkpoint form for the rest of the context)
-      spark.conf.set("spark.graft.artifactStore", storeDir)
+      spark.conf.set(Artifacts.ModeKey, storeDir)
       val stored = DedupQueries.jaccardPairs(spark, corpusDir)
         .orderBy(col("doc_a"), col("doc_b")).collect().toSeq
       assert(stored === inMem)
@@ -317,7 +321,7 @@ class ArtifactsSpec extends SparkSpec {
         .exists(_.getName.endsWith("_neardup_pairs_v1")),
         "store-backed artifact directory must exist after the conf flip")
     } finally {
-      spark.conf.unset("spark.graft.artifactStore")
+      spark.conf.unset(Artifacts.ModeKey)
       Artifacts.reset()
     }
   }
@@ -336,12 +340,12 @@ class ArtifactsSpec extends SparkSpec {
     try {
       assert(get() === "build1")
       assert(get() === "build1", "same config: memoized")
-      spark.conf.set("spark.graft.artifactStore", storeDir)
+      spark.conf.set(Artifacts.ModeKey, storeDir)
       assert(get() === "build2", "store flip must re-resolve the value")
-      spark.conf.unset("spark.graft.artifactStore")
+      spark.conf.unset(Artifacts.ModeKey)
       assert(get() === "build1", "the no-store form is still memoized")
     } finally {
-      spark.conf.unset("spark.graft.artifactStore")
+      spark.conf.unset(Artifacts.ModeKey)
       Artifacts.reset()
     }
   }
@@ -353,7 +357,7 @@ class ArtifactsSpec extends SparkSpec {
     Seq((0L, "a b c"), (1L, "d e f"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
-    spark.conf.set("spark.graft.artifactStore", storeDir)
+    spark.conf.set(Artifacts.ModeKey, storeDir)
     try {
       def build(v: String) = Artifacts.frame(spark, corpusDir, "verprobe",
         version = if (v == "old") 1 else 2) {
@@ -369,7 +373,7 @@ class ArtifactsSpec extends SparkSpec {
       // and no temp directory is left behind by the rename-commit path
       assert(!names.exists(_.contains(".tmp-")), names.mkString(","))
     } finally {
-      spark.conf.unset("spark.graft.artifactStore")
+      spark.conf.unset(Artifacts.ModeKey)
       Artifacts.reset()
     }
   }
@@ -407,7 +411,7 @@ class ArtifactsSpec extends SparkSpec {
   test("stored VALUE kinds round-trip the store losslessly (PQ, IVF-PQ, BPE, IVF index, rrf)") {
     def deep3(a: Array[Array[Array[Long]]]) = a.map(_.map(_.toSeq).toSeq).toSeq
     val storeDir = java.nio.file.Files.createTempDirectory("artval").toString
-    spark.conf.set("spark.graft.artifactStore", storeDir)
+    spark.conf.set(Artifacts.ModeKey, storeDir)
     try {
       Artifacts.reset()
       // first session: trains + writes the standing tables
@@ -443,7 +447,7 @@ class ArtifactsSpec extends SparkSpec {
       assert(RetrievalQueries.fusedRrf(spark, dir)
         .orderBy(col("doc_id")).collect().toSeq === rrf1)
     } finally {
-      spark.conf.unset("spark.graft.artifactStore")
+      spark.conf.unset(Artifacts.ModeKey)
       Artifacts.reset()
     }
   }
@@ -460,5 +464,61 @@ class ArtifactsSpec extends SparkSpec {
     assert(b.count() === n)
     val p = DedupQueries.jaccardPairs(spark, dir)
     assert(p eq DedupQueries.jaccardPairs(spark, dir))
+  }
+
+  test("an in-place rewrite of the input rebuilds frame and stored-value artifacts (memo and store)") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val store = Files.createTempDirectory("artrewrite_store").toString
+    Seq("memo", store).foreach { mode =>
+      val d = Files.createTempDirectory("artrewrite").toString
+      val docs = Paths.get(s"$d/documents.parquet")
+      Files.copy(Paths.get(s"$dir/documents.parquet"), docs)
+      def tokens(build: Boolean) =
+        (if (build) ExtendedQueries.docTokensBuild(spark, d) else ExtendedQueries.docTokens(spark, d))
+          .orderBy(col("doc_id")).collect().toSeq
+      def merges = BpeQueries.trained(spark, d).merges
+      graft.QuerySpec.scoped(spark, Map(Artifacts.ModeKey -> mode)) {
+        try {
+          val (tokens0, merges0) = (tokens(build = false), merges)
+          assert(tokens0 === tokens(build = true) && merges0 === BpeQueries.trainMerges(words(d), 8), mode)
+          // rewrite the one file in place: half the rows, text reversed
+          val rows = Files.createTempDirectory("artrewrite_rows").resolve("out").toString
+          graft.Tables.documents(spark, dir).filter(col("doc_id") % 2 === 0)
+            .withColumn("text", reverse(col("text")))
+            .coalesce(1).write.parquet(rows)
+          val part = new java.io.File(rows).listFiles().filter(_.getName.endsWith(".parquet")).head
+          Files.copy(part.toPath, docs, StandardCopyOption.REPLACE_EXISTING)
+          val (tokensFresh, mergesFresh) = (tokens(build = true), BpeQueries.trainMerges(words(d), 8))
+          assert(tokensFresh != tokens0 && mergesFresh != merges0, "the rewrite must change both artifacts")
+          assert(tokens(build = false) === tokensFresh, s"$mode: stale doc_tokens served after the rewrite")
+          assert(merges === mergesFresh, s"$mode: stale bpe_trained served after the rewrite")
+        } finally Artifacts.reset()
+      }
+    }
+    assert(new java.io.File(store).listFiles().count(_.getName.endsWith("_bpe_trained_v1")) === 2,
+      "store mode must write one bpe_trained entry per data version")
+  }
+
+  test("one session flips off <-> memo with identical results; a bad mode names the conf") {
+    val specs = Seq("q54_cc_dedup_clusters", "q97_cluster_canonical", "q110_boilerplate_profile",
+      "q122_source_overlap", "q146_paragraph_dedup").map(graft.QueryCatalog.byName)
+    def run(mode: String) = graft.QuerySpec.scoped(spark, Map(Artifacts.ModeKey -> mode)) {
+      val pairs = DedupQueries.jaccardPairs(spark, dir)
+      assert((pairs eq DedupQueries.jaccardPairs(spark, dir)) === (mode == "memo"),
+        s"$mode: memo serves one instance, off builds per call")
+      specs.map(sp => sp.name -> sp.withConfs(spark)(sp.fn(spark, dir).collect().toSeq))
+    }
+    try {
+      val off = run("off")
+      assert(off.forall(_._2.nonEmpty))
+      assert(run("memo") === off)
+      assert(run("off") === off)
+      Seq("", "1", "true", "relative/store", "store:x").foreach { bad =>
+        val e = graft.QuerySpec.scoped(spark, Map(Artifacts.ModeKey -> bad)) {
+          intercept[IllegalArgumentException](DedupQueries.jaccardPairs(spark, dir))
+        }
+        assert(e.getMessage.contains(Artifacts.ModeKey), e.getMessage)
+      }
+    } finally Artifacts.reset()
   }
 }

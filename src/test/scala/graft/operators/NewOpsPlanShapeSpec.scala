@@ -261,12 +261,12 @@ class NewOpsPlanShapeSpec extends SparkSpec {
   test("CC/cluster consumers read the standing artifact, not a rebuilt clustering") {
     // the cluster_map artifact is materialized RDD blocks — consumers
     // must scan it (ExistingRDD), not re-run the shingle/pair/CC chain
-    // under SPARK_GRAFT_ARTIFACT_STORE the artifact reads back as a
+    // in store mode (spark.graft.artifacts=<path>) the artifact reads back as a
     // parquet FileScan of the store path instead of ExistingRDD blocks
     // (q97 also legitimately scans documents for the canonical text);
     // the invariant in both modes is "the clustering comes from the
     // artifact, never a rebuilt shingle/pair/CC chain"
-    val store = sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_STORE", "")
+    val store = spark.conf.getOption(Artifacts.ModeKey).filterNot(Set("memo", "off")).getOrElse("")
     Seq("q97_cluster_canonical", "q128_cluster_sizes", "q142_softdedup_weights")
       .foreach { q =>
         val p = finalPlan(q)
@@ -307,7 +307,7 @@ class NewOpsPlanShapeSpec extends SparkSpec {
 
   test("q174/q175 ride the standing pair artifact, no shingle re-derivation") {
     // same store-mode scoping as the CC-consumer pin above
-    val store = sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_STORE", "")
+    val store = spark.conf.getOption(Artifacts.ModeKey).filterNot(Set("memo", "off")).getOrElse("")
     Seq("q174_transitivity_audit", "q175_minhash_calibration").foreach { q =>
       val p = finalPlan(q)
       if (store.nonEmpty)

@@ -35,6 +35,15 @@ class RestBattleSourceSpec extends SparkSpec {
     assert(RestBattleSource.leaderboardPath(300) === "/leaderboard/170000005?limit=300")
   }
 
+  test("normalizeTag trims, uppercases, ensures leading #") {
+    assert(RestBattleSource.normalizeTag("#QQQ") === "#QQQ")
+    assert(RestBattleSource.encodeTag("  abc123 ") === "%23ABC123")
+    assert(RestBattleSource.encodeTag("#QQQ") === "%23QQQ")
+    // battles.py encodes only the FIRST '#': an inner one stays literal
+    assert(RestBattleSource.normalizeTag("x#y") === "#X#Y")
+    assert(RestBattleSource.encodeTag("x#y") === "%23X#Y")
+  }
+
   test("fetchBattles parses bare-array AND items-wrapped responses identically") {
     val client = new FixtureRestClient(Map(
       "/players/%23A/battlelog" -> battleArray,
