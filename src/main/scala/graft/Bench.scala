@@ -26,8 +26,9 @@ object Bench {
     // standing-artifact layer builds inside the FIRST rep of the first
     // consumer, which min-of-N reporting discards — this keeps that
     // one-time cost visible next to the warm per-query numbers.
-    // SPARK_GRAFT_NO_ARTIFACTS=1 benches the inline forms instead
-    // (then this map is empty and every consumer pays its own build).
+    // SPARK_GRAFT_CONF="spark.graft.artifacts=off" benches the inline
+    // forms instead (then this map is empty and every consumer pays its
+    // own build).
     val arts = graft.operators.Artifacts.buildSeconds.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     // additive field: queries whose rep threw, with the error class —

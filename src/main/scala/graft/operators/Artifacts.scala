@@ -90,9 +90,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * stale derived state. Memo keys also include the applicationId
   * (checkpointed RDD blocks die with their context, and ScalaTest runs
   * several contexts per JVM) and the mode (flipping it after first
-  * touch serves the newly-configured form). Entries are never evicted
-  * — a handful of narrow frames per (context, data); stale entries hold
-  * only dead block references.
+  * touch serves the newly-configured form). A build under a new
+  * fingerprint drops the entries of the same (context, mode, dir,
+  * kind, name, version) built over older data, so one entry per
+  * artifact remains. It drops the reference only, never `unpersist`:
+  * a query planned over the old frame may still be reading its
+  * checkpoint blocks, and ContextCleaner frees them once nothing
+  * references them. Store directories of superseded data stay on
+  * disk; nothing here deletes store entries.
   *
   * `version` is the BUILDER version: a semantics change to a builder
   * that keeps the artifact name must bump its call-site version, so old
@@ -121,7 +126,11 @@ object Artifacts {
     try { val u = new java.net.URI(v); u.getScheme != null && !u.isOpaque }
     catch { case _: java.net.URISyntaxException => false }
 
-  private val memo = new ConcurrentHashMap[String, AnyRef]()
+  /** Memo key: one artifact of one context and mode (`scope`) over
+    * dataset `dir`, built over the data whose fingerprint is `data`. */
+  private final case class Key(dir: String, scope: String, data: String)
+
+  private val memo = new ConcurrentHashMap[Key, AnyRef]()
 
   /** Wall seconds each named artifact's BUILD took in this JVM,
     * accumulated across (dataset, version) variants. Composite
@@ -144,7 +153,8 @@ object Artifacts {
   /** The one dispatcher behind every entry point. `off` runs `inline`;
     * otherwise the result is memoized under (context, mode, dir, data
     * fingerprint, kind, name, version) and built by `inMemory`, or, in
-    * store mode, by `stored` given this artifact's store path.
+    * store mode, by `stored` given this artifact's store path. A build
+    * first drops the entries of the same artifact over other data.
     *
     * Memoization is get → build OUTSIDE the map → putIfAbsent, NOT
     * computeIfAbsent: builders routinely request OTHER artifacts
@@ -157,10 +167,11 @@ object Artifacts {
     case Off => inline
     case m =>
       val data = graft.Tables.fingerprint(s, dir)
-      val k = s"${s.sparkContext.applicationId}|$m|$dir|$data|$kind:${name}_v$version"
+      val k = Key(dir, s"${s.sparkContext.applicationId}|$m|$kind:${name}_v$version", data)
       val cached = memo.get(k)
       if (cached != null) cached.asInstanceOf[T]
       else {
+        memo.keySet.removeIf(o => o.dir == dir && o.scope == k.scope && o.data != data)
         val t0 = System.nanoTime()
         val built =
           try m match {
@@ -251,6 +262,13 @@ object Artifacts {
     * build-vs-load-from-store branches. Checkpointed blocks of dropped
     * entries are simply re-derived on next touch. */
   private[operators] def reset(): Unit = memo.clear()
+
+  /** Test hook: the scope of each memo entry over `dir`, one element
+    * per entry. */
+  private[operators] def memoScopes(dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    memo.keySet.asScala.toSeq.filter(_.dir == dir).map(_.scope)
+  }
 
   /** Collect a BOUNDED frame into a LocalRelation DataFrame — literal
     * rows in the plan, so consumers pay zero scan jobs and the frame

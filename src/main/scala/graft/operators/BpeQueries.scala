@@ -690,7 +690,7 @@ object BpeQueries {
     * STANDING trained artifact like `bpe_trained` (the unigram-LM
     * tokenizer's model state — SentencePiece ships exactly this table
     * in its .model file): memoized per (corpus), disk-backed under a
-    * store, re-derived inline under SPARK_GRAFT_NO_ARTIFACTS=1. */
+    * store, re-derived inline under `spark.graft.artifacts=off`. */
   private def uniPieces(s: SparkSession, dir: String): Seq[(String, Long)] =
     Artifacts.storedValue(s, dir, "uni_pieces")(uniPiecesBuild(s, dir))(
       encode = t => {

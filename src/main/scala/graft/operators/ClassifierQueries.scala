@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * Σ x_b·(w⁺_b − w⁻_b) + prior, so Spark and the DuckDB oracle agree
   * bit for bit. The weights are COMPUTED BY SPARK EXPRESSIONS on the
   * B-row count frame, so there is no Scala twin of the ladder to
-  * drift ([[fitNb]] collects those same frames for the streaming
-  * closure).
+  * drift (the `QualityStream` twin in src/test collects those same
+  * frames for its scoring closure).
   *
   * Scale: training is one corpus scan → groupBy over B=64 buckets
   * (map-side combined, B rows out); the B-row weight table and 1-row
@@ -61,24 +61,14 @@ object ClassifierQueries {
       .withColumn("b",
         conv(substring(md5(col("tok")), 1, 12), 16, 10).cast("bigint") % Buckets)
 
-  /** The fitted model (per-bucket weights, class prior) as collected
-    * artifacts — the closure an online scorer ships
-    * ([[graft.streaming.QualityStream]]). */
-  private[graft] def fitNb(s: SparkSession, dir: String): (Array[Long], Long) = {
-    val (weights, prior) = nbModel(s, dir)
-    val a = new Array[Long](Buckets)
-    weights.collect().foreach(r => a(r.getLong(0).toInt) = r.getLong(1))
-    (a, prior.head().getLong(0))
-  }
-
   /** The fitted NB model as a STANDING ARTIFACT ([[Artifacts]]):
     * B-row weight table + 1-row prior collected ONCE per dataset into
     * LocalRelations. The earlier keep-it-lazy note below measured a
     * PER-QUERY collect ~2× slower (three extra scheduled jobs per
     * run); amortized across the model's consumers (q100/q104/q120/
-    * q130 + streaming export) the one-time collect wins — later
+    * q130) the one-time collect wins — later
     * queries broadcast literal rows with zero fit jobs. */
-  private def nbModel(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+  private[graft] def nbModel(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     Artifacts.value(s, dir, "nb_model") {
       // lazy: when BOTH store entries exist, the fit never runs; a
       // cold store derives once and writes both standing tables
@@ -91,8 +81,7 @@ object ClassifierQueries {
     * row (pr)). The batch query keeps the whole fit+score pipeline one
     * lazy plan (B-row broadcast joins, zero driver collects — the q93
     * shape; collecting the model to a literal costs three extra
-    * scheduled jobs per run, measured ~2× slower at sf0.1); [[fitNb]]
-    * collects these same frames for the streaming closure. */
+    * scheduled jobs per run, measured ~2× slower at sf0.1). */
   private def fitFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val train = toks(labeled(s, dir).filter(col("doc_id") % TrainMod === 0))
     // every bucket 0..B-1 gets a row (LEFT join off a range) so an

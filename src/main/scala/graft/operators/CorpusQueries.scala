@@ -81,8 +81,8 @@ object CorpusQueries {
       clustersFrom(s, Tables.documents(s, dir).select(col("doc_id").as("id")),
         DedupQueries.jaccardPairs(s, dir)))
 
-  /** Clustering body, reusable against a SHARED jaccard-pair frame
-    * (CorpusPipeline). */
+  /** Clustering body over any node and jaccard-pair frames: the
+    * `cluster_map` artifact and q159's pre-ingest map. */
   private[operators] def clustersFrom(
       s: SparkSession, nodes: DataFrame, jaccard: DataFrame): DataFrame = {
     val pairs = jaccard
@@ -551,8 +551,9 @@ object CorpusQueries {
     grams8Of(Tables.spread(Tables.documents(s, dir), col("doc_id")))
 
   /** The ONE 8-gram kernel over any (doc_id, text) frame — shared with
-    * `streaming.NoveltyStream` so the batch q124 audit and the stream
-    * ingest gate can never disagree on segmentation. */
+    * the `NoveltyStream` twin (beside its spec in src/test) so the batch
+    * q124 audit and the stream ingest gate can never disagree on
+    * segmentation. */
   private[graft] def grams8Of(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("t"))
@@ -1075,8 +1076,7 @@ object CorpusQueries {
   private def q70(s: SparkSession, dir: String): DataFrame =
     funnelFrom(s, dir, DedupQueries.jaccardPairs(s, dir))
 
-  /** Funnel body, reusable against a SHARED jaccard-pair frame
-    * (CorpusPipeline). */
+  /** Funnel body over a given jaccard-pair frame. */
   private[operators] def funnelFrom(
       s: SparkSession, dir: String, jaccard: DataFrame): DataFrame = {
     // token-count stats as PURE ARRAY EXPRESSIONS on the scan (maxRun
@@ -1220,7 +1220,8 @@ object CorpusQueries {
     // same block-write jitter the r13-waist gate removed elsewhere).
     // tot and the posting pass each scan the standing blocks once.
     // Artifacts.pinned keeps the pre-artifact persist in the
-    // NO_ARTIFACTS audit, where the builder would otherwise run twice.
+    // `spark.graft.artifacts=off` mode, where the builder would
+    // otherwise run twice.
     Artifacts.pinned(s, srcGrams8(s, dir)) { sg =>
     val tot = sg.groupBy(col("source")).agg(count(lit(1)).as("n_grams"))
     val keys = ghKeys(s)

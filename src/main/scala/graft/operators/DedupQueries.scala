@@ -305,8 +305,8 @@ object DedupQueries {
   private[operators] def pairStats(s: SparkSession, dir: String): DataFrame =
     pairStatsFrom(postingIndex(s, dir))
 
-  /** Jaccard scoring over a pairStats frame (reusable against a SHARED
-    * materialization — see CorpusPipeline). */
+  /** Jaccard scoring over a pairStats frame (PostingIndexSpec feeds it
+    * a reloaded index). */
   private[operators] def jaccardFrom(stats: DataFrame): DataFrame =
     stats
       .withColumn("jaccard",
@@ -1207,7 +1207,7 @@ object DedupQueries {
     // the per-doc chunk-digest frame is the standing doc_chunks
     // artifact shared with q110 (byte-identical derivation);
     // Artifacts.pinned keeps the pre-artifact single-pass behavior in
-    // the NO_ARTIFACTS audit mode (four plan branches read `docs`:
+    // the `spark.graft.artifacts=off` mode (four plan branches read `docs`:
     // dupH, nd, verdict, tot)
     Artifacts.pinned(s, TextQueries.docChunks(s, dir)) { docs =>
     // Round-14 shape (guide §2.3/§2.4): the old form pushed the FULL

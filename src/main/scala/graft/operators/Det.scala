@@ -10,11 +10,12 @@ import org.apache.spark.sql.functions._
   * (q59 4.7 → 1.6 s warm), but at bench sf0.1 the fixed job is a pure
   * ~0.2–0.3 s regression and its block write amplifies host jitter
   * (r13 verdict: q85 spanning 0.55–2.0 s across runs). The gate keys
-  * on the dataset directory's on-disk bytes — one memoized FS listing,
-  * no Spark job — so small inputs keep their pre-waist single-pass
-  * plans while the 100× replica (and anything larger) gets the
-  * barrier. Results are checkpoint-invariant, so oracle hashes are
-  * identical on both sides of the gate by construction.
+  * on the dataset directory's on-disk bytes — one FS listing memoized
+  * per [[graft.Tables.fingerprint]], no Spark job — so small inputs
+  * keep their pre-waist single-pass plans while the 100× replica (and
+  * anything larger) gets the barrier. Results are checkpoint-invariant,
+  * so oracle hashes are identical on both sides of the gate by
+  * construction.
   *
   * Threshold: sf0.1 is ~17 MB on disk, the 100× replica ~124 MB
   * (row-duplicated data compresses well); 48 MB splits the two with
@@ -26,9 +27,10 @@ object Scale {
 
   val DefaultMinBytes: Long = 48L * 1024 * 1024
 
-  /** Total file bytes under `dir` (recursive listing, memoized). */
+  /** Total file bytes under `dir` (recursive listing, memoized on the
+    * dir and its tables' file state, so an in-place rewrite re-lists). */
   def bytes(s: SparkSession, dir: String): Long =
-    memo.computeIfAbsent(dir, { _ =>
+    memo.computeIfAbsent(s"$dir|${graft.Tables.fingerprint(s, dir)}", { _ =>
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       val it = fs.listFiles(p, true)

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * Structured Streaming parity suite (SURVEY §2.10). Each query here
   * uses the SAME window/aggregation expressions a `readStream` pipeline
   * would (`window()`, `session_window()`), executed in batch mode so the
-  * DuckDB oracle can check them; graft.streaming hosts the streaming
-  * forms. Timestamps surface as epoch millis (BIGINT) — raw timestamp
-  * hashing across engines is precision-fragile.
+  * DuckDB oracle can check them; the streaming forms are twins beside
+  * their specs in src/test's graft.streaming. Timestamps surface as
+  * epoch millis (BIGINT) — raw timestamp hashing across engines is
+  * precision-fragile.
   */
 object EventQueries {
 
@@ -630,10 +631,6 @@ object EventQueries {
             .otherwise(t(3)))
           .otherwise(rest)
       }
-
-  /** Scalar form for streaming closures (same kernel, zero drift). */
-  private[graft] def lnSmallMnatOf(num: Long, den: Long): Long =
-    graft.functions.LnSmallKernel.mnat(num, den)
 
   /** Same ladder as SQL text (for the DuckDB oracles) — generated
     * from the kernel's constant table. */

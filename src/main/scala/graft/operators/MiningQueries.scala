@@ -47,7 +47,7 @@ object MiningQueries {
     * are separate AQE stages that race the cold page cache over the
     * same parquet blocks (r13 SCALE.md top candidate). As standing
     * tables, a warm session reads both from the store and q68 is pure
-    * bounded-frame arithmetic; the NO_ARTIFACTS audit still builds
+    * bounded-frame arithmetic; `spark.graft.artifacts=off` still builds
     * inline through the identical code below. */
   private[operators] def unigramCounts(s: SparkSession, dir: String): DataFrame =
     Artifacts.frame(s, dir, "unigram_counts") {

@@ -83,8 +83,8 @@ object PqQueries {
     * v: array<long> of m·subDim components): K-smallest-id init, then
     * `iters` integer-mean Lloyd rounds. Returns cb[m][k][j] — the
     * driver-held artifact (kilobytes) that ships to executors as a
-    * literal, and to the streaming encoder as a closure
-    * ([[graft.streaming.PqStream]]). */
+    * literal, and to the streaming encoder as a closure (the
+    * `PqStream` twin beside its spec in src/test). */
   private[graft] def trainCodebook(
       vecs: DataFrame, m: Int, subDim: Int, k: Int,
       iters: Int): Array[Array[Array[Long]]] =

@@ -258,8 +258,8 @@ object SelectionQueries {
     }
 
   /** The trained LM as collected artifacts (bigram counts, context
-    * counts, vocab size) — the closure an online scorer ships
-    * ([[graft.streaming.QualityStream]]); CCNet ships its (pruned)
+    * counts, vocab size) — the closure an online scorer ships (the
+    * `QualityStream` twin beside its spec in src/test); CCNet ships its (pruned)
     * KenLM to workers the same way. The maps arrive already pruned
     * to the top-[[LmVocabCap]] alphabet, so they are provably
     * ≤ K² + K entries at ANY corpus size — OOV lookups fall through

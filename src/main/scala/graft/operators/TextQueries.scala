@@ -190,8 +190,8 @@ object TextQueries {
   private[graft] val BoilerW = 3
 
   /** THE stride-W chunk-hash kernel, as one expression string over a
-    * token-array column `t` — q110 (batch) and
-    * [[graft.streaming.BoilerStream]] (incremental) both build on this
+    * token-array column `t` — q110 (batch) and the `BoilerStream`
+    * twin in src/test (incremental) both build on this
     * single text, so their segmentations are byte-identical by
     * construction: the streaming prefix-equivalence pin depends on it.
     * Callers must guard `size(t) >= w` (sequence() would descend). */
@@ -227,7 +227,7 @@ object TextQueries {
   private def q110(s: SparkSession, dir: String): DataFrame = {
     // the standing doc_chunks artifact replaced the old per-query
     // persist + collect-to-LocalRelation dance (Artifacts.pinned keeps
-    // the old single-pass behavior in the NO_ARTIFACTS audit mode)
+    // the old single-pass behavior under `spark.graft.artifacts=off`)
     Artifacts.pinned(s, docChunks(s, dir)) { docs =>
     val segs = docs.select(col("doc_id"), col("source"), explode(col("hs")).as("h"))
     val df = segs.groupBy(col("source"), col("h"))
@@ -314,7 +314,8 @@ object TextQueries {
     * docs); each closing run of length c adds c·mnat(c, N), the
     * finisher closes the last run. q111 (gate query), q70's
     * low_entropy funnel stage, and the scalar twin in
-    * `QualityStream.scoreOne` are held to this same arithmetic. */
+    * `QualityStream.scoreOne` (src/test) are held to this same
+    * arithmetic. */
   private[graft] def entropyFoldExpr(t: String, n: String): String =
     s"""aggregate(array_sort($t),
        |  named_struct('prev', CAST(NULL AS STRING),

@@ -100,18 +100,13 @@ class SchemaContractSpec extends SparkSpec {
   test("events loader names the drift on an unsupported ts type") {
     // an intentional type flip in a temp fixture must produce the
     // NAMED error, not 26 downstream analysis failures
-    val tmp = java.nio.file.Files.createTempDirectory("graft-drift").toString
-    try {
-      import org.apache.spark.sql.functions._
-      spark.range(3).selectExpr("id AS event_id", "CAST(id AS STRING) AS ts",
-          "id AS user_id", "'x' AS event_type", "CAST(id AS DOUBLE) AS value",
-          "'{}' AS props")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/events.parquet")
-      val e = intercept[IllegalStateException](Tables.events(spark, tmp))
-      assert(e.getMessage.contains("events.ts"), e.getMessage)
-      assert(e.getMessage.contains("drifted"), e.getMessage)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
+    val tmp = tempDir("graft-drift")
+    spark.range(3).selectExpr("id AS event_id", "CAST(id AS STRING) AS ts",
+        "id AS user_id", "'x' AS event_type", "CAST(id AS DOUBLE) AS value",
+        "'{}' AS props")
+      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/events.parquet")
+    val e = intercept[IllegalStateException](Tables.events(spark, tmp))
+    assert(e.getMessage.contains("events.ts"), e.getMessage)
+    assert(e.getMessage.contains("drifted"), e.getMessage)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
@@ -14,8 +15,22 @@ object TestSpark {
   lazy val spark: SparkSession = Harness.session(4, 4, "graft-test")
 }
 
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  private val tempDirs = new ConcurrentLinkedQueue[java.io.File]
+
+  /** A fresh directory under the JVM temp dir, named `prefix…`, deleted
+    * with everything in it once the suite has run. */
+  protected def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.asScala.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    finally super.afterAll()
 
   /** `body`'s result and the number of Spark jobs it started. Jobs are
     * told apart by job group; a marker job run after `body` flushes the

@@ -16,7 +16,7 @@ class PlotBundleSpec extends SparkSpec {
   }
 
   test("userPlots writes the 7 reference-named files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-plots").toString
+    val dir = tempDir("graft-plots")
     val out = PlotBundle.userPlots(classified, dir)
     val expected = Set("best_cards", "worst_cards", "tough_opp_cards",
       "easy_opp_cards", "my_deck_types_pie", "opp_deck_types_pie",
@@ -32,7 +32,7 @@ class PlotBundleSpec extends SparkSpec {
   }
 
   test("metaPlots writes the meta pair plus one matchup chart per archetype") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-plots").toString
+    val dir = tempDir("graft-plots")
     val participants = MetaAnalytics.participantTable(classified)
     val deckSummary = MetaAnalytics.metaDeckSummary(participants, minGames = 10)
     val matrix = MetaAnalytics.symmetricMatchupMatrix(classified)

@@ -51,7 +51,7 @@ class WorkflowsSpec extends SparkSpec {
 
   test("Sinks round-trip json/csv/parquet with partitioning") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sinks").toString
+    val dir = tempDir("graft-sinks")
     val df = Seq((1L, "a", 1.5), (2L, "b", 2.5), (3L, "a", 3.5)).toDF("id", "k", "v")
     Sinks.writeJsonDim(df, s"$dir/j")
     Sinks.writeCsv(df, s"$dir/c")

@@ -35,20 +35,18 @@ class DotProductDSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ZipWith}
     import spark.implicits._
     // a one-row embeddings table is enough: only the plan is inspected
-    val dir = java.nio.file.Files.createTempDirectory("q29-plan").toString
-    try {
-      Seq((1L, Seq.fill(64)(0.5f), 0)).toDF("vec_id", "embedding", "label")
-        .write.parquet(s"$dir/embeddings.parquet")
-      val plan = graft.QueryCatalog.byName("q29_cosine_lsh").fn(spark, dir)
-        .queryExecution.optimizedPlan
-      val exprs = plan.flatMap(_.expressions)
-      assert(!exprs.exists(_.exists {
-        case _: ArrayAggregate | _: ZipWith => true
-        case _ => false
-      }), s"HOF fold left in:\n$plan")
-      val planes = exprs.flatMap(_.collect { case d: DotProductD if d.right.foldable => d.right })
-      assert(planes.distinct.size === 8, s"plane dots in:\n$plan")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    val dir = tempDir("q29-plan")
+    Seq((1L, Seq.fill(64)(0.5f), 0)).toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/embeddings.parquet")
+    val plan = graft.QueryCatalog.byName("q29_cosine_lsh").fn(spark, dir)
+      .queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions)
+    assert(!exprs.exists(_.exists {
+      case _: ArrayAggregate | _: ZipWith => true
+      case _ => false
+    }), s"HOF fold left in:\n$plan")
+    val planes = exprs.flatMap(_.collect { case d: DotProductD if d.right.foldable => d.right })
+    assert(planes.distinct.size === 8, s"plane dots in:\n$plan")
   }
 
   test("interpreted eval agrees with codegen") {

@@ -192,8 +192,8 @@ class ArtifactsSpec extends SparkSpec {
 
   test("disk store: artifacts persist as parquet and later sessions read, not rebuild") {
     import spark.implicits._
-    val corpusDir = java.nio.file.Files.createTempDirectory("artstore_data").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("artstore").toString
+    val corpusDir = tempDir("artstore_data")
+    val storeDir = tempDir("artstore")
     def writeDocs(texts: Seq[String]): Unit =
       texts.zipWithIndex
         .map { case (t, i) => (i.toLong, t, "en", "web", t.length.toLong) }
@@ -262,8 +262,8 @@ class ArtifactsSpec extends SparkSpec {
 
   test("disk store: a partial directory without _SUCCESS is rebuilt, not trusted") {
     import spark.implicits._
-    val corpusDir = java.nio.file.Files.createTempDirectory("artpart_data").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("artpart").toString
+    val corpusDir = tempDir("artpart_data")
+    val storeDir = tempDir("artpart")
     Seq(
       ("alpha bravo charlie delta echo foxtrot golf hotel india juliet", 0L),
       ("alpha bravo charlie delta echo foxtrot golf hotel india kilo", 1L))
@@ -296,8 +296,8 @@ class ArtifactsSpec extends SparkSpec {
 
   test("flipping the store conf after first touch re-resolves (memo keys on store)") {
     import spark.implicits._
-    val corpusDir = java.nio.file.Files.createTempDirectory("artflip_data").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("artflip").toString
+    val corpusDir = tempDir("artflip_data")
+    val storeDir = tempDir("artflip")
     Seq(
       ("alpha bravo charlie delta echo foxtrot golf hotel india juliet", 0L),
       ("alpha bravo charlie delta echo foxtrot golf hotel india kilo", 1L))
@@ -331,7 +331,7 @@ class ArtifactsSpec extends SparkSpec {
     // bigram_lm) hold inner frame results whose memo keys include the
     // resolved store; the outer value key must too, or flipping the
     // conf after first touch serves the previously-resolved composition
-    val storeDir = java.nio.file.Files.createTempDirectory("artvalflip").toString
+    val storeDir = tempDir("artvalflip")
     var builds = 0
     def get(): String =
       Artifacts.value(spark, "/tmp/valflip_probe", "valflip_probe") {
@@ -352,8 +352,8 @@ class ArtifactsSpec extends SparkSpec {
 
   test("disk store: a builder-version bump stops matching the old entry and rebuilds") {
     import spark.implicits._
-    val corpusDir = java.nio.file.Files.createTempDirectory("artver_data").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("artver").toString
+    val corpusDir = tempDir("artver_data")
+    val storeDir = tempDir("artver")
     Seq((0L, "a b c"), (1L, "d e f"))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
@@ -410,7 +410,7 @@ class ArtifactsSpec extends SparkSpec {
 
   test("stored VALUE kinds round-trip the store losslessly (PQ, IVF-PQ, BPE, IVF index, rrf)") {
     def deep3(a: Array[Array[Array[Long]]]) = a.map(_.map(_.toSeq).toSeq).toSeq
-    val storeDir = java.nio.file.Files.createTempDirectory("artval").toString
+    val storeDir = tempDir("artval")
     spark.conf.set(Artifacts.ModeKey, storeDir)
     try {
       Artifacts.reset()
@@ -468,9 +468,9 @@ class ArtifactsSpec extends SparkSpec {
 
   test("an in-place rewrite of the input rebuilds frame and stored-value artifacts (memo and store)") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val store = Files.createTempDirectory("artrewrite_store").toString
+    val store = tempDir("artrewrite_store")
     Seq("memo", store).foreach { mode =>
-      val d = Files.createTempDirectory("artrewrite").toString
+      val d = tempDir("artrewrite")
       val docs = Paths.get(s"$d/documents.parquet")
       Files.copy(Paths.get(s"$dir/documents.parquet"), docs)
       def tokens(build: Boolean) =
@@ -482,7 +482,7 @@ class ArtifactsSpec extends SparkSpec {
           val (tokens0, merges0) = (tokens(build = false), merges)
           assert(tokens0 === tokens(build = true) && merges0 === BpeQueries.trainMerges(words(d), 8), mode)
           // rewrite the one file in place: half the rows, text reversed
-          val rows = Files.createTempDirectory("artrewrite_rows").resolve("out").toString
+          val rows = s"${tempDir("artrewrite_rows")}/out"
           graft.Tables.documents(spark, dir).filter(col("doc_id") % 2 === 0)
             .withColumn("text", reverse(col("text")))
             .coalesce(1).write.parquet(rows)
@@ -492,6 +492,9 @@ class ArtifactsSpec extends SparkSpec {
           assert(tokensFresh != tokens0 && mergesFresh != merges0, "the rewrite must change both artifacts")
           assert(tokens(build = false) === tokensFresh, s"$mode: stale doc_tokens served after the rewrite")
           assert(merges === mergesFresh, s"$mode: stale bpe_trained served after the rewrite")
+          val scopes = Artifacts.memoScopes(d)
+          assert(scopes.exists(_.endsWith("doc_tokens_v1")) && scopes.exists(_.endsWith("bpe_trained_v1")) &&
+            scopes.distinct.size === scopes.size, s"$mode: one memo entry per artifact after the rewrite: $scopes")
         } finally Artifacts.reset()
       }
     }

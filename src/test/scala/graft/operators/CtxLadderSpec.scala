@@ -49,7 +49,7 @@ class CtxLadderSpec extends SparkSpec {
   }
 
   test("planted 100+28-token source: exact chunks, padding, contamination") {
-    val dir = java.nio.file.Files.createTempDirectory("ctxladder").toString
+    val dir = tempDir("ctxladder")
     Seq((1L, (1 to 100).map(i => s"a$i").mkString(" "), "en", "s"),
         (2L, (1 to 28).map(i => s"b$i").mkString(" "), "en", "s"))
       .toDF("doc_id", "text", "lang", "source")

@@ -269,7 +269,7 @@ class CurationOpsSpec extends SparkSpec {
     // all-zero row (both the Spark agg and the oracle's agg CTE), not
     // as an empty result
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("q152clean").toString
+    val tmp = tempDir("q152clean")
     Seq(
       (0L, "alpha bravo charlie delta echo foxtrot golf hotel", "en", "web", 48L),
       (1L, "india juliet kilo lima mike november oscar papa", "en", "book", 47L),

@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.{QueryCatalog, SparkSpec}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Branch coverage the driver testdata cannot provide: registered
   * queries run against purpose-built fixture parquet dirs (same table
@@ -20,7 +19,7 @@ class FixtureBranchSpec extends SparkSpec {
   private def q(name: String) = QueryCatalog.all.find(_.name == name).get.fn
 
   test("q70 funnel attributes every stage, first-rejecting-filter order") {
-    val dir = Files.createTempDirectory("funnel_fix").toString
+    val dir = tempDir("funnel_fix")
     val long = (1 to 60).map(i => s"tok$i").mkString(" ")
     val docs = Seq(
       // doc 0/1: exact duplicates (long enough to pass short+repetitive)
@@ -42,7 +41,7 @@ class FixtureBranchSpec extends SparkSpec {
   }
 
   test("q62 floors negative cohort weeks identically to the oracle semantics") {
-    val dir = Files.createTempDirectory("cohort_fix").toString
+    val dir = tempDir("cohort_fix")
     def nanos(date: String): Long =
       java.sql.Timestamp.valueOf(s"$date 12:00:00").getTime * 1000000L
     // user 1 first active 3 days BEFORE the 2024-01-01 epoch: day diff

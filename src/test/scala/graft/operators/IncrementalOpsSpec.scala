@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
@@ -75,7 +73,7 @@ class IncrementalOpsSpec extends SparkSpec {
   }
 
   test("q85 reports zero drift when both windows hold the same distribution") {
-    val tmp = Files.createTempDirectory("drift_fix").toString
+    val tmp = tempDir("drift_fix")
     def nanos(date: String): Long =
       java.sql.Timestamp.valueOf(s"$date 12:00:00").getTime * 1000000L
     // the same 4 values land once before and once after the split
@@ -92,7 +90,7 @@ class IncrementalOpsSpec extends SparkSpec {
   }
 
   private def driftFixture(curVals: Seq[Double]): String = {
-    val tmp = Files.createTempDirectory("psi_fix").toString
+    val tmp = tempDir("psi_fix")
     def nanos(date: String): Long =
       java.sql.Timestamp.valueOf(s"$date 12:00:00").getTime * 1000000L
     val refVals = Seq(1.0, 2.0, 5.0, 9.0)
@@ -119,7 +117,7 @@ class IncrementalOpsSpec extends SparkSpec {
   }
 
   test("q88/q89 surface a type absent from the reference window instead of dropping it") {
-    val tmp = Files.createTempDirectory("psi_newtype").toString
+    val tmp = tempDir("psi_newtype")
     def nanos(date: String): Long =
       java.sql.Timestamp.valueOf(s"$date 12:00:00").getTime * 1000000L
     val vals = Seq(1.0, 2.0, 5.0, 9.0)

@@ -42,7 +42,7 @@ class IndexSizeSpec extends SparkSpec {
   }
 
   test("planted: dense gaps crush under gamma, a rare term stays near-raw") {
-    val dir = java.nio.file.Files.createTempDirectory("idxsize").toString
+    val dir = tempDir("idxsize")
     (0L to 7L).map(i => (i, if (i == 5L) "common rare" else "common", "en", "s"))
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))

@@ -18,7 +18,7 @@ class IvfIndexPruningSpec extends SparkSpec {
     .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
 
   test("writeIndex clusters by cell; searchIndex prunes partitions and matches unpruned") {
-    val idx = java.nio.file.Files.createTempDirectory("ivfidx").toString
+    val idx = tempDir("ivfidx")
     IvfQueries.writeIndex(spark, dir, idx)
 
     val cellDirs = new java.io.File(s"$idx/vectors").listFiles()

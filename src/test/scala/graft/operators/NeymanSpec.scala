@@ -58,7 +58,7 @@ class NeymanSpec extends SparkSpec {
   }
 
   test("planted: a zero-variance source is starved, the varied one takes all") {
-    val dir = java.nio.file.Files.createTempDirectory("neyman").toString
+    val dir = tempDir("neyman")
     val rows =
       (1L to 10L).map(i => (i, "a b c d", "en", "flat")) ++ // every doc 4 tokens
         (11L to 20L).map(i =>

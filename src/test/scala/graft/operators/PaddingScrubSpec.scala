@@ -12,7 +12,7 @@ class PaddingScrubSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeDocs(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("padscrub").toString
+    val dir = tempDir("padscrub")
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -219,7 +219,7 @@ class PipelinePlanShapeSpec extends SparkSpec {
     // live in the builder, pinned below
     val p = finalPlan("q93_dsir_select")
     // the suite convention (q99/q37 pins): assert no CORPUS rescan,
-    // not "no parquet at all" — under SPARK_GRAFT_ARTIFACT_STORE the
+    // not "no parquet at all" — under a `spark.graft.artifacts` store the
     // dsir_logits artifact legitimately reads back as a parquet scan
     assert(!p.contains("documents.parquet") && !p.contains("text#"),
       s"q93 must serve from the standing dsir_logits table:\n$p")
@@ -295,8 +295,9 @@ class PipelinePlanShapeSpec extends SparkSpec {
     // q99 is the cheapest pure consumer: its warm plan must be a
     // per-source rollup of the artifact, never a documents scan
     // assert the DOCUMENTS scan is gone specifically (not any FileScan):
-    // under SPARK_GRAFT_ARTIFACT_STORE the artifact itself legitimately
-    // reads back as a parquet FileScan, and the pin must hold in both modes
+    // under a `spark.graft.artifacts` store path the artifact itself
+    // legitimately reads back as a parquet FileScan, and the pin must
+    // hold in both modes
     val p99 = finalPlan("q99_ppl_filter")
     assert(!p99.contains("documents.parquet") && !p99.contains("text#"),
       s"q99 must read the doc_nll artifact, not re-scan documents:\n$p99")

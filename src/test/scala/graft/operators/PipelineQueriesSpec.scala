@@ -106,7 +106,7 @@ class PipelineQueriesSpec extends SparkSpec {
   test("q77 ranks a doc's rarest frequent token first (hand-built fixture)") {
     // 20-doc corpus: every doc contains 'common'; doc 0 also repeats
     // 'rare' twice → rare has tf=2, df=1 → score 2·20/1 = 40 ≫ common's
-    val tmp = java.nio.file.Files.createTempDirectory("q77fix").toString
+    val tmp = tempDir("q77fix")
     val docs = (0 until 20).map { i =>
       val text = if (i == 0) "rare rare common" else s"common filler$i"
       (i.toLong, text, "en", "src0", text.length.toLong)
@@ -221,7 +221,7 @@ class PipelineQueriesSpec extends SparkSpec {
 
   // ------------------------------------------------------------- q90
   test("q90 merges overlapping duplicated windows into exact token spans") {
-    val tmp = java.nio.file.Files.createTempDirectory("dup_spans").toString
+    val tmp = tempDir("dup_spans")
     def words(n: Int, tag: String) = (0 until n).map(i => s"$tag$i").mkString(" ")
     // docs 1 & 2 share a 14-token run (overlapping 10-windows must merge
     // to 14 tokens, not 5·10); doc 3 is unique; doc 4 is shorter than W

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** The dedup kernel's posting-list intermediate is a real INDEX: write
@@ -18,7 +16,7 @@ class PostingIndexSpec extends SparkSpec {
     DedupQueries.jaccardFrom(stats).collect().toSet.map((r: org.apache.spark.sql.Row) => r.toSeq)
 
   test("parquet round-trip of the posting index reproduces the live pair set") {
-    val tmp = Files.createTempDirectory("posting_idx").toString
+    val tmp = tempDir("posting_idx")
     DedupQueries.postingIndex(spark, dir)
       .write.mode("overwrite").parquet(tmp)
     val live = pairsOf(DedupQueries.pairStats(spark, dir))

@@ -160,7 +160,7 @@ class ProfilingStatsSpec extends SparkSpec {
     expected.foreach { case (s, e) => assert(got(s) === e, s"source $s") }
     // robustness: a planted mega-doc must not move the median gate
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("madfix").toString
+    val tmp = tempDir("madfix")
     val base = (1 to 99).map(i => (i.toLong, Seq.fill(50 + i % 3)("w").mkString(" "), "en", "s"))
     val spiked = base :+ (999L, Seq.fill(100000)("w").mkString(" "), "en", "s")
     spiked.toDF("doc_id", "text", "lang", "source")

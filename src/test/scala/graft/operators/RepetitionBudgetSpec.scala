@@ -67,7 +67,7 @@ class RepetitionBudgetSpec extends SparkSpec {
     // source draws 918 tokens = 9.18 epochs; big gets the remainder
     // top-up (rem 90 vs 20). Hand-computed: over=1, mass=518,
     // effective=9582 of 10100 -> 948712 ppm
-    val dir = java.nio.file.Files.createTempDirectory("repbudget").toString
+    val dir = tempDir("repbudget")
     Seq(
       (1L, Seq.fill(10000)("t").mkString(" "), "en", "big"),
       (2L, Seq.fill(100)("u").mkString(" "), "en", "small"))

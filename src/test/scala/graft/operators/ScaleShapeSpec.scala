@@ -35,4 +35,21 @@ class ScaleShapeSpec extends SparkSpec {
           s"corpus-growing sides must stay AQE-conditional:\n$analyzed")
     }
   }
+
+  test("Scale.bytes sees a table that grew in place under the same dir") {
+    import scala.jdk.CollectionConverters._
+    val d = tempDir("scalebytes")
+    def write(rows: Long): Long = {
+      spark.range(rows).selectExpr("id AS doc_id", "repeat('x', 64) AS text")
+        .coalesce(1).write.mode("overwrite").parquet(s"$d/documents.parquet")
+      java.nio.file.Files.walk(java.nio.file.Paths.get(d)).iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p) && !p.getFileName.toString.startsWith("."))
+        .map(java.nio.file.Files.size).sum
+    }
+    val small = write(10)
+    assert(Scale.bytes(spark, d) === small)
+    val grown = write(100000)
+    assert(grown > small)
+    assert(Scale.bytes(spark, d) === grown, "stale byte total served after an in-place rewrite")
+  }
 }

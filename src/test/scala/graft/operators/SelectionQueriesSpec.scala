@@ -92,9 +92,9 @@ class SelectionQueriesSpec extends SparkSpec {
     // unseen-context cost -ln(1/(0+V)) must exceed every RETAINED
     // bigram's cost -ln((c2+1)/(c1+V)) — pruning can only make rare
     // text more perplexed, never less (junk stays detectable)
-    val oovStep = -EventQueries.lnSmallMnatOf(1L, v)
+    val oovStep = -graft.functions.LnSmallKernel.mnat(1L, v)
     val minSeenStep = c2.map { case ((w1, _), n2) =>
-      -EventQueries.lnSmallMnatOf(n2 + 1L, c1(w1) + v)
+      -graft.functions.LnSmallKernel.mnat(n2 + 1L, c1(w1) + v)
     }.min
     assert(oovStep > minSeenStep,
       s"unseen cost $oovStep mnat must exceed the cheapest seen bigram $minSeenStep")

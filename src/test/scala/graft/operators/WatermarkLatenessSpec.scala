@@ -19,7 +19,7 @@ class WatermarkLatenessSpec extends SparkSpec {
     // arrival order = event_id; lateness vs the running max event time:
     // e3 is 120 s late (dropped only at the 60 s rung), e5 is 4000 s
     // late (dropped at every rung incl. 3600)
-    val dir = java.nio.file.Files.createTempDirectory("lateness").toString
+    val dir = tempDir("lateness")
     Seq(
       (1L, 1000L), (2L, 2000L), (3L, 1880L),
       (4L, 2100L), (5L, -1900L), (6L, 2200L))

@@ -26,7 +26,7 @@ class ZeroNormSpec extends SparkSpec {
     * candidates all-zero. Written as a real parquet dir so the query
     * runs through Tables.embeddings like production. */
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-zeronorm").toString
+    val d = tempDir("graft-zeronorm")
     val rows = (0L to 12L).map { i =>
       val v =
         if (i == 7L) Array.fill(8)(0.0f) // the zero-norm candidate

@@ -21,7 +21,7 @@ class ZipfVocabSpec extends SparkSpec {
   private val panel = Seq(1L, 2L, 4L, 8L, 16L, 32L, 64L)
 
   private def writeDocs(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("zipfvocab").toString
+    val dir = tempDir("zipfvocab")
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -11,8 +11,9 @@ import javax.imageio.ImageIO
   * font rasterization varies across JVMs, geometry does not. */
 class ChartRendererSpec extends SparkSpec {
 
+  private lazy val pngDir = tempDir("graft-chart")
   private def tmpPng(): String =
-    java.nio.file.Files.createTempFile("graft-chart", ".png").toString
+    java.nio.file.Files.createTempFile(java.nio.file.Paths.get(pngDir), "chart", ".png").toString
 
   private def barColorColumns(img: java.awt.image.BufferedImage): Map[Int, Int] = {
     // count bar-colored pixels per x column

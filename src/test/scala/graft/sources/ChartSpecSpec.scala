@@ -50,7 +50,7 @@ class ChartSpecSpec extends SparkSpec {
   test("writeChartSpec writes the file (round trip)") {
     import spark.implicits._
     val df = Seq(("a", 1L)).toDF("k", "v")
-    val path = java.nio.file.Files.createTempDirectory("chartspec").toString + "/out/c.json"
+    val path = tempDir("chartspec") + "/out/c.json"
     ChartSpec.writeChartSpec(ChartSpec.barSpec(df, "t", "k", "v"), path)
     val back = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
     assert(back.contains("vega-lite/v5.json"))

@@ -14,7 +14,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   import spark.implicits._
 
   test("mergeSchema unions v1 and v2 files; old rows null-fill the new column") {
-    val dir = java.nio.file.Files.createTempDirectory("schemaevo").toString
+    val dir = tempDir("schemaevo")
     Seq((1L, "a"), (2L, "b")).toDF("id", "name")
       .write.parquet(s"$dir/day=1")
     Seq((3L, "c", 0.9), (4L, "d", 0.1)).toDF("id", "name", "quality")

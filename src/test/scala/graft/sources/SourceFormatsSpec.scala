@@ -16,7 +16,7 @@ class SourceFormatsSpec extends SparkSpec {
       .orderBy("n_nationkey").collect().map(_.toSeq).toSeq
 
   test("parquet / orc / csv / json round-trips preserve the relation") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-formats").toString
+    val dir = tempDir("graft-formats")
     val expected = sortedRows(nation)
 
     nation.write.mode("overwrite").parquet(s"$dir/p")

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class CheckpointResumeSpec extends SparkSpec {
 
   test("checkpointed parquet-to-parquet stream resumes without loss or duplication") {
-    val base = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val base = tempDir("graft-ckpt")
     val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))

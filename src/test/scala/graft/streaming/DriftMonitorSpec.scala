@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.SparkSpec
@@ -25,7 +24,7 @@ class DriftMonitorSpec extends SparkSpec {
     val store = new DriftStore
     val input = MemoryStream[Event]
     val query = startDriftMonitor(input.toDF(), ref, store,
-      Files.createTempDirectory("drift_ckpt").toString)
+      tempDir("drift_ckpt"))
     try {
       // batch 0: one value per bucket — the reference distribution
       input.addData((0 to 9).map(i => Event(i.toLong, ts(i), 1, "click", i.toDouble)))
@@ -56,7 +55,7 @@ class DriftMonitorSpec extends SparkSpec {
     val store = new DriftStore
     val input = MemoryStream[Event]
     val query = startDriftMonitor(input.toDF(), ref, store,
-      Files.createTempDirectory("drift_ckpt2").toString)
+      tempDir("drift_ckpt2"))
     try {
       // a brand-new event type the reference has never seen — the
       // loudest drift signal; the old inner join made it invisible

@@ -127,7 +127,7 @@ class EventStreamsSpec extends SparkSpec {
     import spark.implicits._
     val input = MemoryStream[Event]
     val store = new UpsertStore
-    val ckpt = java.nio.file.Files.createTempDirectory("upsert_ckpt").toString
+    val ckpt = tempDir("upsert_ckpt")
     val query = startUpsert(input.toDF(), store, ckpt)
     try {
       input.addData(Seq(

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.OutputMode
 class FileStreamSpec extends SparkSpec {
 
   test("parquet file stream with per-file micro-batches matches the batch aggregation") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream")
     // stage events as MULTIPLE time-ordered files (a log) so
     // maxFilesPerTrigger=1 exercises cross-micro-batch state
     // accumulation. FileStreamSource orders files by MODIFICATION time,

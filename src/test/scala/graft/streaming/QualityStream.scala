@@ -1,12 +1,13 @@
 package graft.streaming
 
-import graft.operators.EventQueries
+import graft.functions.LnSmallKernel
+import graft.operators.ClassifierQueries
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Online quality gating — the streaming half of the q99/q100/q111
   * lambda split: the batch jobs train the bigram LM
   * (`SelectionQueries.bigramLm`) and the NB classifier
-  * (`ClassifierQueries.fitNb`); this scores documents the moment they
+  * ([[fitNb]]); this scores documents the moment they
   * land — LM perplexity, NB score, AND the model-free q111 token-
   * entropy gate — with both FROZEN models shipped as plain closure values —
   * exactly how production ingest gates run (CCNet ships a trained
@@ -15,7 +16,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   * Per-doc scoring is a pure function, so the stream is stateless (no
   * shuffle, no state store) and any micro-batch split yields the same
-  * rows. The ln arithmetic is `EventQueries.lnSmallMnatOf` — the
+  * rows. The ln arithmetic is `LnSmallKernel.mnat` — the
   * scalar twin of the batch column ladder, same constants — and
   * QualityStreamSpec pins per-doc EXACT equality (nll, n_bigrams,
   * nb_score) with the batch `docNll`/`docScores` frames, so the two
@@ -40,6 +41,15 @@ object QualityStream {
       c2: Map[(String, String), Long], c1: Map[String, Long], vocab: Long,
       flagMnat: Long, nbWeights: Array[Long], nbPrior: Long)
 
+  /** The fitted NB model (per-bucket weights, class prior) collected
+    * from the batch `nb_model` artifact: the closure this scorer ships. */
+  def fitNb(s: SparkSession, dir: String): (Array[Long], Long) = {
+    val (weights, prior) = ClassifierQueries.nbModel(s, dir)
+    val a = new Array[Long](ClassifierQueries.Buckets)
+    weights.collect().foreach(r => a(r.getLong(0).toInt) = r.getLong(1))
+    (a, prior.head().getLong(0))
+  }
+
   /** Score one document. Tokenization is `split(" ", -1)` — the exact
     * twin of the batch `split(text, ' ')` (keeps empty tokens). */
   private[streaming] def scoreOne(
@@ -52,7 +62,7 @@ object QualityStream {
     while (i < toks.length) {
       val num = m.c2.getOrElse((toks(i - 1), toks(i)), 0L) + 1L
       val den = m.c1.getOrElse(toks(i - 1), 0L) + m.vocab
-      nll -= EventQueries.lnSmallMnatOf(num, den)
+      nll -= LnSmallKernel.mnat(num, den)
       i += 1
     }
     val nbg = math.max(toks.length - 1, 0).toLong
@@ -78,7 +88,7 @@ object QualityStream {
       var r = k + 1
       while (r < sorted.length && sorted(r) == sorted(k)) r += 1
       val c = (r - k).toLong
-      ssum += c * graft.functions.LnSmallKernel.mnat(c, n)
+      ssum += c * LnSmallKernel.mnat(c, n)
       k = r
     }
     val ent = if (n == 0L) 0L else math.max(0L, -ssum) / n

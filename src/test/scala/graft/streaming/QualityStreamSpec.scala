@@ -19,7 +19,7 @@ class QualityStreamSpec extends SparkSpec {
 
   private lazy val model: QualityModel = {
     val (c2, c1, v) = SelectionQueries.bigramLm(spark, dir)
-    val (w, prior) = ClassifierQueries.fitNb(spark, dir)
+    val (w, prior) = QualityStream.fitNb(spark, dir)
     QualityModel(c2, c1, v, SelectionQueries.PplFlagMnat, w, prior)
   }
 
@@ -32,7 +32,7 @@ class QualityStreamSpec extends SparkSpec {
     val viaColumn = pairs.toDF("num", "den")
       .select(EventQueries.lnSmallWeight(col("num"), col("den")).as("w"))
       .collect().map(_.getLong(0)).toSeq
-    val viaScalar = pairs.map { case (n, d) => EventQueries.lnSmallMnatOf(n, d) }
+    val viaScalar = pairs.map { case (n, d) => graft.functions.LnSmallKernel.mnat(n, d) }
     assert(viaScalar === viaColumn)
   }
 
