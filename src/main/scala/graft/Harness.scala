@@ -46,8 +46,7 @@ object Harness {
     *              (A/B at local[32]: 8 beat 32, full suite 48.1 → 42.5 s).
     * @param aqe   A/B knob: overrides every spec's own AQE flag.
     * @param confs A/B knob: runtime-settable session confs — also how a
-    *              run picks the artifact mode (`spark.graft.artifacts`)
-    *              and the wide gram digest (`spark.graft.wideDigest`).
+    *              run picks the artifact mode (`spark.graft.artifacts`).
     * @param reps  timed reps per query (min-of-N in `Bench`).
     * @param benchOut file `Bench` writes its JSON line to.
     * @param plotsDir directory `BattleDemo` writes its chart files to. */
@@ -63,13 +62,25 @@ object Harness {
     }
   }
 
+  private val WideDigestRemoved =
+    "the wide gram digest is removed: every run joins on the 60-bit digest"
+
   /** Env names that used to pick a mode and now fail loudly, each with
-    * its SPARK_GRAFT_CONF spelling: an old recipe must not quietly run
-    * in the default mode instead. */
+    * what to do instead: an old recipe must not quietly run in the
+    * default mode. */
   private val retired = Seq(
-    "SPARK_GRAFT_NO_ARTIFACTS" -> "spark.graft.artifacts=off",
-    "SPARK_GRAFT_ARTIFACT_STORE" -> "spark.graft.artifacts=<absolute store path>",
-    "SPARK_GRAFT_WIDE_DIGEST" -> "spark.graft.wideDigest=1")
+    "SPARK_GRAFT_NO_ARTIFACTS" -> "set SPARK_GRAFT_CONF=\"spark.graft.artifacts=off\" instead",
+    "SPARK_GRAFT_ARTIFACT_STORE" ->
+      "set SPARK_GRAFT_CONF=\"spark.graft.artifacts=<absolute store path>\" instead",
+    "SPARK_GRAFT_WIDE_DIGEST" -> WideDigestRemoved)
+
+  /** Session confs whose second code path is removed: setting one in
+    * SPARK_GRAFT_CONF fails loudly rather than running the one
+    * remaining form. */
+  private val removedConfs = Seq(
+    "spark.graft.wideDigest" -> WideDigestRemoved,
+    "spark.graft.waistMinBytes" ->
+      "the waist threshold override is removed: Scale.big compares against Scale.DefaultMinBytes")
 
   /** SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 4), SPARK_GRAFT_PARTS
     * (default min(cpus, 8)), SPARK_GRAFT_AQE, SPARK_GRAFT_CONF
@@ -79,8 +90,13 @@ object Harness {
   def env: Env = fromEnv(sys.env)
 
   private[graft] def fromEnv(vars: Map[String, String]): Env = {
-    retired.find { case (k, _) => vars.contains(k) }.foreach { case (k, conf) =>
-      throw new IllegalArgumentException(s"$k is retired: set SPARK_GRAFT_CONF=\"$conf\" instead")
+    retired.find { case (k, _) => vars.contains(k) }.foreach { case (k, why) =>
+      throw new IllegalArgumentException(s"$k is retired: $why")
+    }
+    val confs = vars.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(";"))
+      .filter(_.contains("=")).map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    removedConfs.find { case (k, _) => confs.exists(_._1 == k) }.foreach { case (k, why) =>
+      throw new IllegalArgumentException(s"SPARK_GRAFT_CONF sets $k: $why")
     }
     val cpus = vars.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     Env(
@@ -88,8 +104,7 @@ object Harness {
       cpus = cpus,
       parts = vars.get("SPARK_GRAFT_PARTS").map(_.toInt).getOrElse(math.min(cpus, 8)),
       aqe = vars.get("SPARK_GRAFT_AQE"),
-      confs = vars.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(";"))
-        .filter(_.contains("=")).map { kv => val Array(k, v) = kv.split("=", 2); k -> v },
+      confs = confs,
       reps = vars.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt,
       benchOut = vars.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json"),
       plotsDir = vars.getOrElse("SPARK_GRAFT_PLOTS_DIR", "plots"))

@@ -2,7 +2,6 @@ package graft.battle
 
 import graft.operators.{Det, Share, Wld}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Phase 0 global meta analytics (src/analytics/meta_analytics.py,

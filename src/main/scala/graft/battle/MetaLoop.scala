@@ -1,7 +1,6 @@
 package graft.battle
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 /** Phase 0 accumulate-until-converged loop
   * (src/workflows/meta_workflow.py:294-464): deterministic driver-side

@@ -12,9 +12,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * 7/4 — the ln the perplexity/NB quality gates (q99/q100) score
   * with.
   *
-  * This is the NATIVE form of `EventQueries.lnSmallWeightRef`'s
-  * 41×4-branch CaseWhen fold: identical values (the spec pins a
-  * dense grid), but the expression is two child evals + one static
+  * This is the NATIVE form of a 41×4-branch CaseWhen fold (LnSmallSpec
+  * keeps that fold as its reference): identical values (the spec pins
+  * a dense grid), but the expression is two child evals + one static
   * call, so Catalyst plans/codegens it in microseconds where the
   * fold ladder costs ~0.1 s of planning + janino work per column per
   * query. The DuckDB oracles keep the generated CASE text

@@ -221,23 +221,6 @@ object MultimodalOps {
     }
   }
 
-  /** Deterministic fake media generator (xorshift bytes from media_id). */
-  def syntheticMedia(spark: SparkSession, n: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(n.toLong).as[Long].map { id =>
-      var x = id * 2654435761L + 1
-      val bytes = new Array[Byte](256 + (id % 64).toInt)
-      var i = 0
-      while (i < bytes.length) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-        bytes(i) = (x & 0xff).toByte
-        i += 1
-      }
-      val kind = Seq("image", "audio", "video")((id % 3).toInt)
-      MediaRow(id, kind, bytes, 64, 64, 16000, 1000L + id)
-    }
-  }
-
   /** decode + feature-extract with the per-partition batch shape: ONE
     * decoder per partition, streamed over rows (never materializing the
     * partition). */
@@ -250,47 +233,6 @@ object MultimodalOps {
         MediaFeatures(r.media_id, r.kind, r.bytes.length.toLong, decoder.features(decoded))
       }
     }
-  }
-
-  /** "Resize" stub for images: crops/pads the byte payload to the target
-    * size — the plumbing (binary in, binary out, metadata update) is what
-    * a real resample kernel plugs into. */
-  def resize(spark: SparkSession, media: Dataset[MediaRow], targetBytes: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val out = java.util.Arrays.copyOf(r.bytes, targetBytes)
-        r.copy(bytes = out, width = targetBytes / 4, height = 4)
-      }
-    }
-  }
-
-  /** Frame sampling for video: REAL for MJPEG-in-AVI payloads — every
-    * k-th `movi` frame decodes through the JDK JPEG decoder and emits
-    * (media_id, frame_no, frame_bytes = that frame's RGB triplets).
-    * Non-AVI video payloads keep the chunk stand-in (every k-th
-    * 64-byte slice) so the explode shape stays total. */
-  def sampleFrames(spark: SparkSession, media: Dataset[MediaRow], everyK: Int): DataFrame = {
-    import spark.implicits._
-    media.filter(_.kind == "video").mapPartitions { rows =>
-      val decoder = new MediaDecoder
-      rows.flatMap { r =>
-        val isAvi = r.bytes.length >= 12 &&
-          r.bytes(0) == 'R' && r.bytes(1) == 'I' && r.bytes(2) == 'F' &&
-          r.bytes(3) == 'F' && r.bytes(8) == 'A' && r.bytes(9) == 'V' &&
-          r.bytes(10) == 'I' && r.bytes(11) == ' '
-        val payloads =
-          if (isAvi)
-            // each frame through the single-image decode path (RGB for
-            // JPEG payloads, the raw chunk for anything else)
-            try decoder.aviFramePayloads(r.bytes).map(decoder.decode("image", _))
-            catch { case NonFatal(_) => r.bytes.grouped(64).toVector }
-          else r.bytes.grouped(64).toVector
-        payloads.zipWithIndex
-          .filter { case (_, i) => i % everyK == 0 }
-          .map { case (chunk, i) => (r.media_id, i, chunk) }
-      }
-    }.toDF("media_id", "frame_no", "frame_bytes")
   }
 
   /** Feature table as a DataFrame shaped for SimilarityQueries

@@ -45,10 +45,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `dsir_logits` — the per-doc DSIR importance logits (round 14,
   *     q93): computed once per (corpus, target) exactly as DSIR's
   *     published pipeline stores its log-importance weights
-  *   - under `spark.graft.wideDigest=1`, the gram-digest tables store
-  *     as `doc_grams8w` / `src_grams8w` (a second independent 60-bit
-  *     digest column; see CorpusQueries.wideDigest) — distinct names
-  *     so a store never serves one width to the other's session
   *
   * Why: seven registered queries (q97/q109/q128/q142/q150/q152/q153)
   * consume the clustering and each re-derived the full shingle → pair

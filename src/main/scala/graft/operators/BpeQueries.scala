@@ -71,7 +71,7 @@ object BpeQueries {
     * as the left side of the same merge — consumed positions exclude
     * themselves without any carried flag (BpePropertySpec pins this
     * against the explicit skip-2 scan). Shared by the trainer's loop
-    * and [[segmented]] (the tokenizer), so the two cannot drift. */
+    * and [[foldSyms]] (the tokenizer), so the two cannot drift. */
   private def mergeArr(syms: Column, l: String, r: String): Column =
     aggregate(
       syms,
@@ -83,78 +83,51 @@ object BpeQueries {
           .otherwise(concat(out, array(x)))
       })
 
-  /** The segmentation after applying `merges` in order — the learned
-    * TOKENIZER as one lazy narrow plan (K stacked per-row folds; no
-    * windows, no exchanges). One row per (word, token ordinal). */
-  def segmented(
-      words: DataFrame, merges: Seq[(Long, String, String, Long)]): DataFrame = {
-    val folded = merges.foldLeft(
-      words.select(col("w"), col("freq"), charSyms(col("w")).as("syms"))) {
-      case (df, (_, l, r, _)) => df.withColumn("syms", mergeArr(col("syms"), l, r))
-    }
-    folded
-      .select(col("w"), col("freq"), posexplode(col("syms")).as(Seq("pos", "sym")))
-      .select(col("w"), col("freq"), (col("pos") + 1).as("pos"), col("sym"))
-  }
-
   /** The learned merge table for `words` (columns w: string,
     * freq: long): Seq of (step, lhs, rhs, pair_count). Driver-side
     * list — K rows, one collected 1-row argmax per step (the q80
-    * fixed-point pattern).
-    *
-    * AQE is disabled around the loop (restored after): the loop frames
-    * are vocab-sized, so per-stage adaptive re-planning × K steps is
-    * pure latency with nothing to re-optimize. */
-  def trainMerges(
-      words: DataFrame, k: Int): Seq[(Long, String, String, Long)] =
-    trainCore(words, k) { _ => () }
-
-  /** The trainer loop. `finish` runs against the FINAL segmentation
-    * frame (w, freq, syms) while the vocabulary base is still cached —
-    * q92 derives its token dictionary there instead of replaying the
-    * training a second time.
+    * fixed-point pattern). `finish` runs against the FINAL
+    * segmentation frame (w, freq, syms) while the vocabulary base is
+    * still cached — q92 derives its token dictionary there instead of
+    * replaying the training a second time.
     *
     * Only the |V|-row vocabulary base is persisted: each step's plan
     * is the stacked per-row folds over that cache (narrow, ≤ K deep),
     * so there is no per-step persist/unpersist churn and no lineage
-    * blowup to truncate. */
-  private def trainCore(words: DataFrame, k: Int)(
-      finish: DataFrame => Unit): Seq[(Long, String, String, Long)] = {
-    val s = words.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeBefore = s.conf.get(aqeKey, "true")
-    s.conf.set(aqeKey, "false")
-    val base = words
-      .select(col("w"), col("freq"), charSyms(col("w")).as("syms")).persist()
-    var seg = base
-    val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
-    try {
-      var step = 1
-      var exhausted = false
-      while (step <= k && !exhausted) {
-        // pair counting: generator + map-side combine over |V| rows;
-        // the argmax is ONE row to the driver
-        val best = seg
-          .select(col("freq"), explode(pairsOf(col("syms"))).as("p"))
-          .groupBy(col("p.sym").as("sym"), col("p.nxt").as("nxt"))
-          .agg(sum(col("freq")).as("cnt"))
-          .orderBy(col("cnt").desc, col("sym"), col("nxt"))
-          .limit(1).collect()
-        if (best.isEmpty) exhausted = true
-        else {
-          val (l, r, cnt) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-          merges += ((step.toLong, l, r, cnt))
-          seg = seg.withColumn("syms", mergeArr(col("syms"), l, r))
-          step += 1
+    * blowup to truncate. AQE is disabled around the loop: the loop
+    * frames are vocab-sized, so per-stage adaptive re-planning × K
+    * steps is pure latency with nothing to re-optimize. */
+  private[graft] def trainCore(words: DataFrame, k: Int)(
+      finish: DataFrame => Unit): Seq[(Long, String, String, Long)] =
+    QuerySpec.scoped(words.sparkSession, Map("spark.sql.adaptive.enabled" -> "false")) {
+      val base = words
+        .select(col("w"), col("freq"), charSyms(col("w")).as("syms")).persist()
+      var seg = base
+      val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
+      try {
+        var step = 1
+        var exhausted = false
+        while (step <= k && !exhausted) {
+          // pair counting: generator + map-side combine over |V| rows;
+          // the argmax is ONE row to the driver
+          val best = seg
+            .select(col("freq"), explode(pairsOf(col("syms"))).as("p"))
+            .groupBy(col("p.sym").as("sym"), col("p.nxt").as("nxt"))
+            .agg(sum(col("freq")).as("cnt"))
+            .orderBy(col("cnt").desc, col("sym"), col("nxt"))
+            .limit(1).collect()
+          if (best.isEmpty) exhausted = true
+          else {
+            val (l, r, cnt) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+            merges += ((step.toLong, l, r, cnt))
+            seg = seg.withColumn("syms", mergeArr(col("syms"), l, r))
+            step += 1
+          }
         }
-      }
-      finish(seg)
-    } finally {
-      base.unpersist()
-      s.conf.set(aqeKey, aqeBefore)
+        finish(seg)
+      } finally base.unpersist()
+      merges.toSeq
     }
-    merges.toSeq
-  }
 
   /** The weighted vocabulary of the documents corpus. Empty words
     * (consecutive/leading/trailing spaces) are excluded: Spark's
@@ -190,9 +163,9 @@ object BpeQueries {
     * source the corpus compression the learned tokens buy (word count,
     * character count, post-BPE token count, chars/token). The token
     * dictionary is read off the trainer's own final segmentation;
-    * [[segmented]] is the standalone tokenizer for NEW words (same
-    * [[mergeArr]] kernel, so trainer and tokenizer cannot drift —
-    * BpeQueriesSpec applies learned merges to unseen words).
+    * [[foldSyms]] is the tokenizer for NEW words (same [[mergeArr]]
+    * kernel, so trainer and tokenizer cannot drift — BpeQueriesSpec
+    * applies learned merges to unseen words).
     *
     * Scale: tokens-per-word is a |V|-row frame broadcast into the
     * corpus-side word explode — the corpus is scanned once and joins a
@@ -225,7 +198,7 @@ object BpeQueries {
     * scan-side expression — K stacked [[mergeArr]] folds, exactly the
     * trainer's own construction, so dictionary hit and fallback can
     * never disagree. */
-  private def foldSyms(
+  private[graft] def foldSyms(
       merges: Seq[(Long, String, String, Long)], w: Column): Column =
     merges.foldLeft(charSyms(w)) { case (c, (_, l, r, _)) => mergeArr(c, l, r) }
 

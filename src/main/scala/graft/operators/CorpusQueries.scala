@@ -574,48 +574,27 @@ object CorpusQueries {
   /** Per-doc distinct 8-gram DIGESTS as a STANDING ARTIFACT — the
     * corpus-scale explode q55 (decontamination) and q124 (novelty)
     * share; each ran it privately (the #6/#9 warm lines at the 100×
-    * replica). Same 60-bit md5-prefix digest as [[srcGrams8]]: the
-    * downstream membership joins shuffle/broadcast 8-byte longs
-    * instead of ~50-byte gram strings, both engines derive the digest
-    * identically so parity is structural, and at ≥10⁹ grams the
-    * documented widening is a second digest column. Rows are
+    * replica). Same 60-bit md5-prefix digest ([[withGh]]) as
+    * [[srcGrams8]]: the downstream membership joins shuffle/broadcast
+    * 8-byte longs instead of ~50-byte gram strings. Rows are
     * (doc_id, gh) with gh carrying the per-doc STRING-distinct
     * multiplicity (no re-distinct on the digest — both engines agree
     * by construction). */
   private[graft] def docGrams8Frame(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, if (wideDigest(s)) "doc_grams8w" else "doc_grams8")(
-      docGrams8Build(s, dir))
+    Artifacts.frame(s, dir, "doc_grams8")(docGrams8Build(s, dir))
 
-  /** The documented ≥10⁹-gram widening, now BUILT behind a flag: with
-    * session conf `spark.graft.wideDigest=1` (mains set it through
-    * SPARK_GRAFT_CONF) every gram digest carries a SECOND independent 60-bit column
-    * (md5 hex chars 16–30) and all membership joins key on BOTH — 120
-    * bits keeps the birthday expectation ≪ 1 far past 10⁹ distinct
-    * grams, where the single column's guarantee (pinned zero-collision
-    * over the test vocabulary in ArtifactsSpec) runs out. Results are
-    * width-invariant while the narrow digest is collision-free, which
-    * is exactly what WideDigestSpec pins; wide-mode artifacts store
-    * under distinct names so a store never serves one width to a
-    * session configured for the other. */
-  private[graft] def wideDigest(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.wideDigest", "") == "1"
-
-  /** The digest join key set under the configured width. */
-  private def ghKeys(s: SparkSession): Seq[String] =
-    if (wideDigest(s)) Seq("gh", "gh2") else Seq("gh")
-
-  /** Attach the digest column(s) to a frame carrying gram strings `g`. */
-  private def withGh(s: SparkSession, df: DataFrame): DataFrame = {
-    val base = df.withColumn("gh",
-      conv(substring(md5(col("g")), 1, 15), 16, 10).cast("bigint"))
-    if (wideDigest(s))
-      base.withColumn("gh2",
-        conv(substring(md5(col("g")), 16, 15), 16, 10).cast("bigint"))
-    else base
-  }
+  /** Attach the gram digest `gh` to a frame carrying gram strings `g`:
+    * the first 15 md5 hex chars (60 bits) as a BIGINT — the oracle's
+    * own `substr(md5(g), 1, 15)`, so both engines derive it identically
+    * and parity is structural. Over n distinct grams the expected
+    * number of colliding pairs is about n²/2⁶¹ (≪ 1 up to ~10⁸ grams,
+    * ~0.4 at 10⁹; ArtifactsSpec pins zero collisions over the test
+    * vocabulary), and both engines conflate a colliding pair alike. */
+  private def withGh(df: DataFrame): DataFrame =
+    df.withColumn("gh", conv(substring(md5(col("g")), 1, 15), 16, 10).cast("bigint"))
 
   private[graft] def docGrams8Build(s: SparkSession, dir: String): DataFrame =
-    withGh(s, grams8(s, dir)).drop("g")
+    withGh(grams8(s, dir)).drop("g")
 
   private val docGrams8Sql =
     s"""SELECT doc_id, CAST('0x' || substr(md5(g), 1, 15) AS BIGINT) AS gh
@@ -631,14 +610,13 @@ object CorpusQueries {
     * strings, move through the join. */
   private def q55(s: SparkSession, dir: String): DataFrame = {
     val g = docGrams8Frame(s, dir)
-    val keys = ghKeys(s)
     val bench = g.filter(col("doc_id") % 50 === 0)
-      .select(keys.map(col): _*).distinct()
+      .select(col("gh")).distinct()
     val train = g.filter(col("doc_id") % 50 =!= 0)
     // ONE aggregation: broadcast-left-join the (distinct) benchmark
     // fingerprints as a membership flag, count total and hit shingles in
     // the same hash agg — no second pass, no agg-agg join
-    train.join(broadcast(bench.withColumn("hit", lit(1L))), keys, "left")
+    train.join(broadcast(bench.withColumn("hit", lit(1L))), Seq("gh"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
         coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
@@ -1184,8 +1162,7 @@ object CorpusQueries {
     * the corpus-scale pass q122 (exact containment) and q135 (minhash
     * sketch) share. */
   private def srcGrams8(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, if (wideDigest(s)) "src_grams8w" else "src_grams8")(
-      srcGrams8Build(s, dir))
+    Artifacts.frame(s, dir, "src_grams8")(srcGrams8Build(s, dir))
 
   private def srcGrams8Build(s: SparkSession, dir: String): DataFrame =
     Tables.spread(Tables.documents(s, dir), col("doc_id"))
@@ -1197,10 +1174,8 @@ object CorpusQueries {
       .distinct()
       // 60-bit digest join key beside the raw gram: the containment
       // self-join sorts/shuffles 8-byte longs instead of ~50-byte gram
-      // strings (q122 measured n·log n on strings at 100×); both
-      // engines derive it identically so parity is structural, and at
-      // ≥10⁹ grams the wideDigest flag adds the second digest column
-      .transform(df => withGh(s, df))
+      // strings (q122 measured n·log n on strings at 100×)
+      .transform(withGh)
 
   private val srcGrams8Sql =
     """SELECT source, g, CAST('0x' || substr(md5(g), 1, 15) AS BIGINT) AS gh
@@ -1224,7 +1199,6 @@ object CorpusQueries {
     // otherwise run twice.
     Artifacts.pinned(s, srcGrams8(s, dir)) { sg =>
     val tot = sg.groupBy(col("source")).agg(count(lit(1)).as("n_grams"))
-    val keys = ghKeys(s)
     // posting-list pair generation instead of the gh self-join (the
     // q84 kernel shape): ONE shuffle keyed on the digest builds the
     // per-gram source list (≤ S elements, S = |sources|), and the
@@ -1234,7 +1208,7 @@ object CorpusQueries {
     // digest collision the pair count is exactly the join's row-pair
     // count — semantics, and therefore oracle hashes, are unchanged.
     val shared = sg
-      .groupBy(keys.map(col): _*).agg(collect_list(col("source")).as("ss"))
+      .groupBy(col("gh")).agg(collect_list(col("source")).as("ss"))
       .select(explode(expr(
         """flatten(transform(ss, a ->
           |  transform(filter(ss, b -> b != a),
@@ -1471,11 +1445,10 @@ object CorpusQueries {
     * [[docGrams8Frame]] standing artifact (shared with q55). */
   private def q124(s: SparkSession, dir: String): DataFrame = {
     val g = docGrams8Frame(s, dir)
-    val keys = ghKeys(s)
     val held = g.filter(col("doc_id") % 50 === 0)
-    val hits = g.filter(col("doc_id") % 50 =!= 0).select(keys.map(col): _*)
-      .join(broadcast(held), keys)
-      .select(col("doc_id") +: keys.map(col): _*).distinct()
+    val hits = g.filter(col("doc_id") % 50 =!= 0).select(col("gh"))
+      .join(broadcast(held), Seq("gh"))
+      .select(col("doc_id"), col("gh")).distinct()
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
     held.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
       // hits is bounded by |held docs| — broadcast, so the per-doc merge

@@ -102,6 +102,10 @@ object DedupQueries {
       .select(col("doc_id") +: col("n") +: (0 until NumHashes).map(h =>
         element_at(col("mhs"), h + 1).as(s"mh$h")): _*)
 
+  /** MinHash band signatures (doc_id, n, band, bh) of a wide minhash
+    * table: n is the doc's shingle-set size, bh the md5 of the band's
+    * "hh:minhash" pairs joined in h order — byte-identical to the
+    * oracle's string_agg(... ORDER BY h). */
   private def bandsFrom(mh: DataFrame): DataFrame = {
     val bandStructs = (0 until NumHashes / RowsPerBand).map { b =>
       val items = (0 until RowsPerBand).map { r =>
@@ -114,19 +118,6 @@ object DedupQueries {
       .select(col("doc_id"), col("n"), explode(array(bandStructs: _*)).as("p"))
       .select(col("doc_id"), col("n"), col("p.band").as("band"), col("p.bh").as("bh"))
   }
-
-  /** MinHash band signatures of a (doc_id, s) shingle frame:
-    * (doc_id, n, band, bh) — n is the doc's shingle-set size
-    * (piggybacked on the minhash aggregate so no separate sizes pass),
-    * bh the md5 band signature. 16 minhashes as 16 parallel
-    * min-aggregates over the (doc, shingle) rows — no row explosion,
-    * map-side partial agg, ONE shuffle of 16 columns per doc (vs
-    * exploding 16× and shuffling every hash row). Band signature = md5
-    * of "hh:minhash" pairs joined in h order — byte-identical to the
-    * oracle's string_agg(... ORDER BY h). Shared by q25 (candidate
-    * generation) and q103 (the recall harness), so the two cannot
-    * drift. */
-  private def bandsOf(sh: DataFrame): DataFrame = bandsFrom(wideMinhashOf(sh))
 
   /** The wide minhash table as a STANDING ARTIFACT: at corpus scale
     * the shingle-scale min-aggregate runs ONCE and both consumers
@@ -204,7 +195,7 @@ object DedupQueries {
   }
 
   /** Shared band-signature CTE chain (hx → mh → bands) over a `sh`
-    * CTE — the SQL twin of [[bandsOf]], used by q25/q103/q106 so the
+    * CTE — the SQL twin of [[bandSigs]], used by q25/q103/q106 so the
     * three oracles cannot drift. */
   private val bandCtesSql =
     s"""hx AS (
@@ -840,7 +831,7 @@ object DedupQueries {
     * near-dup pairs does the MinHash band-bucket candidate set reach?
     * Both sides are the DEPLOYED kernels, unmodified: truth is the q26
     * inverted-index exact Jaccard over the rare-shingle (df ≤ 25)
-    * universe (every pair ≥ 0.3), candidates are q25's [[bandsOf]] +
+    * universe (every pair ≥ 0.3), candidates are q25's [[bandSigs]] +
     * [[candidatesOf]] over the FULL shingle set — exactly the pairs
     * production LSH would surface. The decile axis is rare-set
     * Jaccard while the signatures minhash the full set, so the curve

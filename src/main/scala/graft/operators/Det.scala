@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   *
   * Threshold: sf0.1 is ~17 MB on disk, the 100× replica ~124 MB
   * (row-duplicated data compresses well); 48 MB splits the two with
-  * ~3× margin each way. `spark.graft.waistMinBytes` overrides for
-  * A/B audits (0 forces every waist on).
+  * ~3× margin each way.
   */
 object Scale {
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -41,8 +40,7 @@ object Scale {
 
   /** True when `dir` is big enough that an eager waist pays for itself. */
   def big(s: SparkSession, dir: String): Boolean =
-    bytes(s, dir) >= s.conf.get("spark.graft.waistMinBytes",
-      DefaultMinBytes.toString).toLong
+    bytes(s, dir) >= DefaultMinBytes
 }
 
 /** Deterministic cross-engine numeric helpers.

@@ -617,21 +617,6 @@ object EventQueries {
   private[graft] def lnSmallWeight(num: Column, den: Column): Column =
     call_function("graft_ln_small", num, den)
 
-  /** The fold-CaseWhen reference form of the same ladder — kept as the
-    * independently-derived executable spec the native expression is
-    * pinned against (LnSmallSpec's dense grid). */
-  private[graft] def lnSmallWeightRef(num: Column, den: Column): Column =
-    (0 to graft.functions.LnSmallKernel.MaxE)
-      .foldRight(lit(graft.functions.LnSmallKernel.Bottom): Column) { (e, rest) =>
-        val t = graft.functions.LnSmallKernel.table(e)
-        when(num * (1L << e) >= den,
-          when(num * (4L << e) < den * 5L, t(0))
-            .when(num * (2L << e) < den * 3L, t(1))
-            .when(num * (4L << e) < den * 7L, t(2))
-            .otherwise(t(3)))
-          .otherwise(rest)
-      }
-
   /** Same ladder as SQL text (for the DuckDB oracles) — generated
     * from the kernel's constant table. */
   private[graft] def lnSmallWeightSql(num: String, den: String): String = {

@@ -143,65 +143,9 @@ object ExtendedQueries {
     * top-20 most-similar pairs (sim ≥ 0.3 floor) reported — the
     * dedup-review workflow, unchanged.
     *
-    * The LSH machinery stays as [[nearDupTopK]]: NearDupRecallSpec
-    * measures its recall on planted duplicates against the exact
-    * all-pairs ground truth, and it remains the right prefilter when an
-    * application needs tunable recall at a FIXED similarity threshold
-    * rather than cell-bounded review candidates.
-    *
     * Oracle: the shared ivfPrefixSql (seed → 2 Lloyd iterations →
     * assignments, every ranking similarity pre-rounded to 1e-6) + the
     * same within-cell pair CTE — deterministic on both engines. */
-  private[operators] val NdTables = 16
-  private[operators] val NdPlanes = 12
-  private val NdSeed = 1000
-
-  /** LSH-prefiltered near-dup top-k over any (vec_id, embedding) frame.
-    * Factored out so NearDupRecallSpec can run it on planted-duplicate
-    * inputs. */
-  private[graft] def nearDupTopK(s: SparkSession, emb: DataFrame, k: Int): DataFrame = {
-    val nShuffle = s.conf.get("spark.sql.shuffle.partitions").toInt
-    // repartition: the testdata parquet is a single row-group → one scan
-    // partition in local mode; the signature kernel below would serialize
-    // on one core without this (at cluster scale the scan is already
-    // multi-partition and this is a cheap narrow-ish shuffle of id+vec).
-    // The explicit partition count matters: a bare repartition(col) is
-    // AQE-coalescible, and at this data size AQE folds it back to ONE
-    // partition — an explicit count pins the parallelism.
-    val base = emb
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("nrm", VectorMath.norm("v"))
-      .repartition(nShuffle, col("vec_id"))
-    // All 16 table codes in one pass: the native LshSignCodes kernel (a
-    // flat double[] plane matrix, one tight codegen loop; LshSignCodesSpec
-    // pins it equal to the composed when(dot > 0) form).
-    val codesCol = expr(s"graft_lsh_codes(v, $NdSeed, $NdTables, $NdPlanes, 64)")
-    // The repartition between the codes Project and the posexplode is a
-    // deliberate optimizer barrier: collapsed into the Generate, the
-    // signature computation leaves whole-stage codegen and runs
-    // interpreted (measured 6× slower). The exchanged rows are compact
-    // (id + 16 ints — vectors stay behind), and the explode output is
-    // reshuffled by (t, bucket) for the join anyway.
-    val sigs = base
-      .select(col("vec_id"), codesCol.as("codes"))
-      .repartition(nShuffle, col("vec_id"))
-      .select(col("vec_id"), posexplode(col("codes")).as(Seq("t", "bucket")))
-    val cands = sigs.as("a")
-      .join(sigs.as("b"),
-        col("a.t") === col("b.t") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .distinct()
-    val va = base.select(col("vec_id").as("vec_a"), col("v").as("va"), col("nrm").as("na"))
-    val vb = base.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("nrm").as("nb"))
-    cands.join(va, Seq("vec_a")).join(vb, Seq("vec_b"))
-      .withColumn("sim", Det.rate(VectorMath.cosine("va", "vb", col("na"), col("nb"))))
-      .filter(col("sim") >= 0.3)
-      .orderBy(col("sim").desc, col("vec_a"), col("vec_b"))
-      .limit(k)
-      .select(col("vec_a"), col("vec_b"), col("sim"))
-  }
-
   private def q39(s: SparkSession, dir: String): DataFrame = {
     val (assigned, _) = IvfQueries.index(s, dir)
     // (round 15) no count() race guard: ivf_assigned is eagerly

@@ -19,9 +19,7 @@ import org.apache.spark.sql.functions._
   * Search: queries probe the nprobe nearest cells, then scan ONLY those
   * cells via an equi-join on cell id — at 100 TB the candidate set per
   * query is |table|·nprobe/K instead of |table|, and the join is a hash
-  * shuffle on cell, never a cross join. Storing vectors clustered by
-  * cell (writeParquet partitionBy(cell)) makes the probe a partition-
-  * pruned scan.
+  * shuffle on cell, never a cross join.
   */
 object IvfQueries {
 
@@ -69,20 +67,6 @@ object IvfQueries {
       * and the normed input vectors (both corpus-scale, both holding
       * full vectors). Call once every returned view is materialized. */
     def release(): Unit = { scored.unpersist(); vectors.unpersist() }
-  }
-
-  /** Build (vec_id, v, nrm, cell) assignments + final centroids.
-    * The assignment frame is MATERIALIZED (eager localCheckpoint) and
-    * the build's internal rk ≤ 2 cache retired before returning — a
-    * lazy filter over the internal persist leaked that cache (full
-    * vectors) until clearCache, because callers only ever saw this
-    * wrapper's views (r13 ADVICE). Centroids return persisted, as
-    * before (K rows). */
-  def buildIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val b = buildIndexFull(s, dir)
-    val assigned = b.assigned.localCheckpoint(true)
-    b.release()
-    (assigned, b.centroids)
   }
 
   /** Build assignments + centroids + the top-2 margin frame in ONE
@@ -153,7 +137,7 @@ object IvfQueries {
     // vectors stay cached for the final assign (the caller's first
     // action materializes it); the per-query session hygiene is
     // Verify/Bench clearCache — only the per-ITERATION caches, which
-    // would stack inside a single buildIndex, are retired eagerly above.
+    // would stack inside a single buildIndexFull, are retired eagerly above.
     // The final pass keeps rk ≤ 2 (not rk = 1): the runner-up row is
     // free here and IS q123's separation term — per vector,
     // a_sim = rk1.sim (the argmax the assignment is defined by) and
@@ -186,8 +170,7 @@ object IvfQueries {
     * Assignments are a corpus-sized frame artifact (checkpointed, or
     * a store parquet table); centroids collapse to a K-row
     * LocalRelation — both DISK-BACKED since round 10, so a warm
-    * session never re-trains (r9 verdict #6). [[writeIndex]] keeps
-    * the explicit cell-partitioned export path. */
+    * session never re-trains (r9 verdict #6). */
   private[operators] def index(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val p = indexFull(s, dir)
     (p.assigned, p.centroids)
@@ -217,47 +200,6 @@ object IvfQueries {
       built.foreach { b => b.release(); b.centroids.unpersist() }
       IvfParts(a, c, m)
     }
-
-  /** Persist the IVF index with vectors CLUSTERED BY CELL — the layout
-    * that turns every probe into a partition-pruned scan: a search that
-    * probes nprobe of K cells reads nprobe/K of the table from storage
-    * (PartitionFilters on `cell`, proven in IvfIndexPruningSpec), which
-    * is the entire point of IVF at 100 TB. Centroids are a tiny side
-    * table read whole and broadcast at search time. */
-  def writeIndex(s: SparkSession, dir: String, indexPath: String): Unit = {
-    val b = buildIndexFull(s, dir)
-    graft.sources.Sinks.writeParquet(b.assigned, s"$indexPath/vectors", partitionBy = Seq("cell"))
-    graft.sources.Sinks.writeParquet(b.centroids, s"$indexPath/centroids")
-    b.release()
-    b.centroids.unpersist()
-  }
-
-  /** Search a persisted index: probe ranking against the broadcast
-    * centroid table, then an IN-filter on the partition column — the
-    * scan touches only the probed cell directories. */
-  def searchIndex(s: SparkSession, indexPath: String, queries: DataFrame,
-      nprobe: Int = NProbe, topK: Int = TopK): DataFrame = {
-    val centroids = s.read.parquet(s"$indexPath/centroids")
-    val probes = queries.crossJoin(broadcast(centroids))
-      .withColumn("csim", Det.rate(VectorMath.cosine("qv", "cv", col("qn"), col("cnrm"))))
-      .withColumn("prk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("csim").desc, col("cell"))))
-      .filter(col("prk") <= nprobe)
-      .select(col("qid"), col("qv"), col("qn"), col("cell"))
-    val cells = probes.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by K
-    val vectors = s.read.parquet(s"$indexPath/vectors")
-      .filter(col("cell").isin(cells.toSeq: _*)) // partition-pruned scan
-      .select(col("vec_id").as("cid"), col("v").as("cv2"), col("nrm").as("cn"), col("cell"))
-    probes.join(vectors, Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn("sim", Det.rate(VectorMath.cosine("qv", "cv2", col("qn"), col("cn"))))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))).cast("long"))
-      .filter(col("rn") <= topK)
-      .select(col("qid"), col("rn"), col("cid"), col("sim"), col("cell").cast("long").as("cell"))
-      .orderBy(col("qid"), col("rn"))
-  }
 
   /** q42: nprobe ANN search for the sampled query set. */
   private def q42(s: SparkSession, dir: String): DataFrame = {
@@ -318,7 +260,7 @@ object IvfQueries {
        |)""".stripMargin
 
   /** Shared oracle prefix: seed + both Lloyd iterations → final
-    * assignments CTE `asgf`. Replicates buildIndex exactly; soundness
+    * assignments CTE `asgf`. Replicates buildIndexFull exactly; soundness
     * rests on the same pre-rounding discipline as the Spark side —
     * centroid components and every similarity used for ranking are
     * rounded to 1e-6 before comparison, so assignments cannot diverge
@@ -651,9 +593,10 @@ object IvfQueries {
         -> (1 << 20).toString)),
     QuerySpec("q123_cluster_margin", Some(q123Sql), q123),
     QuerySpec("q157_label_noise", Some(q157Sql), q157, aqe = false,
-      // graft_topk groups-per-task must fit the object-agg hash map
-      // (1M keys ≈ 150 MB of 10-long buffers; past it the sort-based
-      // fallback is the correct spill path)
+      // graft_cell_knn groups by IVF cell: the cells per task must fit
+      // the object-agg hash map (buffers are input-bounded, so a high
+      // threshold is memory-safe; past it the sort-based fallback is
+      // the correct spill path)
       confs = Map("spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
         -> (1 << 20).toString)),
   )

@@ -91,10 +91,11 @@ object PqQueries {
     trainCore(vecs, m, subDim, k, iters)(_ => ())
 
   /** The trainer loop. `finish` runs against the still-cached input
-    * frame — adcTopK fetches its query vector there instead of paying
-    * a second corpus scan after the cache is gone (the q92 hook
+    * frame — [[pqModel]] fetches its query panel there instead of
+    * paying a second corpus scan after the cache is gone (the q92 hook
     * pattern). An input the caller already persisted is left alone on
-    * exit (ivfpqTopK holds one cache across both training stages). */
+    * exit ([[ivfpqTrain]] holds one cache across both training
+    * stages). */
   private def trainCore(
       vecs: DataFrame, m: Int, subDim: Int, k: Int, iters: Int)(
       finish: DataFrame => Unit): Array[Array[Array[Long]]] = {
@@ -152,47 +153,6 @@ object PqQueries {
         (acc.getField("qerr") + s.getField("d")).as("qerr")))
     vecs.select(col("vec_id"), explode(array(enc)).as("e"))
       .select(col("vec_id"), col("e.codes").as("codes"), col("e.qerr").as("qerr"))
-  }
-
-  /** The ADC pipeline (see object doc): train, then answer the query
-    * with asymmetric distances over the codes — a projection-only
-    * final pass. */
-  private[operators] def adcTopK(
-      vecs: DataFrame, m: Int, subDim: Int, k: Int, iters: Int,
-      topK: Int, queryId: Long): DataFrame = {
-    // the query vector is fetched through the trainer's finish hook
-    // while the training cache is live — no post-training corpus scan
-    var q0: Array[Long] = null
-    val cent = trainCore(vecs, m, subDim, k, iters) { pts =>
-      q0 = pts.filter(col("vec_id") === queryId).head().getSeq[Long](1).toArray
-    }
-    adcApply(vecs, cent, q0, m, subDim, k, topK, queryId)
-  }
-
-  /** The ADC scoring pass against an ALREADY-TRAINED codebook — the
-    * index-serving stage, split from training so q96 can run it off
-    * the [[pqModel]] standing artifact (nobody retrains a PQ index
-    * per query). */
-  private def adcApply(
-      vecs: DataFrame, cent: Array[Array[Array[Long]]], q0: Array[Long],
-      m: Int, subDim: Int, k: Int, topK: Int, queryId: Long): DataFrame = {
-    // ---- ADC: the query meets each codebook entry once (driver-side
-    // lut), the corpus only through its codes ----
-    val lut: Array[Array[Long]] = Array.tabulate(m, k) { (mm, kk) =>
-      (0 until subDim).map { j =>
-        val d = q0(mm * subDim + j) - cent(mm)(kk)(j); d * d
-      }.sum
-    }
-    val lutLit = typedlit(lut.map(_.toSeq).toSeq)
-    val cl = codebookLit(cent)
-    val adc = aggregate(
-      transform(sequence(lit(0), lit(m - 1)), mm =>
-        element_at(element_at(lutLit, mm + 1), codeFor(cl, mm, subDim, k) + 1)),
-      lit(0L), (acc, x) => acc + x)
-    vecs.select(col("vec_id"), adc.as("adc_dist"))
-      .filter(col("vec_id") =!= queryId)
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(topK)
   }
 
   // ---------------------------------------------------------------- q96
@@ -264,31 +224,41 @@ object PqQueries {
       }.toArray
     }.toArray
 
-  private def q96(s: SparkSession, dir: String): DataFrame = {
-    val (cent, panel) = pqModel(s, dir)
-    val q0 = panel.find(_._1 == 0L).get._2
-    // Serve the query off the STANDING codes ([[pqCodes]], q101's
-    // index table): ADC = Σ_m lut[m][code_m] is a projection over the
-    // M-byte codes; the per-row argmin re-encode of the whole corpus
-    // (the previous adcApply path — the heavy map work q96 paid every
-    // run) happens once per dataset at index build. Identical output:
-    // the stored codes are the same assignStruct argmin the inline
-    // fold computed, and the oracle scores through its own codes CTE.
-    val lut: Array[Array[Long]] = Array.tabulate(M, K) { (mm, kk) =>
-      (0 until SubDim).map { j =>
-        val d = q0(mm * SubDim + j) - cent(mm)(kk)(j); d * d
+  /** ADC (see object doc) over stored codes (vec_id, codes) against a
+    * trained codebook cb[m][k][j]: the query meets each codebook entry
+    * once in a driver-side lut, and ADC = Σ_m lut[m][code_m] is a
+    * projection over the M-byte codes — no per-row argmin re-encode.
+    * Returns the `topK` nearest (vec_id, adc_dist), query excluded,
+    * (adc_dist, vec_id) ascending. */
+  private[operators] def adcTopK(
+      codes: DataFrame, cb: Array[Array[Array[Long]]], q0: Array[Long],
+      queryId: Long, topK: Int): DataFrame = {
+    val subDim = cb(0)(0).length
+    val lut: Array[Array[Long]] = Array.tabulate(cb.length, cb(0).length) { (mm, kk) =>
+      (0 until subDim).map { j =>
+        val d = q0(mm * subDim + j) - cb(mm)(kk)(j); d * d
       }.sum
     }
     val lutLit = typedlit(lut.map(_.toSeq).toSeq)
-    pqCodes(s, dir)
+    codes
       .select(col("vec_id"),
-        (0 until M).map(mm =>
+        cb.indices.map(mm =>
           element_at(element_at(lutLit, mm + 1),
             element_at(col("codes"), mm + 1) + 1))
           .reduce(_ + _).as("adc_dist"))
-      .filter(col("vec_id") =!= 0L)
+      .filter(col("vec_id") =!= queryId)
       .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(TopK)
+      .limit(topK)
+  }
+
+  /** q96 serves its query off the STANDING codes ([[pqCodes]], q101's
+    * index table): the per-row argmin encode of the whole corpus
+    * happens once per dataset at index build. The stored codes are the
+    * same assignStruct argmin the trainer assigns with, and the oracle
+    * scores through its own codes CTE. */
+  private def q96(s: SparkSession, dir: String): DataFrame = {
+    val (cent, panel) = pqModel(s, dir)
+    adcTopK(pqCodes(s, dir), cent, panel.find(_._1 == 0L).get._2, 0L, TopK)
   }
 
   // ------------------------------------------------- oracle generators
@@ -415,14 +385,13 @@ object PqQueries {
   private val NProbe = 2
   private val Dim = M * SubDim
 
-  /** The IVF-PQ pipeline over a pre-quantized vector frame —
-    * parameterized so the spec can pin the cells=1 degenerate case
-    * exactly equal to flat PQ (residual encoding is a constant integer
-    * shift there, and every stage is shift-exact). */
-  /** The coarse/fine training stage of [[ivfpqTopK]], factored so q98
-    * can run it ONCE per dataset as a standing artifact. Returns
-    * (coarse codebook, fine residual codebook, query vector). */
-  private def ivfpqTrain(
+  /** The IVF-PQ training stage over a pre-quantized vector frame, run
+    * ONCE per dataset as q98's standing artifact. Returns (coarse
+    * codebook, fine residual codebook, query vector). Parameterized so
+    * the spec can pin the cells=1 degenerate case exactly equal to
+    * flat PQ (residual encoding is a constant integer shift there, and
+    * every stage is shift-exact). */
+  private[operators] def ivfpqTrain(
       vecs: DataFrame, cells: Int, m: Int, subDim: Int, k: Int,
       iters: Int, queryId: Long)
       : (Array[Array[Array[Long]]], Array[Array[Array[Long]]], Array[Long]) = {
@@ -461,19 +430,10 @@ object PqQueries {
           element_at(element_at(element_at(ccl, lit(1)), col("cell") + 1),
             j + 1)).as("v"))
 
-  private[operators] def ivfpqTopK(
-      vecs: DataFrame, cells: Int, nprobe: Int, m: Int, subDim: Int,
-      k: Int, iters: Int, topK: Int, queryId: Long): DataFrame = {
-    val (coarse, fine, q0) =
-      ivfpqTrain(vecs, cells, m, subDim, k, iters, queryId)
-    ivfpqApply(vecs, coarse, fine, q0, cells, nprobe, m, subDim, k,
-      topK, queryId)
-  }
-
   /** The probe + ADC serving stage against an already-trained IVF-PQ
     * model — split from training so q98 runs off the standing
     * artifact. */
-  private def ivfpqApply(
+  private[operators] def ivfpqApply(
       vecs: DataFrame, coarse: Array[Array[Array[Long]]],
       fine: Array[Array[Array[Long]]], q0: Array[Long], cells: Int,
       nprobe: Int, m: Int, subDim: Int, k: Int, topK: Int,

@@ -174,15 +174,14 @@ object SelectionQueries {
     * through the ordinary unseen-smoothing path, so rare/junk text
     * gets HIGHER perplexity under the pruned model — the same reason
     * CCNet ships a *pruned* KenLM. This is what bounds the collected
-    * streaming artifact ([[bigramLm]]) at O(K²) regardless of corpus
+    * model ([[lmModel]]) at O(K²) regardless of corpus
     * size. K=24 binds against the synthetic corpus's 31-token train
     * vocab so the prune path is exercised at every sf; production
     * would set 10⁵–10⁶. */
   private[graft] val LmVocabCap = 24
 
   /** The LM-fit frames: (bg — bigram rows over ALL docs, c2t, c1t,
-    * vt — counts/vocab off the train split). Shared by the batch
-    * scorer and [[bigramLm]] (the streaming model export). */
+    * vt — counts/vocab off the train split) behind [[lmModel]]. */
   // token array materialized below the spread exchange (q93 note);
   // single-token docs produce no bigrams and drop out, same as the
   // oracle's empty generate_series. Train-side frames filter BEFORE
@@ -232,7 +231,7 @@ object SelectionQueries {
       .join(broadcast(vocab.withColumnRenamed("tok", "w1")), Seq("w1"), "left_semi")
       .join(broadcast(vocab.withColumnRenamed("tok", "w2")), Seq("w2"), "left_semi")
       // semi joins hoist their key to column 0 — restore (w1, w2, c2) so
-      // positional consumers ([[bigramLm]]'s collect) read true key order
+      // positional consumers (the collected model) read true key order
       .select(col("w1"), col("w2"), col("c2"))
     val c1t = c1Full
       .join(broadcast(vocab.withColumnRenamed("tok", "w1")), Seq("w1"), "left_semi")
@@ -246,7 +245,7 @@ object SelectionQueries {
     * every scorer (q99/q112/q130/q149/q150 and the NB/gate family all
     * score under this one model; each re-fitting the train split per
     * query was the round-7 perf audit's LM finding). */
-  private def lmModel(
+  private[graft] def lmModel(
       s: SparkSession, dir: String): (DataFrame, DataFrame, Long) =
     Artifacts.value(s, dir, "bigram_lm") {
       // lazy: a warm store serves all three standing tables without
@@ -256,21 +255,6 @@ object SelectionQueries {
         Artifacts.localFrame(s, dir, "lm_contexts")(f._3),
         Artifacts.localFrame(s, dir, "lm_vocab")(f._4).head().getLong(0))
     }
-
-  /** The trained LM as collected artifacts (bigram counts, context
-    * counts, vocab size) — the closure an online scorer ships (the
-    * `QualityStream` twin beside its spec in src/test); CCNet ships its (pruned)
-    * KenLM to workers the same way. The maps arrive already pruned
-    * to the top-[[LmVocabCap]] alphabet, so they are provably
-    * ≤ K² + K entries at ANY corpus size — OOV lookups fall through
-    * `getOrElse` to the unseen-smoothing path scorer-side. */
-  private[graft] def bigramLm(
-      s: SparkSession, dir: String): (Map[(String, String), Long], Map[String, Long], Long) = {
-    val (c2t, c1t, v) = lmModel(s, dir)
-    (c2t.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap,
-      c1t.collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-      v)
-  }
 
   /** Per-doc NLL frame (source, doc_id, nll, nbg) as a STANDING
     * ARTIFACT: corpus-scale but NARROW (4 columns, one row per doc —
@@ -759,7 +743,6 @@ object SelectionQueries {
     * CommonCrawl snapshot. */
   private def q145(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val whole = Window.partitionBy().rowsBetween(Long.MinValue, Long.MaxValue)
     val walk = Window.partitionBy(col("source"))
       .orderBy(col("pri"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, 0)

@@ -722,9 +722,14 @@ object TextQueries {
   /** The spine builder, exposed so TextGatesPlanShapeSpec can pin the
     * narrow-rank-window discipline on the BUILD plan (the token
     * counting projects text away BEFORE the per-source sort). */
-  private[operators] def docSpineBuild(s: SparkSession, dir: String): DataFrame = {
+  private[operators] def docSpineBuild(s: SparkSession, dir: String): DataFrame =
+    spineOf(Tables.spread(Tables.documents(s, dir), col("doc_id")))
+
+  /** The spine of any (source, doc_id, text) frame — HeapsLawSpec
+    * feeds planted corpora through this and [[vocabOf]]. */
+  private[operators] def spineOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    Tables.spread(Tables.documents(s, dir), col("doc_id"))
+    docs
       .select(col("source"), col("doc_id"),
         size(expr("filter(split(text, ' '), x -> x <> '')"))
           .cast("long").as("tok"))
@@ -740,13 +745,16 @@ object TextQueries {
     * count from scratch before round 10. Vocabulary-scale state;
     * corpus-scale only on the map side. */
   private[operators] def srcVocab(s: SparkSession, dir: String): DataFrame =
-    Artifacts.frame(s, dir, "src_vocab") {
-      Tables.spread(Tables.documents(s, dir), col("doc_id"))
-        .select(col("source"), col("doc_id"), explode(toks).as("term"))
-        .filter(col("term") =!= "")
-        .groupBy(col("source"), col("term"))
-        .agg(count(lit(1)).as("c"), min(col("doc_id")).as("fd"))
-    }
+    Artifacts.frame(s, dir, "src_vocab")(
+      vocabOf(Tables.spread(Tables.documents(s, dir), col("doc_id"))))
+
+  /** The per-source vocabulary of any (source, doc_id, text) frame. */
+  private[operators] def vocabOf(docs: DataFrame): DataFrame =
+    docs
+      .select(col("source"), col("doc_id"), explode(toks).as("term"))
+      .filter(col("term") =!= "")
+      .groupBy(col("source"), col("term"))
+      .agg(count(lit(1)).as("c"), min(col("doc_id")).as("fd"))
 
   /** The per-source vocabulary GROWTH CURVE at the HeapsC checkpoint
     * ladder — (source, crk, d, nn, v), bounded (≤ HeapsC·|S| rows), as
@@ -760,30 +768,12 @@ object TextQueries {
   private def q163(s: SparkSession, dir: String): DataFrame =
     fitGrowth(growthCurve(s, dir))
 
-  /** The q163 kernel over a (source, doc_id, t) frame — factored so
-    * the spec can feed planted closed- vs open-vocabulary corpora and
-    * check the fitted β orders them. Derives the spine + vocab frames
-    * inline; the registered q163 reads the standing artifacts. */
-  private[operators] def heapsFit(s: SparkSession, docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spine = docs
-      .select(col("source"), col("doc_id"), size(col("t")).cast("long").as("tok"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("source")).orderBy(col("doc_id"))).cast("long"))
-    val vocab = docs
-      .select(col("source"), col("doc_id"), explode(col("t")).as("term"))
-      .filter(col("term") =!= "")
-      .groupBy(col("source"), col("term"))
-      .agg(count(lit(1)).as("c"), min(col("doc_id")).as("fd"))
-    fitGrowth(growthFrom(s, spine, vocab))
-  }
-
   /** Growth-curve derivation off the spine/vocab frames. The rank
     * ladder translates to doc_id thresholds with a FILTER on the
     * spine's standing rank (rk = crk) — no window anywhere in this
     * plan; cumulative token/vocab values at the ≤ HeapsC checkpoints
     * are conditional aggregates against the tiny threshold frame. */
-  private def growthFrom(s: SparkSession, spine: DataFrame, vocab: DataFrame): DataFrame = {
+  private[operators] def growthFrom(s: SparkSession, spine: DataFrame, vocab: DataFrame): DataFrame = {
     import s.implicits._
     val dF = spine.groupBy(col("source")).agg(count(lit(1)).as("d"))
     val ladder = dF.crossJoin((1L to HeapsC).toDF("c"))
@@ -808,7 +798,7 @@ object TextQueries {
   }
 
   /** The exact Q20 log-log fit + totals over a growth curve. */
-  private def fitGrowth(curve: DataFrame): DataFrame = {
+  private[operators] def fitGrowth(curve: DataFrame): DataFrame = {
     val pts = curve
       .filter(col("nn") >= 1L && col("v") >= 1L)
       .withColumn("x", expr("graft_log2q20(nn, 1L)"))

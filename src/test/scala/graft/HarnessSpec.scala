@@ -82,12 +82,19 @@ class HarnessSpec extends SparkSpec {
     val conf = Harness.fromEnv(Map("SPARK_GRAFT_CONF" -> "spark.graft.artifacts=off;a=b=c"))
     assert(conf.confs === Seq("spark.graft.artifacts" -> "off", "a" -> "b=c"))
     Seq(
-      "SPARK_GRAFT_NO_ARTIFACTS" -> "spark.graft.artifacts=off",
-      "SPARK_GRAFT_ARTIFACT_STORE" -> "spark.graft.artifacts=",
-      "SPARK_GRAFT_WIDE_DIGEST" -> "spark.graft.wideDigest=1").foreach { case (name, spelling) =>
+      "SPARK_GRAFT_NO_ARTIFACTS" -> "SPARK_GRAFT_CONF=\"spark.graft.artifacts=off",
+      "SPARK_GRAFT_ARTIFACT_STORE" -> "SPARK_GRAFT_CONF=\"spark.graft.artifacts=",
+      "SPARK_GRAFT_WIDE_DIGEST" -> "wide gram digest is removed").foreach { case (name, hint) =>
       val ex = intercept[IllegalArgumentException](Harness.fromEnv(Map(name -> "1")))
-      assert(ex.getMessage.contains(name) && ex.getMessage.contains(s"SPARK_GRAFT_CONF=\"$spelling"),
-        ex.getMessage)
+      assert(ex.getMessage.contains(name) && ex.getMessage.contains(hint), ex.getMessage)
+    }
+  }
+
+  test("env fails loudly on a removed conf inside SPARK_GRAFT_CONF") {
+    Seq("spark.graft.wideDigest", "spark.graft.waistMinBytes").foreach { k =>
+      val ex = intercept[IllegalArgumentException](Harness.fromEnv(
+        Map("SPARK_GRAFT_CONF" -> s"spark.graft.artifacts=off;$k=1")))
+      assert(ex.getMessage.contains(k) && ex.getMessage.contains("removed"), ex.getMessage)
     }
   }
 }

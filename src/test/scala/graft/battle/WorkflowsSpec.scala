@@ -1,7 +1,6 @@
 package graft.battle
 
 import graft.SparkSpec
-import graft.sources.Sinks
 import org.apache.spark.sql.functions._
 
 class WorkflowsSpec extends SparkSpec {
@@ -47,21 +46,5 @@ class WorkflowsSpec extends SparkSpec {
     val s2 = PlayerSampler.sampleUnused(players, used2, 10, "tag", "loop2")
       .collect().map(_.getLong(0)).toSeq
     assert(s2.toSet.intersect(s1.toSet).isEmpty)
-  }
-
-  test("Sinks round-trip json/csv/parquet with partitioning") {
-    import spark.implicits._
-    val dir = tempDir("graft-sinks")
-    val df = Seq((1L, "a", 1.5), (2L, "b", 2.5), (3L, "a", 3.5)).toDF("id", "k", "v")
-    Sinks.writeJsonDim(df, s"$dir/j")
-    Sinks.writeCsv(df, s"$dir/c")
-    Sinks.writeParquet(df, s"$dir/p", partitionBy = Seq("k"))
-    assert(spark.read.json(s"$dir/j").count() === 3)
-    assert(spark.read.option("header", "true").csv(s"$dir/c").count() === 3)
-    val p = spark.read.parquet(s"$dir/p")
-    assert(p.count() === 3)
-    // partition pruning: only one directory read for k=a
-    val pruned = p.filter(col("k") === "a")
-    assert(pruned.count() === 2)
   }
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.operators.EventQueries
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Native `graft_ln_small` vs the independently-derived fold-CaseWhen
@@ -11,6 +12,21 @@ import org.apache.spark.sql.functions._
 class LnSmallSpec extends SparkSpec {
 
   import spark.implicits._
+
+  /** The fold-CaseWhen reference form of the ladder: the
+    * independently-derived executable spec the native expression is
+    * pinned against. */
+  private def lnSmallWeightRef(num: Column, den: Column): Column =
+    (0 to LnSmallKernel.MaxE)
+      .foldRight(lit(LnSmallKernel.Bottom): Column) { (e, rest) =>
+        val t = LnSmallKernel.table(e)
+        when(num * (1L << e) >= den,
+          when(num * (4L << e) < den * 5L, t(0))
+            .when(num * (2L << e) < den * 3L, t(1))
+            .when(num * (4L << e) < den * 7L, t(2))
+            .otherwise(t(3)))
+          .otherwise(rest)
+      }
 
   private def grid: Seq[(Long, Long)] = {
     val nums = Seq(1L, 2L, 3L, 4L, 5L, 7L, 9L, 63L, 64L, 65L, 999L,
@@ -24,7 +40,7 @@ class LnSmallSpec extends SparkSpec {
     val df = grid.toDF("num", "den")
     val rows = df.select(
       EventQueries.lnSmallWeight(col("num"), col("den")).as("native"),
-      EventQueries.lnSmallWeightRef(col("num"), col("den")).as("ref")).collect()
+      lnSmallWeightRef(col("num"), col("den")).as("ref")).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getLong(0) === r.getLong(1)))
   }

@@ -1,17 +1,35 @@
 package graft.multimodal
 
 import graft.SparkSpec
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 class MultimodalOpsSpec extends SparkSpec {
 
   import MultimodalOps._
 
-  private lazy val media = syntheticMedia(spark, 30).cache()
+  /** Deterministic fake media generator (xorshift bytes from media_id). */
+  private def syntheticMedia(n: Int): Dataset[MediaRow] = {
+    import spark.implicits._
+    spark.range(n.toLong).as[Long].map { id =>
+      var x = id * 2654435761L + 1
+      val bytes = new Array[Byte](256 + (id % 64).toInt)
+      var i = 0
+      while (i < bytes.length) {
+        x ^= x << 13; x ^= x >>> 7; x ^= x << 17
+        bytes(i) = (x & 0xff).toByte
+        i += 1
+      }
+      val kind = Seq("image", "audio", "video")((id % 3).toInt)
+      MediaRow(id, kind, bytes, 64, 64, 16000, 1000L + id)
+    }
+  }
+
+  private lazy val media = syntheticMedia(30).cache()
 
   test("synthetic media is deterministic and typed") {
-    val a = syntheticMedia(spark, 10).collect().sortBy(_.media_id)
-    val b = syntheticMedia(spark, 10).collect().sortBy(_.media_id)
+    val a = syntheticMedia(10).collect().sortBy(_.media_id)
+    val b = syntheticMedia(10).collect().sortBy(_.media_id)
     assert(a.map(_.bytes.toSeq) === b.map(_.bytes.toSeq))
     assert(a.map(_.kind).distinct.sorted === Seq("audio", "image", "video"))
   }
@@ -140,20 +158,6 @@ class MultimodalOpsSpec extends SparkSpec {
     assert(dec.decode("video", avi2).toSeq === avi2.toSeq)
   }
 
-  test("sampleFrames extracts REAL every-k RGB frames from AVI payloads") {
-    import spark.implicits._
-    val jpegs = (0 until 5).map(i => solidJpeg(0x102030 * (i + 1)))
-    val avi = mjpegAvi(jpegs)
-    val rows = Seq(MediaRow(7L, "video", avi, 4, 4, 0, 5000L)).toDS()
-    val frames = sampleFrames(spark, rows, everyK = 2)
-      .collect().sortBy(_.getInt(1))
-    assert(frames.map(_.getInt(1)).toSeq === Seq(0, 2, 4))
-    frames.foreach { r =>
-      val i = r.getInt(1)
-      assert(r.getAs[Array[Byte]]("frame_bytes").toSeq === rgbTwin(jpegs(i)))
-    }
-  }
-
   test("decode falls back to the identity stub for non-image byte streams") {
     val garbage = Array.tabulate[Byte](64)(i => (i * 37 + 11).toByte)
     assert(new MediaDecoder().decode("image", garbage).toSeq === garbage.toSeq)
@@ -188,25 +192,6 @@ class MultimodalOpsSpec extends SparkSpec {
     val f1 = extractFeatures(spark, media).collect().sortBy(_.media_id).map(_.embedding.toSeq)
     val f8 = extractFeatures(spark, media.repartition(8)).collect().sortBy(_.media_id).map(_.embedding.toSeq)
     assert(f1.toSeq === f8.toSeq)
-  }
-
-  test("resize pads/crops to target and updates metadata") {
-    val out = resize(spark, media, 128).collect()
-    assert(out.forall(_.bytes.length === 128))
-    assert(out.forall(_.width === 32))
-  }
-
-  test("sampleFrames explodes video rows into every-k frames") {
-    val frames = sampleFrames(spark, media, everyK = 2)
-    assert(frames.columns.toSeq === Seq("media_id", "frame_no", "frame_bytes"))
-    val counts = frames.groupBy("media_id").count().collect()
-    assert(counts.nonEmpty)
-    // only video rows contribute
-    val videoIds = media.filter(_.kind == "video").collect().map(_.media_id).toSet
-    assert(counts.map(_.getAs[Long]("media_id")).forall(videoIds.contains))
-    // frame numbers are the sampled ones
-    val fns = frames.select("frame_no").distinct().collect().map(_.getInt(0)).sorted
-    assert(fns.forall(_ % 2 == 0))
   }
 
   test("featureTable feeds the similarity path (cosine top-1 runs on it)") {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.streaming.TokenizeStream
 import org.apache.spark.sql.functions._
 
 /** Pins for the standing-artifact layer ([[Artifacts]]): the memoized
@@ -88,10 +89,9 @@ class ArtifactsSpec extends SparkSpec {
     // GLOBAL collision-rate assertion for the 60-bit md5-prefix digest:
     // q55/q124 join on gh, so a cross-gram collision silently inflates
     // contamination/novelty in BOTH engines (parity is structural, not
-    // semantic). At 60 bits the birthday expectation stays ≪ 1 up to
-    // ~10⁸ distinct grams; the scaladoc documents a second digest
-    // column as the widening past ~10⁹. This pins zero collisions over
-    // the full test corpus gram vocabulary.
+    // semantic). At 60 bits the expected colliding pairs over n grams
+    // are about n²/2⁶¹: ≪ 1 up to ~10⁸ distinct grams. This pins zero
+    // collisions over the full test corpus gram vocabulary.
     val coll = CorpusQueries.grams8Of(
         graft.Tables.documents(spark, dir).select(col("doc_id"), col("text")))
       .agg(countDistinct(col("g")).as("ng"),
@@ -174,10 +174,10 @@ class ArtifactsSpec extends SparkSpec {
     val words = this.words(dir)
     val t = BpeQueries.trained(spark, dir)
     // the merge table must be the standalone trainer's
-    assert(t.merges === BpeQueries.trainMerges(words, 8))
+    assert(t.merges === TokenizeStream.trainMerges(words, 8))
     // the distributed dictionary must match per-word token counts
-    // derived off the PUBLIC trainer surface (segmented)
-    val full = BpeQueries.segmented(words, t.merges)
+    // derived off the standalone tokenizer (TokenizeStream.segmented)
+    val full = TokenizeStream.segmented(words, t.merges)
       .groupBy(col("w")).agg(count(lit(1)).as("n_tok"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val art = BpeQueries.ntokDict(spark, dir)
@@ -480,7 +480,7 @@ class ArtifactsSpec extends SparkSpec {
       graft.QuerySpec.scoped(spark, Map(Artifacts.ModeKey -> mode)) {
         try {
           val (tokens0, merges0) = (tokens(build = false), merges)
-          assert(tokens0 === tokens(build = true) && merges0 === BpeQueries.trainMerges(words(d), 8), mode)
+          assert(tokens0 === tokens(build = true) && merges0 === TokenizeStream.trainMerges(words(d), 8), mode)
           // rewrite the one file in place: half the rows, text reversed
           val rows = s"${tempDir("artrewrite_rows")}/out"
           graft.Tables.documents(spark, dir).filter(col("doc_id") % 2 === 0)
@@ -488,7 +488,7 @@ class ArtifactsSpec extends SparkSpec {
             .coalesce(1).write.parquet(rows)
           val part = new java.io.File(rows).listFiles().filter(_.getName.endsWith(".parquet")).head
           Files.copy(part.toPath, docs, StandardCopyOption.REPLACE_EXISTING)
-          val (tokensFresh, mergesFresh) = (tokens(build = true), BpeQueries.trainMerges(words(d), 8))
+          val (tokensFresh, mergesFresh) = (tokens(build = true), TokenizeStream.trainMerges(words(d), 8))
           assert(tokensFresh != tokens0 && mergesFresh != merges0, "the rewrite must change both artifacts")
           assert(tokens(build = false) === tokensFresh, s"$mode: stale doc_tokens served after the rewrite")
           assert(merges === mergesFresh, s"$mode: stale bpe_trained served after the rewrite")

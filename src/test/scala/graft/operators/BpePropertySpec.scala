@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.streaming.TokenizeStream
 
 /** Property coverage for the distributed BPE trainer: on random
   * weighted corpora, the relational window-pipeline loop must emit
@@ -62,7 +63,7 @@ class BpePropertySpec extends SparkSpec {
       }.groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.map(t => (t._1, t._2))
       val k = 1 + rnd.nextInt(8)
       val expect = referenceTrain(words, k)
-      val got = BpeQueries.trainMerges(words.toDF("w", "freq"), k)
+      val got = TokenizeStream.trainMerges(words.toDF("w", "freq"), k)
       assert(got === expect, s"trial $trial words=$words k=$k")
     }
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.streaming.TokenizeStream
 
 /** Hand-computed merge orders for the BPE trainer: frequency-weighted
   * argmax, lexicographic tiebreak, greedy left-to-right overlap rule,
@@ -10,7 +11,7 @@ class BpeQueriesSpec extends SparkSpec {
   import spark.implicits._
 
   private def train(words: Seq[(String, Long)], k: Int) =
-    BpeQueries.trainMerges(words.toDF("w", "freq"), k)
+    TokenizeStream.trainMerges(words.toDF("w", "freq"), k)
 
   test("merge order follows weighted pair counts, stops when exhausted") {
     // step1: (a,b) appears 2×10 + 5 = 25 — beats (b,a)=10, (b,c)=5, (a,a)=3
@@ -42,7 +43,7 @@ class BpeQueriesSpec extends SparkSpec {
   test("segmented applies learned merges in order, including to unseen words") {
     val trainWords = Seq(("abab", 10L), ("abc", 5L), ("aa", 3L))
     val merges = train(trainWords, k = 8) // (a,b), (ab,ab), (ab,c), (a,a)
-    val toks = BpeQueries.segmented(
+    val toks = TokenizeStream.segmented(
         Seq(("abd", 1L), ("aaa", 1L), ("abab", 1L)).toDF("w", "freq"), merges)
       .groupBy("w").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -86,8 +87,8 @@ class BpeQueriesSpec extends SparkSpec {
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    val merges = BpeQueries.trainMerges(words, 8)
-    val seg = BpeQueries.segmented(words, merges)
+    val merges = TokenizeStream.trainMerges(words, 8)
+    val seg = TokenizeStream.segmented(words, merges)
       .collect().map(r => (r.getString(0), r.getAs[String]("sym")))
     val bpeTok = seg.groupBy(_._1).map { case (w, xs) => w -> xs.length.toLong }
     val pieces = seg.map(_._2).distinct.toSet

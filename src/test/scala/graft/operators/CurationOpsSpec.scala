@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.streaming.TokenizeStream
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -230,8 +231,8 @@ class CurationOpsSpec extends SparkSpec {
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    val merges = BpeQueries.trainMerges(words, 8)
-    val nTok = BpeQueries.segmented(words, merges).collect()
+    val merges = TokenizeStream.trainMerges(words, 8)
+    val nTok = TokenizeStream.segmented(words, merges).collect()
       .groupBy(_.getString(0)).view.mapValues(_.length.toLong).toMap
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")).collect()
@@ -438,7 +439,7 @@ class CurationOpsSpec extends SparkSpec {
 
   // ------------------------------------------------------------- q157
   test("q157: cell-local kNN label-noise matrix matches a driver recomputation") {
-    val (assigned, _) = IvfQueries.buildIndex(spark, dir)
+    val (assigned, _) = IvfQueries.index(spark, dir)
     val cells = assigned.select(col("vec_id"), col("cell"),
       col("v"), col("nrm")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2).toArray, r.getDouble(3)))
@@ -488,7 +489,7 @@ class CurationOpsSpec extends SparkSpec {
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    val nTok = BpeQueries.segmented(words, BpeQueries.trainMerges(words, 8))
+    val nTok = TokenizeStream.segmented(words, TokenizeStream.trainMerges(words, 8))
       .collect().groupBy(_.getString(0)).view.mapValues(_.length.toLong).toMap
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text")).collect()

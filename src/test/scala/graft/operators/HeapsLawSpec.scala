@@ -73,11 +73,12 @@ class HeapsLawSpec extends SparkSpec {
     }
   }
 
-  private def planted(rows: Seq[(Long, String, String)]): org.apache.spark.sql.DataFrame =
-    TextQueries.heapsFit(spark,
-      rows.toDF("doc_id", "source", "text")
-        .select(col("source"), col("doc_id"),
-          expr("filter(split(text, ' '), x -> x <> '')").as("t")))
+  /** q163's spine → vocab → growth → fit chain on a planted corpus. */
+  private def planted(rows: Seq[(Long, String, String)]): org.apache.spark.sql.DataFrame = {
+    val docs = rows.toDF("doc_id", "source", "text")
+    TextQueries.fitGrowth(TextQueries.growthFrom(spark,
+      TextQueries.spineOf(docs), TextQueries.vocabOf(docs)))
+  }
 
   test("planted corpora: closed vocabulary fits flat, novel vocabulary fits near 1") {
     val closed = (1L to 16L).map(i => (i, "tmpl", "alpha beta gamma delta"))

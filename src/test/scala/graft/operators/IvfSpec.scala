@@ -8,7 +8,7 @@ class IvfSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("IVF index: every vector assigned to exactly one of K cells") {
-    val (assigned, centroids) = IvfQueries.buildIndex(spark, dir)
+    val (assigned, centroids) = IvfQueries.index(spark, dir)
     assert(centroids.count() <= 16)
     assert(assigned.count() === 500)
     assert(assigned.groupBy("vec_id").count().filter(col("count") > 1).count() === 0)

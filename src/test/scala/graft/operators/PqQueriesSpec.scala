@@ -1,13 +1,26 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Product-quantization ADC on a hand-computable instance plus
-  * invariants of the registered q96 on real testdata. */
+  * invariants of the registered q96 on real testdata. The planted
+  * instances run q96's own path: train with the trainer, encode with
+  * `encoded`, score the codes with `adcTopK`. */
 class PqQueriesSpec extends SparkSpec {
 
   import spark.implicits._
+
+  private def queryVec(pts: DataFrame, queryId: Long): Array[Long] =
+    pts.filter(col("vec_id") === queryId).head().getSeq[Long](1).toArray
+
+  /** Flat PQ top-10 (vec_id, adc_dist) for query 0. */
+  private def flatPq(pts: DataFrame, m: Int, subDim: Int, k: Int, iters: Int): Seq[(Long, Long)] = {
+    val cb = PqQueries.trainCodebook(pts, m, subDim, k, iters)
+    PqQueries.adcTopK(PqQueries.encoded(pts, cb, subDim), cb, queryVec(pts, 0L), 0L, 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+  }
 
   test("one Lloyd round + ADC on a planted 1-subspace instance") {
     // 2-dim vectors, one subspace, K=2, one update round.
@@ -21,8 +34,7 @@ class PqQueriesSpec extends SparkSpec {
       (0L, Seq(0L, 0L)), (1L, Seq(10L, 0L)),
       (2L, Seq(0L, 9L)), (3L, Seq(10L, 1L)),
     ).toDF("vec_id", "v")
-    val got = PqQueries.adcTopK(pts, m = 1, subDim = 2, k = 2, iters = 1, topK = 10, queryId = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val got = flatPq(pts, m = 1, subDim = 2, k = 2, iters = 1)
     assert(got === Seq((2L, 16L), (1L, 100L), (3L, 100L)))
   }
 
@@ -38,8 +50,7 @@ class PqQueriesSpec extends SparkSpec {
     //   c0 unchanged (0,2); c1 unchanged (5,0) — stable fixed point
     // encode: v1 -> c1, v2,v3 -> c0
     // lut(q=v0): c0 = 0+4 = 4; c1 = 25+0 = 25
-    val got = PqQueries.adcTopK(pts, m = 1, subDim = 2, k = 2, iters = 2, topK = 10, queryId = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val got = flatPq(pts, m = 1, subDim = 2, k = 2, iters = 2)
     assert(got === Seq((2L, 4L), (3L, 4L), (1L, 25L)))
   }
 
@@ -55,8 +66,7 @@ class PqQueriesSpec extends SparkSpec {
     val pts = Seq(
       (0L, Seq(5L)), (1L, Seq(5L)), (2L, Seq(100L)),
     ).toDF("vec_id", "v")
-    val got = PqQueries.adcTopK(pts, m = 1, subDim = 1, k = 2, iters = 1, topK = 10, queryId = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val got = flatPq(pts, m = 1, subDim = 1, k = 2, iters = 1)
     // v1 -> c1 (kept at 5): adc = (5-5)^2 = 0
     // v2 -> c0 (moved to 36): adc = (5-36)^2 = 961
     assert(got === Seq((1L, 0L), (2L, 961L)))
@@ -76,10 +86,11 @@ class PqQueriesSpec extends SparkSpec {
       (4L, Seq(50L, -60L, 0L, 12L)),
       (5L, Seq(48L, -55L, 5L, 10L)),
     ).toDF("vec_id", "v")
-    val flat = PqQueries.adcTopK(vecs, m = 2, subDim = 2, k = 2, iters = 2,
-      topK = 10, queryId = 0L).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val ivf = PqQueries.ivfpqTopK(vecs, cells = 1, nprobe = 1, m = 2, subDim = 2,
-      k = 2, iters = 2, topK = 10, queryId = 0L)
+    val flat = flatPq(vecs, m = 2, subDim = 2, k = 2, iters = 2)
+    val (coarse, fine, q0) = PqQueries.ivfpqTrain(vecs, cells = 1, m = 2, subDim = 2,
+      k = 2, iters = 2, queryId = 0L)
+    val ivf = PqQueries.ivfpqApply(vecs, coarse, fine, q0, cells = 1, nprobe = 1,
+      m = 2, subDim = 2, k = 2, topK = 10, queryId = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(ivf === flat)
   }
@@ -137,8 +148,7 @@ class PqQueriesSpec extends SparkSpec {
       (0L, Seq(0L)), (1L, Seq(100L)),   // two 1-dim singleton clusters
       (2L, Seq(0L)), (3L, Seq(100L)),   // duplicates at the centroids
     ).toDF("vec_id", "v")
-    val got = PqQueries.adcTopK(pts, m = 1, subDim = 1, k = 2, iters = 2, topK = 10, queryId = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val got = flatPq(pts, m = 1, subDim = 1, k = 2, iters = 2)
     // v2 shares v0's code -> adc 0; v1, v3 at the far centroid -> 10000
     assert(got === Seq((2L, 0L), (1L, 10000L), (3L, 10000L)))
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.streaming.QualityStream
 import org.apache.spark.sql.functions._
 
 /** DSIR importance weighting: the selected set must be ENRICHED in the
@@ -77,7 +78,7 @@ class SelectionQueriesSpec extends SparkSpec {
   }
 
   test("bigram LM artifact is capped: prune active, collect O(K²)-bounded") {
-    val (c2, c1, v) = SelectionQueries.bigramLm(spark, dir)
+    val (c2, c1, v) = QualityStream.bigramLm(spark, dir)
     val k = SelectionQueries.LmVocabCap
     // the cap BINDS on this corpus: contexts are exactly the top-K
     // alphabet, strictly smaller than the full train vocab V

@@ -86,12 +86,9 @@ class TextGatesPlanShapeSpec extends SparkSpec {
     // Catalyst legally folds the ≤8·|S| graft_log2q20 calls to literals
     // at optimization time (ConvertToLocalRelation) — the kernel pin
     // therefore runs against the GENERIC (non-artifact) fit plan:
-    val generic = TextQueries.heapsFit(spark,
-      graft.Tables.documents(spark, dir).select(
-        org.apache.spark.sql.functions.col("source"),
-        org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.expr(
-          "filter(split(text, ' '), x -> x <> '')").as("t")))
+    val generic = TextQueries.fitGrowth(TextQueries.growthFrom(spark,
+      TextQueries.docSpineBuild(spark, dir),
+      TextQueries.vocabOf(graft.Tables.documents(spark, dir))))
       .queryExecution.executedPlan.toString
     assert(generic.contains("graft_log2q20"),
       "the Q20 log must run as the native codegen expression")

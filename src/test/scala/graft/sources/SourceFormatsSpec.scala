@@ -25,14 +25,14 @@ class SourceFormatsSpec extends SparkSpec {
     nation.write.mode("overwrite").orc(s"$dir/o")
     assert(sortedRows(spark.read.orc(s"$dir/o")) === expected)
 
-    Sinks.writeCsv(nation, s"$dir/c")
+    nation.write.mode("overwrite").option("header", "true").csv(s"$dir/c")
     val csvSchema = StructType(Seq(
       StructField("n_nationkey", IntegerType),
       StructField("n_name", StringType),
       StructField("n_regionkey", IntegerType)))
     assert(sortedRows(spark.read.schema(csvSchema).option("header", "true").csv(s"$dir/c")) === expected)
 
-    Sinks.writeJsonDim(nation, s"$dir/j")
+    nation.write.mode("overwrite").json(s"$dir/j")
     val jsonSchema = csvSchema
     assert(sortedRows(spark.read.schema(jsonSchema).json(s"$dir/j")) === expected)
   }

@@ -1,12 +1,12 @@
 package graft.streaming
 
 import graft.functions.LnSmallKernel
-import graft.operators.ClassifierQueries
+import graft.operators.{ClassifierQueries, SelectionQueries}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Online quality gating — the streaming half of the q99/q100/q111
   * lambda split: the batch jobs train the bigram LM
-  * (`SelectionQueries.bigramLm`) and the NB classifier
+  * ([[bigramLm]]) and the NB classifier
   * ([[fitNb]]); this scores documents the moment they
   * land — LM perplexity, NB score, AND the model-free q111 token-
   * entropy gate — with both FROZEN models shipped as plain closure values —
@@ -40,6 +40,20 @@ object QualityStream {
   final case class QualityModel(
       c2: Map[(String, String), Long], c1: Map[String, Long], vocab: Long,
       flagMnat: Long, nbWeights: Array[Long], nbPrior: Long)
+
+  /** The trained LM (bigram counts, context counts, vocab size)
+    * collected from the batch `bigram_lm` artifact: the closure this
+    * scorer ships, as CCNet ships its pruned KenLM to workers. The maps
+    * arrive pruned to the top-`LmVocabCap` alphabet, so they are
+    * ≤ K² + K entries at any corpus size; OOV lookups fall through
+    * `getOrElse` to the unseen-smoothing path. */
+  def bigramLm(s: SparkSession, dir: String)
+      : (Map[(String, String), Long], Map[String, Long], Long) = {
+    val (c2t, c1t, v) = SelectionQueries.lmModel(s, dir)
+    (c2t.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap,
+      c1t.collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
+      v)
+  }
 
   /** The fitted NB model (per-bucket weights, class prior) collected
     * from the batch `nb_model` artifact: the closure this scorer ships. */

@@ -18,7 +18,7 @@ class QualityStreamSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private lazy val model: QualityModel = {
-    val (c2, c1, v) = SelectionQueries.bigramLm(spark, dir)
+    val (c2, c1, v) = QualityStream.bigramLm(spark, dir)
     val (w, prior) = QualityStream.fitNb(spark, dir)
     QualityModel(c2, c1, v, SelectionQueries.PplFlagMnat, w, prior)
   }

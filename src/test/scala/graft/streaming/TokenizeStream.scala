@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.operators.BpeQueries
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Streaming twin of q92 — ONLINE tokenization with a trained BPE
   * merge table: documents arrive continuously and each is scored
@@ -11,7 +13,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * side's `aggregate`-HOF array fold — the same word-local scan,
   * expressed as a typed map because that is the streaming-native tool
   * for a per-row pure function. Semantics are pinned EQUAL to
-  * `BpeQueries.segmented` (greedy left-to-right, run rule, merge
+  * [[segmented]] (greedy left-to-right, run rule, merge
   * order) by TokenizeStreamSpec's parity test, so the lambda split
   * (stream for live scoring, q92 for the settled per-source rollup)
   * cannot drift.
@@ -25,9 +27,23 @@ object TokenizeStream {
 
   final case class DocTokens(doc_id: Long, n_words: Long, n_chars: Long, n_tokens: Long)
 
+  /** The learned merge table for `words` (columns w: string,
+    * freq: long) — the batch trainer q91 runs, without its finish hook. */
+  def trainMerges(words: DataFrame, k: Int): Seq[(Long, String, String, Long)] =
+    BpeQueries.trainCore(words, k)(_ => ())
+
+  /** The batch segmentation after applying `merges` in order, through
+    * the same fold q92's token dictionary uses. One row per
+    * (word, token ordinal). */
+  def segmented(words: DataFrame, merges: Seq[(Long, String, String, Long)]): DataFrame =
+    words
+      .select(col("w"), col("freq"),
+        posexplode(BpeQueries.foldSyms(merges, col("w"))).as(Seq("pos", "sym")))
+      .select(col("w"), col("freq"), (col("pos") + 1).as("pos"), col("sym"))
+
   /** Greedy left-to-right application of `merges` (in order) to one
     * word; returns the post-BPE token count. Equivalent to
-    * `BpeQueries.segmented` on a 1-word vocabulary (parity-pinned). */
+    * [[segmented]] on a 1-word vocabulary (parity-pinned). */
   private[streaming] def tokenCount(word: String, merges: Seq[(String, String)]): Int = {
     var seg: Array[String] = word.toCharArray.map(_.toString)
     merges.foreach { case (l, r) =>
@@ -44,7 +60,7 @@ object TokenizeStream {
   }
 
   /** Score a document stream against a trained merge table (the
-    * (step, lhs, rhs, count) rows `BpeQueries.trainMerges` emits —
+    * (step, lhs, rhs, count) rows [[trainMerges]] emits —
     * order matters and is preserved). */
   def tokenize(
       spark: SparkSession,

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.BpeQueries
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -15,14 +14,14 @@ class TokenizeStreamSpec extends SparkSpec {
   import spark.implicits._
 
   private val trainWords = Seq(("abab", 10L), ("abc", 5L), ("aa", 3L))
-  private lazy val merges = BpeQueries.trainMerges(trainWords.toDF("w", "freq"), 8)
+  private lazy val merges = TokenizeStream.trainMerges(trainWords.toDF("w", "freq"), 8)
 
   test("per-row tokenCount equals the batch segmented() on random words") {
     val rnd = new scala.util.Random(7)
     val words = (0 until 60).map(_ =>
       (0 until (1 + rnd.nextInt(10))).map(_ => "abcd"(rnd.nextInt(4))).mkString)
       .distinct
-    val batch = BpeQueries.segmented(words.map((_, 1L)).toDF("w", "freq"), merges)
+    val batch = TokenizeStream.segmented(words.map((_, 1L)).toDF("w", "freq"), merges)
       .groupBy("w").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val table = merges.map(m => (m._2, m._3))
@@ -46,7 +45,7 @@ class TokenizeStreamSpec extends SparkSpec {
         .find(_.doc_id == 9L).get
       assert(t.n_words === 2L && t.n_chars === 7L && t.n_tokens === 2L)
       // batch twin: the same two real words through the q92 kernel
-      val batch = BpeQueries.segmented(
+      val batch = TokenizeStream.segmented(
         Seq(("abab", 1L), ("abc", 1L)).toDF("w", "freq"), merges)
         .groupBy("w").count().agg(sum("count")).collect()(0).getLong(0)
       assert(batch === t.n_tokens)
