@@ -71,12 +71,14 @@ object Harness {
   private val retired = Seq(
     "SPARK_GRAFT_NO_ARTIFACTS" -> "set SPARK_GRAFT_CONF=\"spark.graft.artifacts=off\" instead",
     "SPARK_GRAFT_ARTIFACT_STORE" ->
-      "set SPARK_GRAFT_CONF=\"spark.graft.artifacts=<absolute store path>\" instead",
+      "the disk artifact store is removed: artifacts live for one session",
     "SPARK_GRAFT_WIDE_DIGEST" -> WideDigestRemoved)
 
   /** Session confs whose second code path is removed: setting one in
     * SPARK_GRAFT_CONF fails loudly rather than running the one
-    * remaining form. */
+    * remaining form. A `spark.graft.artifacts` value is checked by the
+    * parser `Artifacts` itself uses, so a removed store path fails here,
+    * at start, instead of on first touch. */
   private val removedConfs = Seq(
     "spark.graft.wideDigest" -> WideDigestRemoved,
     "spark.graft.waistMinBytes" ->
@@ -98,6 +100,8 @@ object Harness {
     removedConfs.find { case (k, _) => confs.exists(_._1 == k) }.foreach { case (k, why) =>
       throw new IllegalArgumentException(s"SPARK_GRAFT_CONF sets $k: $why")
     }
+    confs.filter(_._1 == operators.Artifacts.ModeKey)
+      .foreach { case (_, v) => operators.Artifacts.memoizes(Some(v)) }
     val cpus = vars.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     Env(
       sfDir = vars.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),

@@ -27,7 +27,7 @@ object SparkEntry {
               .otherwise("draw").as("result"))
           .groupBy(col("segment_class"))
           .agg(operators.Wld.counts(col("result")).head, operators.Wld.counts(col("result")).tail: _*)
-          .withColumn("win_rate", operators.Det.rate(col("wins").cast("double") / col("games"))),
+          .withColumn("win_rate", operators.Wld.winRate),
         "games", "share")
       .withColumn("sample_ok", col("games") >= 20)
       .orderBy(col("games").desc, col("segment_class"))

@@ -22,7 +22,7 @@ object Verify {
         e.printStackTrace()
       }
       // queries that persist intermediates (IVF centroids, LSH shingle
-      // tables) must not stack cached blocks across a 51-query session
+      // tables) must not stack cached blocks across the catalog's run
       spark.catalog.clearCache()
     }
     val json = SparkEntry.oracleSql

@@ -1,6 +1,6 @@
 package graft.battle
 
-import graft.operators.{Det, Share, Wld}
+import graft.operators.{Share, Wld}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,7 +40,7 @@ object MetaAnalytics {
       .select(col("p.a").as("deck_type"), col("p.b").as("opp_type"), col("p.result").as("result"))
       .groupBy(col("deck_type"), col("opp_type"))
       .agg(Wld.counts(col("result")).head, Wld.counts(col("result")).tail: _*)
-      .withColumn("win_rate", Det.rate(col("wins").cast("double") / col("games")))
+      .withColumn("win_rate", Wld.winRate)
 
   /** Per-archetype counts with the static archetype domain zero-filled
     * (meta_analytics.py:187-197): right join vs the literal domain. */
@@ -62,7 +62,7 @@ object MetaAnalytics {
         participants
           .groupBy(col("deck_type"))
           .agg(Wld.counts(col("result")).head, Wld.counts(col("result")).tail: _*)
-          .withColumn("win_rate", Det.rate(col("wins").cast("double") / col("games"))),
+          .withColumn("win_rate", Wld.winRate),
         "games", "meta_share")
       .withColumn("sample_ok", col("games") >= minGames)
       .orderBy(col("games").desc, col("deck_type"))

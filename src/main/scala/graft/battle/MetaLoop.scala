@@ -8,10 +8,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Each iteration unions a new batch of normalized+classified battles
   * into an accumulating DataFrame and evaluates the convergence
-  * predicate with a single action. The accumulator is persisted and the
-  * lineage cut per iteration (localCheckpoint) — at scale an
+  * predicate with a single action. The accumulator is materialized and
+  * the lineage cut per iteration (localCheckpoint) — at scale an
   * ever-growing union lineage would otherwise re-read every historical
-  * batch on every action.
+  * batch on every action. A superseded accumulator's checkpoint blocks
+  * are freed by ContextCleaner once nothing references it
+  * (`Dataset.unpersist` would not free them: it only drops
+  * CacheManager entries, and a checkpointed frame has none).
   */
 object MetaLoop {
 
@@ -44,7 +47,6 @@ object MetaLoop {
       val batch = batches.next()
       val unioned = acc.map(_.unionByName(batch)).getOrElse(batch)
       val materialized = unioned.localCheckpoint(true)
-      acc.foreach(_.unpersist(false))
       acc = Some(materialized)
       val (ok, t, c) = MetaAnalytics.convergenceCheck(spark, materialized, minTotal, minPerType)
       converged = ok; total = t; counts = c

@@ -1,6 +1,6 @@
 package graft.battle
 
-import graft.operators.{Det, Wld}
+import graft.operators.Wld
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,9 +20,7 @@ object UserAnalytics {
   def computeSummary(battles: DataFrame): DataFrame =
     battles
       .agg(Wld.counts(col("result")).head, Wld.counts(col("result")).tail: _*)
-      .withColumn("win_rate",
-        when(col("games") === 0, 0.0)
-          .otherwise(Det.rate(col("wins").cast("double") / col("games"))))
+      .withColumn("win_rate", Wld.winRate)
 
   /** summarize_deck_types (deck_type.py:192-274): per-archetype stats
     * over BOTH sides; opponent rows flip the result; draws are the else
@@ -35,7 +33,7 @@ object UserAnalytics {
       .select(col("p.deck_type").as("deck_type"), col("p.result").as("result"))
       .groupBy(col("deck_type"))
       .agg(Wld.counts(col("result")).head, Wld.counts(col("result")).tail: _*)
-      .withColumn("win_rate", Det.rate(col("wins").cast("double") / col("games")))
+      .withColumn("win_rate", Wld.winRate)
       .orderBy(col("win_rate").desc, col("games").desc, col("deck_type"))
 
   /** summarize_deck_types returns a (my, opp) PAIR in the reference
@@ -54,7 +52,7 @@ object UserAnalytics {
         battles.select(col("my_deck_type").as("deck_type"), col("result"))
     rows.groupBy(col("deck_type"))
       .agg(Wld.counts(col("result")).head, Wld.counts(col("result")).tail: _*)
-      .withColumn("win_rate", Det.rate(col("wins").cast("double") / col("games")))
+      .withColumn("win_rate", Wld.winRate)
       .orderBy(col("win_rate").desc, col("games").desc, col("deck_type"))
   }
 
@@ -75,7 +73,7 @@ object UserAnalytics {
     val perCard = rows.groupBy(col("card"))
       .agg(Wld.counts(col("result")).head, Wld.counts(col("result")).tail: _*)
       .filter(col("games") >= minGames)
-      .withColumn("win_rate", Det.rate(col("wins").cast("double") / col("games")))
+      .withColumn("win_rate", Wld.winRate)
     if (worst) perCard.orderBy(col("win_rate").asc, col("games").asc, col("card").desc)
     else perCard.orderBy(col("win_rate").desc, col("games").desc, col("card"))
   }
@@ -87,7 +85,7 @@ object UserAnalytics {
       .groupBy(col("my_deck_type"), col("opp_deck_type"))
       .agg(Wld.counts(col("result")).head, Wld.counts(col("result")).tail: _*)
       .filter(col("games") >= minGames)
-      .withColumn("win_rate", Det.rate(col("wins").cast("double") / col("games")))
+      .withColumn("win_rate", Wld.winRate)
       .orderBy(col("games").desc, col("win_rate").desc, col("my_deck_type"), col("opp_deck_type"))
 
   /** compute_user_deck_matchups (user_analytics.py:99-175): exact
@@ -101,7 +99,7 @@ object UserAnalytics {
     val perDeck = battles
       .groupBy(array_sort(col("opp_cards")).as("opp_deck"))
       .agg(Wld.counts(col("result")).head, Wld.counts(col("result")).tail: _*)
-      .withColumn("win_rate", Det.rate(col("wins").cast("double") / col("games")))
+      .withColumn("win_rate", Wld.winRate)
     val tough = perDeck.filter(col("win_rate") <= overall - delta)
       .withColumn("role", lit("tough"))
       .orderBy(col("win_rate").asc, col("games").asc, col("opp_deck"))
@@ -126,7 +124,7 @@ object UserAnalytics {
       .groupBy(col("card"))
       .agg(Wld.counts(col("result")).head, Wld.counts(col("result")).tail: _*)
       .filter(col("games") >= minGames)
-      .withColumn("win_rate", Det.rate(col("wins").cast("double") / col("games")))
+      .withColumn("win_rate", Wld.winRate)
     // "worst" reverses the best list (user_analytics.py:310,315): a full
     // reversal inverts ties too, so EVERY key flips — including the
     // tiebreak.
@@ -146,7 +144,7 @@ object UserAnalytics {
       .groupBy(col("deck"))
       .agg(Wld.counts(col("result")).head, Wld.counts(col("result")).tail: _*)
       .filter(col("games") >= minGames)
-      .withColumn("win_rate", Det.rate(col("wins").cast("double") / col("games")))
+      .withColumn("win_rate", Wld.winRate)
     if (worst) perDeck.orderBy(col("win_rate").asc, col("games").asc, col("deck").desc)
     else perDeck.orderBy(col("win_rate").desc, col("games").desc, col("deck"))
   }

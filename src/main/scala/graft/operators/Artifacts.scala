@@ -6,56 +6,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Session-scoped STANDING ARTIFACTS — derived datasets that are a
   * property of the corpus, not of any one query, built once per
   * (SparkContext, dataset contents) and reused by every consumer. The full
-  * inventory (see SCALE.md's round-8 table for consumers):
+  * inventory, one row per owning object, each name marked as an index or
+  * model (state built over the data a session reads) or as a cached
+  * intermediate or result (a memo of query work; ROADMAP item 5 makes
+  * their inline forms fast and then deletes them). ArtifactInventorySpec
+  * fails on a call-site name missing here or a name here without a call
+  * site:
   *
-  *   - `shingles` / `minhash_wide` / `lsh_bands` / `simhash60_sigs`
-  *     — the near-dup index substrate (DedupQueries)
-  *   - `neardup_pairs` — q26's exact-Jaccard near-dup edge set
-  *   - `cluster_map` / `prior_cluster_map` — q54's CC clustering and
-  *     q159's pre-ingest standing input (CorpusQueries)
-  *   - `src_grams8` / `src_minhash_sigs` — source-similarity frames
-  *   - `bpe_trained` (driver: merges + pieces) with the DISTRIBUTED
-  *     `bpe_ntok_dict` / `bpe_wp_dict` dictionaries (BpeQueries)
-  *   - `unigram_counts` / `skipgram_pairs` — the word2vec-substrate
-  *     frames (round 14): per-token counts (also the BPE family's
-  *     vocab() source) and the df-capped ±3-window co-occurrence
-  *     counts (MiningQueries q68)
-  *   - `pq_codes` / `pq_gt_top10` — the PQ index proper (per-vector
-  *     M-byte codes) and the fixed panel's exact-L2 ground truth (the
-  *     ANN-benchmark GT-file pattern), both round 14 (q101)
-  *   - `sq8_stats` / `sq8_panel` — scalar-quantization stats (2
-  *     doubles) and the quantized eval panel (round 14, q58)
-  *   - `bigram_lm` / `nb_model` — pruned model LocalRelations
-  *     (SelectionQueries / ClassifierQueries)
-  *   - `pq_model` / `ivfpq_model` / `ivf_index` — the ANN index state
-  *     (PqQueries / IvfQueries); `ivf_index` spans `ivf_assigned`,
-  *     `ivf_centroids` AND (round 13) `ivf_margins` — the per-vector
-  *     top-2 assignment similarities written from the same final
-  *     scoring pass (q123's silhouette input)
-  *   - `rrf_fused` — the hybrid-retrieval fused list (RetrievalQueries,
-  *     q94 + q143)
-  *   - `winnow_fp` — the MOSS winnowing fingerprint index
-  *     (PipelineQueries, q162)
-  *   - `doc_tokens` / `doc_scores` / `doc_entropy` / `gate_verdicts` /
-  *     `doc_chunks` — the round-12 per-doc substrate frames: regex
-  *     token counts (q37), NB scores (q100/q104/q172 + the gate
-  *     frame), token entropy (q111 + the gate frame), the joined
-  *     3-gate verdicts with source (q120/q130), and the stride-W chunk
-  *     digests (q110/q146)
-  *   - `dsir_logits` — the per-doc DSIR importance logits (round 14,
-  *     q93): computed once per (corpus, target) exactly as DSIR's
-  *     published pipeline stores its log-importance weights
+  * | owner | index or model | cached intermediate or result |
+  * |---|---|---|
+  * | DedupQueries | `shingles` `minhash_wide` `lsh_bands` `simhash60_sigs` | `neardup_pairs` |
+  * | CorpusQueries | `cluster_map` `prior_cluster_map` `doc_grams8` `src_grams8` `src_minhash_sigs` `sq8_stats` | `sq8_panel` |
+  * | MiningQueries | `unigram_counts` `skipgram_pairs` | |
+  * | BpeQueries | `bpe_trained` `bpe_ntok_dict` `bpe_wp_dict` `uni_pieces` | `bpe_ntok_dict:rows` `bpe_wp_dict:rows` |
+  * | PqQueries | `pq_model` `ivfpq_model` `pq_codes` | `pq_gt_top10` |
+  * | IvfQueries | `ivf_index` `ivf_assigned` `ivf_centroids` | `ivf_margins` |
+  * | SelectionQueries | `bigram_lm` `lm_bigrams` `lm_contexts` `lm_vocab` | `dsir_logits` `doc_nll` |
+  * | ClassifierQueries | `nb_model` `nb_weights` `nb_prior` | `doc_scores` `gate_verdicts` |
+  * | PipelineQueries | `winnow_fp` | `dup_islands` |
+  * | TextQueries | | `doc_chunks` `doc_entropy` `gram_counts` `doc_spine` `src_vocab` `heaps_growth` |
+  * | ExtendedQueries | | `doc_tokens` |
+  * | RetrievalQueries | | `rrf_fused` |
+  * | WindowSkewQueries | | `li_rank_frame` `li_rank_meta` `li_pct_frame` `li_qty_hist` |
+  *
+  * `ivf_index` wraps `ivf_assigned`, `ivf_centroids` and `ivf_margins`;
+  * `bigram_lm` wraps the three `lm_*` frames and `nb_model` the two `nb_*`
+  * frames. The two `:rows` entries are the dictionary row counts that
+  * BpeQueries' `dictJoined` keys as `s"$name:rows"`.
   *
   * Why: seven registered queries (q97/q109/q128/q142/q150/q152/q153)
   * consume the clustering and each re-derived the full shingle → pair
   * → iterative-CC chain from scratch, ~1 s of identical work per
-  * query; five more replay the K-step BPE trainer. No production
-  * pipeline re-clusters the corpus per downstream query: at 100 TB the
-  * cluster map is WRITTEN ONCE (the [[DedupQueries.postingIndex]]
-  * storable-intermediate pattern — PostingIndexSpec proves the parquet
-  * round-trip) and every consumer reads the artifact. This object is
-  * the in-session equivalent of that standing table: the first
-  * consumer builds and materializes it, later consumers read it.
+  * query; five more replay the K-step BPE trainer. The first consumer
+  * builds and materializes the artifact, later consumers read it.
   *
   * Materialization is `localCheckpoint` (RDD-block-backed, lineage
   * truncated), NOT `persist`: the bench protocol clears the SQL cache
@@ -68,68 +51,49 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * artifact == inline recomputation frame-for-frame.
   *
   * One session conf, `spark.graft.artifacts` ([[ModeKey]]), picks the
-  * mode, read on every touch (so one session can flip it):
-  *   - unset or `memo`: built once per (context, data), served from
-  *     memory;
-  *   - `off`: every call builds inline — the pre-artifact behavior, for
-  *     apples-to-apples audits;
-  *   - an absolute store path or URI: memoized AND disk-backed — first
-  *     build writes `<store>/<tag>_<name>_v<version>` as parquet and
-  *     every later session reads the standing table instead of
-  *     re-deriving (the production shape: cluster map / index /
-  *     signature tables live in the warehouse between runs).
-  * Any other value fails on first touch, naming the conf.
+  * mode, read on every touch (so one session can flip it): unset or
+  * `memo` builds once per (context, data) and serves from memory; `off`
+  * builds inline on every call — the pre-artifact behavior, for
+  * apples-to-apples audits. Any other value fails, naming the conf, on
+  * first touch and in `Harness.env` at start.
   *
-  * State is keyed on the input DATA, not the path: memo keys and store
-  * tags include [[graft.Tables.fingerprint]] of the tables under the
-  * dataset dir, so an in-place rewrite rebuilds instead of serving
-  * stale derived state. Memo keys also include the applicationId
-  * (checkpointed RDD blocks die with their context, and ScalaTest runs
-  * several contexts per JVM) and the mode (flipping it after first
-  * touch serves the newly-configured form). A build under a new
-  * fingerprint drops the entries of the same (context, mode, dir,
-  * kind, name, version) built over older data, so one entry per
+  * State is keyed on the input DATA, not the path: memo keys include
+  * [[graft.Tables.fingerprint]] of the tables under the dataset dir, so
+  * an in-place rewrite rebuilds instead of serving stale derived state.
+  * Memo keys also include the applicationId (checkpointed RDD blocks die
+  * with their context, and ScalaTest runs several contexts per JVM). A
+  * build under a new fingerprint drops the entries of the same
+  * (context, dir, kind, name) built over older data, so one entry per
   * artifact remains. It drops the reference only, never `unpersist`:
   * a query planned over the old frame may still be reading its
   * checkpoint blocks, and ContextCleaner frees them once nothing
-  * references them. Store directories of superseded data stay on
-  * disk; nothing here deletes store entries.
-  *
-  * `version` is the BUILDER version: a semantics change to a builder
-  * that keeps the artifact name must bump its call-site version, so old
-  * store entries stop matching instead of serving pre-change parquet
-  * (r9 ADVICE). It tracks code, not data.
+  * references them.
   */
 object Artifacts {
 
-  /** The one artifact-mode conf: `memo` (default), `off`, or a store. */
+  /** The one artifact-mode conf: `memo` (default) or `off`. */
   val ModeKey = "spark.graft.artifacts"
 
-  private sealed trait Mode
-  private case object Off extends Mode
-  private case object Memo extends Mode
-  private final case class Store(root: String) extends Mode
-
-  private def mode(s: SparkSession): Mode = s.conf.getOption(ModeKey) match {
-    case None | Some("memo") => Memo
-    case Some("off") => Off
-    case Some(v) if v.startsWith("/") || isAbsoluteUri(v) => Store(v.stripSuffix("/"))
-    case Some(v) => throw new IllegalArgumentException(
-      s"$ModeKey=\"$v\": expected memo, off, or an absolute store path or URI")
+  /** Whether a [[ModeKey]] value memoizes: unset or `memo` does, `off`
+    * does not; anything else fails naming the conf. The one parser of
+    * the conf — `Harness.env` checks SPARK_GRAFT_CONF with it at start. */
+  private[graft] def memoizes(v: Option[String]): Boolean = v match {
+    case None | Some("memo") => true
+    case Some("off") => false
+    case Some(bad) => throw new IllegalArgumentException(
+      s"$ModeKey=\"$bad\": expected memo or off (the disk store mode is removed)")
   }
 
-  private def isAbsoluteUri(v: String): Boolean =
-    try { val u = new java.net.URI(v); u.getScheme != null && !u.isOpaque }
-    catch { case _: java.net.URISyntaxException => false }
+  private def memoizes(s: SparkSession): Boolean = memoizes(s.conf.getOption(ModeKey))
 
-  /** Memo key: one artifact of one context and mode (`scope`) over
-    * dataset `dir`, built over the data whose fingerprint is `data`. */
+  /** Memo key: one artifact of one context (`scope`) over dataset `dir`,
+    * built over the data whose fingerprint is `data`. */
   private final case class Key(dir: String, scope: String, data: String)
 
   private val memo = new ConcurrentHashMap[Key, AnyRef]()
 
   /** Wall seconds each named artifact's BUILD took in this JVM,
-    * accumulated across (dataset, version) variants. Composite
+    * accumulated across datasets. Composite
     * builders nest (ivf_index wraps ivf_assigned/ivf_centroids/
     * ivf_margins), so inner names are also counted inside their
     * parent's number — the map answers "what did building X cost",
@@ -147,10 +111,9 @@ object Artifacts {
   }
 
   /** The one dispatcher behind every entry point. `off` runs `inline`;
-    * otherwise the result is memoized under (context, mode, dir, data
-    * fingerprint, kind, name, version) and built by `inMemory`, or, in
-    * store mode, by `stored` given this artifact's store path. A build
-    * first drops the entries of the same artifact over other data.
+    * otherwise the result is memoized under (context, dir, kind:name,
+    * data fingerprint) and built by `memoized`. A build first drops the
+    * entries of the same artifact over other data.
     *
     * Memoization is get → build OUTSIDE the map → putIfAbsent, NOT
     * computeIfAbsent: builders routinely request OTHER artifacts
@@ -158,34 +121,25 @@ object Artifacts {
     * computeIfAbsent on one ConcurrentHashMap throws "Recursive
     * update". putIfAbsent keeps first-wins if two threads ever race
     * (losing only wastes one duplicate build). */
-  private def dispatch[T <: AnyRef](s: SparkSession, dir: String, kind: String, name: String,
-      version: Int)(inline: => T, inMemory: => T, stored: String => T): T = mode(s) match {
-    case Off => inline
-    case m =>
+  private def dispatch[T <: AnyRef](s: SparkSession, dir: String, kind: String, name: String)(
+      inline: => T, memoized: => T): T =
+    if (!memoizes(s)) inline
+    else {
       val data = graft.Tables.fingerprint(s, dir)
-      val k = Key(dir, s"${s.sparkContext.applicationId}|$m|$kind:${name}_v$version", data)
+      val k = Key(dir, s"${s.sparkContext.applicationId}|$kind:$name", data)
       val cached = memo.get(k)
       if (cached != null) cached.asInstanceOf[T]
       else {
         memo.keySet.removeIf(o => o.dir == dir && o.scope == k.scope && o.data != data)
         val t0 = System.nanoTime()
         val built =
-          try m match {
-            case Store(root) => stored(s"$root/${storeTag(dir, data)}_${name}_v$version")
-            case _ => inMemory
-          }
+          try memoized
           finally buildSecs.merge(name, java.lang.Double.valueOf((System.nanoTime() - t0) / 1e9),
             (a, b) => java.lang.Double.valueOf(a.doubleValue + b.doubleValue))
         val prev = memo.putIfAbsent(k, built)
         (if (prev != null) prev else built).asInstanceOf[T]
       }
-  }
-
-  /** Store-name prefix: 8 hex of md5(dir, data fingerprint). */
-  private def storeTag(dir: String, data: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$data".getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
+    }
 
   /** Off-mode fidelity for multi-branch consumers: with the layer off,
     * `frame()` returns the bare lazy builder, so a query whose plan
@@ -199,7 +153,7 @@ object Artifacts {
     * (|S|-row) result — the LocalRelation holds it all. */
   private[operators] def pinned(s: SparkSession, frame: DataFrame)(
       consume: DataFrame => DataFrame): DataFrame =
-    if (mode(s) != Off) consume(frame)
+    if (memoizes(s)) consume(frame)
     else {
       val p = frame.persist()
       try local(s, consume(p)) finally p.unpersist()
@@ -208,55 +162,14 @@ object Artifacts {
   /** Memoized MATERIALIZED frame: eagerly local-checkpointed so
     * consumers read RDD blocks instead of re-running the builder's plan
     * (and so the artifact survives `catalog.clearCache()`, which only
-    * clears the SQL CacheManager); in store mode a parquet scan of the
-    * standing table (ArtifactsSpec pins store round-trip == fresh
-    * build). */
-  private[operators] def frame(s: SparkSession, dir: String, name: String,
-      version: Int = 1)(build: => DataFrame): DataFrame =
-    dispatch(s, dir, "frame", name, version)(build, build.localCheckpoint(true),
-      p => s.read.parquet(committed(s, p)(build)))
+    * clears the SQL CacheManager). Off mode returns the lazy builder. */
+  private[operators] def frame(s: SparkSession, dir: String, name: String)(
+      build: => DataFrame): DataFrame =
+    dispatch(s, dir, "frame", name)(build, build.localCheckpoint(true))
 
-  /** Ensure `path` holds a committed build and return where one is.
-    * Writes go to a session-unique temp directory first and are RENAMED
-    * into place: the final path appears atomically (local FS / HDFS
-    * rename), so a concurrent second session never observes a
-    * half-written directory — at worst it sees no `_SUCCESS` yet and
-    * rebuilds into its own temp dir, and the loser of the rename race
-    * just deletes its temp output. */
-  private def committed(s: SparkSession, path: String)(build: => DataFrame): String = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def done(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
-    // Trust an existing directory only if the parquet committer's
-    // _SUCCESS marker is present: a crashed first build leaves a
-    // partial directory that a bare exists() would accept, silently
-    // serving a truncated standing artifact to every later session.
-    if (done(target)) path
-    else {
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$path.tmp-${s.sparkContext.applicationId}")
-      build.write.mode("overwrite").parquet(tmp.toString)
-      // a no-_SUCCESS target can only be a dead partial — clear it so
-      // rename lands; if another session committed in the meantime,
-      // keep theirs and drop ours (first-wins, same as the memo)
-      if (!done(target) && (!fs.exists(target) || fs.delete(target, true)))
-        fs.rename(tmp, target)
-      // Re-verify the commit actually landed before handing the path
-      // out: an undeletable dead partial or a failed rename would
-      // otherwise serve truncated parquet. Fall back to our own
-      // complete tmp build so this session still reads correct data;
-      // fail loudly only when neither directory holds a complete build.
-      if (done(target)) { fs.delete(tmp, true); path }
-      else if (done(tmp)) tmp.toString
-      else throw new IllegalStateException(
-        s"artifact store commit failed: no complete build at $path or $tmp")
-    }
-  }
-
-  /** Test hook: drop every memo entry so a spec can exercise the
-    * build-vs-load-from-store branches. Checkpointed blocks of dropped
-    * entries are simply re-derived on next touch. */
+  /** Test hook: drop every memo entry so a spec builds from scratch.
+    * Checkpointed blocks of dropped entries are simply re-derived on
+    * next touch. */
   private[operators] def reset(): Unit = memo.clear()
 
   /** Test hook: the scope of each memo entry over `dir`, one element
@@ -273,39 +186,15 @@ object Artifacts {
   private[operators] def local(s: SparkSession, df: DataFrame): DataFrame =
     s.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
-  /** Memoized BOUNDED frame served as a LocalRelation; in store mode
-    * later sessions collect the standing table into plan literals
-    * instead of re-deriving (the round-9 verdict's #6 — driver-value
-    * artifacts used to rebuild once per session). Same boundedness
+  /** Memoized BOUNDED frame served as a LocalRelation. Same boundedness
     * contract as [[local]]. */
-  private[operators] def localFrame(s: SparkSession, dir: String, name: String,
-      version: Int = 1)(build: => DataFrame): DataFrame =
-    dispatch(s, dir, "localframe", name, version)(local(s, build), local(s, build),
-      p => local(s, s.read.parquet(committed(s, p)(build))))
+  private[operators] def localFrame(s: SparkSession, dir: String, name: String)(
+      build: => DataFrame): DataFrame =
+    dispatch(s, dir, "localframe", name)(local(s, build), local(s, build))
 
-  /** Memoized driver-side value (e.g. a learned merge table — bounded
-    * by construction; never corpus-scale data). Never stored itself,
-    * but keyed on the mode like every entry: composites wrapped in
-    * `value` (ivf_index, nb_model, bigram_lm) hold inner frame results
-    * of the mode they were built under (r10 ADVICE). */
+  /** Memoized driver-side value (a trained model, a learned merge table
+    * — bounded by construction; never corpus-scale data). */
   private[operators] def value[T <: AnyRef](
       s: SparkSession, dir: String, name: String)(build: => T): T =
-    dispatch(s, dir, "value", name, 1)(build, build, _ => build)
-
-  /** Memoized driver-side value that is DISK-BACKED in store mode: the
-    * first build writes `encode(v)` as the standing parquet table;
-    * later sessions `decode` it instead of re-training (r9 verdict #6 —
-    * PQ/IVF-PQ codebooks, BPE merges and the like rebuilt once per
-    * session). encode/decode must be lossless (ArtifactsSpec pins
-    * round-trip == fresh build per kind); the session that builds
-    * serves its own in-memory value, so the two paths can only diverge
-    * if the codec is wrong, never by timing. */
-  private[operators] def storedValue[T <: AnyRef](s: SparkSession, dir: String,
-      name: String, version: Int = 1)(build: => T)(
-      encode: T => DataFrame, decode: DataFrame => T): T =
-    dispatch(s, dir, "sval", name, version)(build, build, { p =>
-      var built: Option[T] = None
-      val at = committed(s, p) { val v = build; built = Some(v); encode(v) }
-      built.getOrElse(decode(s.read.parquet(at)))
-    })
+    dispatch(s, dir, "value", name)(build, build)
 }

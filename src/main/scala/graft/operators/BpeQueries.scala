@@ -234,27 +234,14 @@ object BpeQueries {
     * replay of the K merges); only the bounded merge table and piece
     * inventory reach the driver. */
   private[operators] def trained(s: SparkSession, dir: String): TrainedBpe =
-    Artifacts.storedValue(s, dir, "bpe_trained") {
+    Artifacts.value(s, dir, "bpe_trained") {
       var pieces: Seq[String] = null
       val merges = trainCore(vocab(s, dir), MergeSteps) { finalSeg =>
         pieces = finalSeg.select(explode(col("syms")).as("p")).distinct()
           .collect().map(_.getString(0)).sorted.toSeq
       }
       TrainedBpe(merges, pieces)
-    }(t => { // lossless (part, i, s1, s2, v) codec for the trained table
-      import s.implicits._
-      (t.merges.map { case (st, a, b, f) => ("m", st, a, b, f) } ++
-        t.pieces.zipWithIndex.map { case (p, i) => ("p", i.toLong, p, "", 0L) })
-        .toDF("part", "i", "s1", "s2", "v")
-    },
-      df => {
-        val rows = df.collect().map(r =>
-          (r.getString(0), r.getLong(1), r.getString(2), r.getString(3), r.getLong(4)))
-        TrainedBpe(
-          rows.filter(_._1 == "m").sortBy(_._2)
-            .map(r => (r._2, r._3, r._4, r._5)).toSeq,
-          rows.filter(_._1 == "p").sortBy(_._2).map(_._3).toSeq)
-      })
+    }
 
   /** The full (w, n_tok) token dictionary as a DISTRIBUTED standing
     * artifact: the learned merge folds applied once per distinct
@@ -662,16 +649,10 @@ object BpeQueries {
   /** Piece cost table (piece → milli-nat cost), driver-side. A
     * STANDING trained artifact like `bpe_trained` (the unigram-LM
     * tokenizer's model state — SentencePiece ships exactly this table
-    * in its .model file): memoized per (corpus), disk-backed under a
-    * store, re-derived inline under `spark.graft.artifacts=off`. */
+    * in its .model file): memoized per (corpus), re-derived inline
+    * under `spark.graft.artifacts=off`. */
   private def uniPieces(s: SparkSession, dir: String): Seq[(String, Long)] =
-    Artifacts.storedValue(s, dir, "uni_pieces")(uniPiecesBuild(s, dir))(
-      encode = t => {
-        import s.implicits._
-        t.toDF("p", "cost")
-      },
-      decode = df => df.select(col("p"), col("cost"))
-        .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq)
+    Artifacts.value(s, dir, "uni_pieces")(uniPiecesBuild(s, dir))
 
   private def uniPiecesBuild(s: SparkSession, dir: String): Seq[(String, Long)] = {
     val words = vocab(s, dir).filter(length(col("w")) <= UniWordLen)

@@ -70,8 +70,7 @@ object ClassifierQueries {
     * queries broadcast literal rows with zero fit jobs. */
   private[graft] def nbModel(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     Artifacts.value(s, dir, "nb_model") {
-      // lazy: when BOTH store entries exist, the fit never runs; a
-      // cold store derives once and writes both standing tables
+      // lazy: the fit runs only for an inner frame not yet memoized
       lazy val fit = fitFrames(s, dir)
       (Artifacts.localFrame(s, dir, "nb_weights")(fit._1),
         Artifacts.localFrame(s, dir, "nb_prior")(fit._2))

@@ -775,7 +775,7 @@ object CorpusQueries {
     // arithmetic involved).
     // Both are standing artifacts (the q101 pq_model codebook pattern:
     // scalar-quantization stats and the eval panel are corpus state) —
-    // a warm session reads them from the store and q58 is ONE
+    // a warm session reads them from memory and q58 is ONE
     // candidate pass + the sort barrier.
     val stRow = Artifacts.localFrame(s, dir, "sq8_stats") {
       base.select(array_min(col("v")).as("mn"), array_max(col("v")).as("mx"))
@@ -1188,9 +1188,9 @@ object CorpusQueries {
 
   private def q122(s: SparkSession, dir: String): DataFrame =
     // No persist/settle over the STANDING gram table: Artifacts.frame
-    // already materializes it (localCheckpoint blocks in-session,
-    // parquet with a store), so the old corpus-scale persist + count
-    // was a SECOND in-memory copy plus an extra eager job — measured
+    // already materializes it (localCheckpoint blocks), so the old
+    // corpus-scale persist + count was a SECOND in-memory copy plus
+    // an extra eager job — measured
     // as run-to-run variance at the 100× replica (11–22 s swings; the
     // same block-write jitter the r13-waist gate removed elsewhere).
     // tot and the posting pass each scan the standing blocks once.
@@ -1588,8 +1588,8 @@ object CorpusQueries {
     * corpus doc whose component_id ≠ prior_component was MERGED by
     * today's batch, the operational readout of an ingest.
     *
-    * Scale: the prior map and edge set are standing artifacts (parquet
-    * tables in production — the [[Artifacts]] store); per ingest the
+    * Scale: the prior map and edge set are standing artifacts
+    * ([[Artifacts]]; warehouse tables in production); per ingest the
     * work is one batch-involving pair filter, two label joins, and a
     * CC loop over a delta-sized contracted graph. Corpus size enters
     * only through the (already standing) inputs — this is what makes

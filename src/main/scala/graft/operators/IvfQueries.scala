@@ -167,10 +167,9 @@ object IvfQueries {
     * is corpus state — q39/q42/q72/q123/q157 (+ the coreset/noise
     * family) all search the SAME index, and each re-running the full
     * Lloyd-iteration build per query was ~0.5 s of identical work.
-    * Assignments are a corpus-sized frame artifact (checkpointed, or
-    * a store parquet table); centroids collapse to a K-row
-    * LocalRelation — both DISK-BACKED since round 10, so a warm
-    * session never re-trains (r9 verdict #6). */
+    * Assignments are a corpus-sized frame artifact (checkpointed);
+    * centroids collapse to a K-row LocalRelation, so a warm session
+    * never re-trains. */
   private[operators] def index(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val p = indexFull(s, dir)
     (p.assigned, p.centroids)
@@ -183,13 +182,13 @@ object IvfQueries {
 
   private[operators] def indexFull(s: SparkSession, dir: String): IvfParts =
     Artifacts.value(s, dir, "ivf_index") {
-      // one buildIndexFull serves all pieces on a cold store; a warm
-      // store (or warm memo) never trains at all
+      // one buildIndexFull serves all pieces; it runs only for a piece
+      // not yet memoized
       var built: Option[BuiltIndex] = None
       def build: BuiltIndex = built.getOrElse {
         val b = buildIndexFull(s, dir); built = Some(b); b
       }
-      // NOTE: vectors stay array<double> in the store. A float-packed
+      // NOTE: vectors stay array<double> in the artifact. A float-packed
       // v2 was measured and REVERTED: the unpack transform re-ran per
       // JOINED PAIR in q72's self-join (2.9 G evaluations at 100×),
       // and even cached it lost to the parquet double path — warm
@@ -333,9 +332,9 @@ object IvfQueries {
     val assigned = index(s, dir)._1
     // (round 15) the old `assigned.count()` race guard predates the
     // artifact layer: ivf_assigned is now EAGERLY materialized at
-    // build (localCheckpoint(true) / store parquet), so the self-join
-    // scans read standing blocks and the count was one full N-row
-    // scan job per execution for nothing
+    // build (localCheckpoint(true)), so the self-join scans read
+    // standing blocks and the count was one full N-row scan job per
+    // execution for nothing
     // FUSED PAIR KERNEL (round 15, second pass — guide §2.3/§2.4; the
     // q157 graft_cell_knn rationale verbatim): the within-cell
     // self-join form shuffled the member set twice and assembled a

@@ -46,7 +46,7 @@ object MiningQueries {
     * warm-100× first-touch ~20 s: the pair scan and the unigram scan
     * are separate AQE stages that race the cold page cache over the
     * same parquet blocks (r13 SCALE.md top candidate). As standing
-    * tables, a warm session reads both from the store and q68 is pure
+    * tables, a warm session reads both from memory and q68 is pure
     * bounded-frame arithmetic; `spark.graft.artifacts=off` still builds
     * inline through the identical code below. */
   private[operators] def unigramCounts(s: SparkSession, dir: String): DataFrame =

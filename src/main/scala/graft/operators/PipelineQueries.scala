@@ -878,13 +878,13 @@ object PipelineQueries {
     * re-derives the index inline, so reuse can never mask a wrong
     * result (ArtifactsSpec pins artifact == fresh build). */
   private[operators] def winnowFp(s: SparkSession, dir: String): DataFrame =
-    // v2: the index rows carry `sh` (1 = the fingerprint hash is
-    // selected by ≥2 distinct docs). Cross-doc sharing is a property
-    // OF the index, so it is computed once at build time — q162's DAG
-    // references the index on two output branches and re-derived the
-    // shared set per branch before this (two distinct+agg subtrees in
-    // one plan)
-    Artifacts.frame(s, dir, "winnow_fp", version = 2) {
+    // the index rows carry `sh` (1 = the fingerprint hash is selected
+    // by ≥2 distinct docs). Cross-doc sharing is a property OF the
+    // index, so it is computed once at build time — q162's DAG
+    // references the index on two output branches and would otherwise
+    // re-derive the shared set per branch (two distinct+agg subtrees
+    // in one plan)
+    Artifacts.frame(s, dir, "winnow_fp") {
       // shared ⟺ ≥2 distinct docs select the hash ⟺ min(doc) ≠
       // max(doc) within the hash — ONE sel_h-keyed window pass, no
       // self-join, no second fingerprint fold

@@ -174,7 +174,7 @@ object PqQueries {
     * bounded eval panel — both shippable at any corpus size. */
   private[operators] def pqModel(s: SparkSession, dir: String)
       : (Array[Array[Array[Long]]], Array[(Long, Array[Long])]) =
-    Artifacts.storedValue(s, dir, "pq_model") {
+    Artifacts.value(s, dir, "pq_model") {
       var qPanel: Array[(Long, Array[Long])] = null
       val cent = trainCore(
           Tables.spread(quantized(s, dir)), M, SubDim, K, Iters) { pts =>
@@ -184,45 +184,7 @@ object PqQueries {
           .sortBy(_._1)
       }
       (cent, qPanel)
-    }(v => modelFrame(s,
-        codebookRows("cent", v._1) ++ v._2.flatMap { case (id, arr) =>
-          arr.indices.map(j => ("pan", id, j.toLong, 0L, arr(j))) }),
-      df => {
-        val rows = modelRows(df)
-        (decodeCodebook(rows, "cent"),
-          rows.filter(_._1 == "pan").groupBy(_._2).toSeq.sortBy(_._1)
-            .map { case (id, rs) => (id, rs.sortBy(_._3).map(_._5).toArray) }
-            .toArray)
-      })
-
-  /** Lossless (part, a, b, c, v) codec for the trained-model standing
-    * tables — integer codebooks and panels only, so parquet round-trips
-    * are bit-exact. */
-  private def codebookRows(part: String, cb: Array[Array[Array[Long]]])
-      : Seq[(String, Long, Long, Long, Long)] =
-    for {
-      m <- cb.indices
-      k <- cb(m).indices
-      j <- cb(m)(k).indices
-    } yield (part, m.toLong, k.toLong, j.toLong, cb(m)(k)(j))
-
-  private def modelFrame(s: SparkSession,
-      rows: Seq[(String, Long, Long, Long, Long)]): DataFrame = {
-    import s.implicits._
-    rows.toDF("part", "a", "b", "c", "v")
-  }
-
-  private def modelRows(df: DataFrame): Array[(String, Long, Long, Long, Long)] =
-    df.select(col("part"), col("a"), col("b"), col("c"), col("v")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-
-  private def decodeCodebook(rows: Array[(String, Long, Long, Long, Long)],
-      part: String): Array[Array[Array[Long]]] =
-    rows.filter(_._1 == part).groupBy(_._2).toSeq.sortBy(_._1).map { case (_, ms) =>
-      ms.groupBy(_._3).toSeq.sortBy(_._1).map { case (_, ks) =>
-        ks.sortBy(_._4).map(_._5).toArray
-      }.toArray
-    }.toArray
+    }
 
   /** ADC (see object doc) over stored codes (vec_id, codes) against a
     * trained codebook cb[m][k][j]: the query meets each codebook entry
@@ -478,17 +440,10 @@ object PqQueries {
     * standing artifact — the FAISS index nobody retrains per query. */
   private[operators] def ivfpqModel(s: SparkSession, dir: String)
       : (Array[Array[Array[Long]]], Array[Array[Array[Long]]], Array[Long]) =
-    Artifacts.storedValue(s, dir, "ivfpq_model") {
+    Artifacts.value(s, dir, "ivfpq_model") {
       ivfpqTrain(Tables.spread(quantized(s, dir)), Cells, M, SubDim, K,
         Iters, queryId = 0L)
-    }(v => modelFrame(s,
-        codebookRows("coarse", v._1) ++ codebookRows("fine", v._2) ++
-          v._3.indices.map(j => ("q0", j.toLong, 0L, 0L, v._3(j)))),
-      df => {
-        val rows = modelRows(df)
-        (decodeCodebook(rows, "coarse"), decodeCodebook(rows, "fine"),
-          rows.filter(_._1 == "q0").sortBy(_._2).map(_._5))
-      })
+    }
 
   private def q98(s: SparkSession, dir: String): DataFrame = {
     val (coarse, fine, q0) = ivfpqModel(s, dir)

@@ -248,8 +248,7 @@ object SelectionQueries {
   private[graft] def lmModel(
       s: SparkSession, dir: String): (DataFrame, DataFrame, Long) =
     Artifacts.value(s, dir, "bigram_lm") {
-      // lazy: a warm store serves all three standing tables without
-      // ever running the fit; a cold store derives once, writes three
+      // lazy: the fit runs only for an inner frame not yet memoized
       lazy val f = lmFrames(s, dir)
       (Artifacts.localFrame(s, dir, "lm_bigrams")(f._2),
         Artifacts.localFrame(s, dir, "lm_contexts")(f._3),

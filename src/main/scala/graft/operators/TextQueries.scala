@@ -758,7 +758,7 @@ object TextQueries {
 
   /** The per-source vocabulary GROWTH CURVE at the HeapsC checkpoint
     * ladder — (source, crk, d, nn, v), bounded (≤ HeapsC·|S| rows), as
-    * a store-backed LocalRelation: the curve is corpus state (the
+    * a memoized LocalRelation: the curve is corpus state (the
     * q43-pctFrame precedent) and the registered q163 just fits it, so
     * its warm plan is literals + one aggregate. */
   private[operators] def growthCurve(s: SparkSession, dir: String): DataFrame =

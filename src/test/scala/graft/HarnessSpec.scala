@@ -83,7 +83,7 @@ class HarnessSpec extends SparkSpec {
     assert(conf.confs === Seq("spark.graft.artifacts" -> "off", "a" -> "b=c"))
     Seq(
       "SPARK_GRAFT_NO_ARTIFACTS" -> "SPARK_GRAFT_CONF=\"spark.graft.artifacts=off",
-      "SPARK_GRAFT_ARTIFACT_STORE" -> "SPARK_GRAFT_CONF=\"spark.graft.artifacts=",
+      "SPARK_GRAFT_ARTIFACT_STORE" -> "disk artifact store is removed",
       "SPARK_GRAFT_WIDE_DIGEST" -> "wide gram digest is removed").foreach { case (name, hint) =>
       val ex = intercept[IllegalArgumentException](Harness.fromEnv(Map(name -> "1")))
       assert(ex.getMessage.contains(name) && ex.getMessage.contains(hint), ex.getMessage)
@@ -91,9 +91,10 @@ class HarnessSpec extends SparkSpec {
   }
 
   test("env fails loudly on a removed conf inside SPARK_GRAFT_CONF") {
-    Seq("spark.graft.wideDigest", "spark.graft.waistMinBytes").foreach { k =>
+    Seq("spark.graft.wideDigest" -> "1", "spark.graft.waistMinBytes" -> "1",
+      "spark.graft.artifacts" -> "/tmp/artifact_store").foreach { case (k, v) =>
       val ex = intercept[IllegalArgumentException](Harness.fromEnv(
-        Map("SPARK_GRAFT_CONF" -> s"spark.graft.artifacts=off;$k=1")))
+        Map("SPARK_GRAFT_CONF" -> s"spark.graft.artifacts=off;$k=$v")))
       assert(ex.getMessage.contains(k) && ex.getMessage.contains("removed"), ex.getMessage)
     }
   }

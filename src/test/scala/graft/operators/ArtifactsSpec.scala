@@ -190,44 +190,6 @@ class ArtifactsSpec extends SparkSpec {
     assert(got === full)
   }
 
-  test("disk store: artifacts persist as parquet and later sessions read, not rebuild") {
-    import spark.implicits._
-    val corpusDir = tempDir("artstore_data")
-    val storeDir = tempDir("artstore")
-    def writeDocs(texts: Seq[String]): Unit =
-      texts.zipWithIndex
-        .map { case (t, i) => (i.toLong, t, "en", "web", t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
-    writeDocs(Seq(
-      "alpha bravo charlie delta echo foxtrot golf hotel india juliet",
-      "alpha bravo charlie delta echo foxtrot golf hotel india kilo",
-      "lima mike november oscar papa quebec romeo sierra tango uniform"))
-    spark.conf.set(Artifacts.ModeKey, storeDir)
-    try {
-      val first = DedupQueries.jaccardPairs(spark, corpusDir)
-        .orderBy(col("doc_a"), col("doc_b")).collect().toSeq
-      assert(first.nonEmpty, "the two alpha... docs must be a near-dup pair")
-      // the standing table must exist on disk
-      val stored = new java.io.File(storeDir).listFiles()
-        .filter(_.getName.endsWith("_neardup_pairs_v1"))
-      assert(stored.length === 1, "one parquet artifact dir expected")
-      // a NEW session-equivalent (memo cleared) over the same corpus
-      // must serve the STORED artifact: a scan of the standing table,
-      // not a rebuild from the corpus
-      Artifacts.reset()
-      val served = DedupQueries.jaccardPairs(spark, corpusDir)
-      assert(served.inputFiles.nonEmpty &&
-        served.inputFiles.forall(_.contains(stored.head.getName)), served.inputFiles.mkString(","))
-      val second = served.orderBy(col("doc_a"), col("doc_b")).collect().toSeq
-      assert(second === first,
-        "store hit must serve the written artifact, not re-derive")
-    } finally {
-      spark.conf.unset(Artifacts.ModeKey)
-      Artifacts.reset() // drop entries built against the temp store/corpus
-    }
-  }
-
   test("rrf_fused artifact equals a fresh inline hybrid fusion") {
     val art = RetrievalQueries.fusedRrf(spark, dir)
       .orderBy(col("doc_id")).collect().toSeq
@@ -245,7 +207,7 @@ class ArtifactsSpec extends SparkSpec {
     val fp = PipelineQueries
       .winnowFingerprints(PipelineQueries.spanDocs(spark, dir))
       .collect().toSeq
-    // independent driver-side derivation of the v2 shared flag:
+    // independent driver-side derivation of the shared flag:
     // sh = 1 ⟺ the hash is selected by ≥ 2 distinct docs
     val docsPerH = fp.groupBy(_.getAs[String]("sel_h"))
       .view.mapValues(_.map(_.getAs[Long]("doc_id")).distinct.size).toMap
@@ -258,124 +220,6 @@ class ArtifactsSpec extends SparkSpec {
       "testdata must contain cross-doc shared fingerprints")
     assert(art.map(r => (r.getLong(0), r.getString(1), r.getString(2),
       r.getLong(3), r.getAs[Long]("sh"))) === fresh)
-  }
-
-  test("disk store: a partial directory without _SUCCESS is rebuilt, not trusted") {
-    import spark.implicits._
-    val corpusDir = tempDir("artpart_data")
-    val storeDir = tempDir("artpart")
-    Seq(
-      ("alpha bravo charlie delta echo foxtrot golf hotel india juliet", 0L),
-      ("alpha bravo charlie delta echo foxtrot golf hotel india kilo", 1L))
-      .map { case (t, i) => (i, t, "en", "web", t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
-    spark.conf.set(Artifacts.ModeKey, storeDir)
-    try {
-      val first = DedupQueries.jaccardPairs(spark, corpusDir)
-        .orderBy(col("doc_a"), col("doc_b")).collect().toSeq
-      assert(first.nonEmpty)
-      // simulate a crashed first build: drop the committer's marker and
-      // a data file from the stored artifact directory
-      val artDir = new java.io.File(storeDir).listFiles()
-        .filter(_.getName.endsWith("_neardup_pairs_v1")).head
-      artDir.listFiles().filter(f =>
-        f.getName == "_SUCCESS" || f.getName.endsWith(".parquet"))
-        .foreach(f => assert(f.delete()))
-      Artifacts.reset()
-      val second = DedupQueries.jaccardPairs(spark, corpusDir)
-        .orderBy(col("doc_a"), col("doc_b")).collect().toSeq
-      assert(second === first,
-        "missing _SUCCESS must trigger a rebuild, not serve the truncated dir")
-      assert(new java.io.File(artDir, "_SUCCESS").exists())
-    } finally {
-      spark.conf.unset(Artifacts.ModeKey)
-      Artifacts.reset()
-    }
-  }
-
-  test("flipping the store conf after first touch re-resolves (memo keys on store)") {
-    import spark.implicits._
-    val corpusDir = tempDir("artflip_data")
-    val storeDir = tempDir("artflip")
-    Seq(
-      ("alpha bravo charlie delta echo foxtrot golf hotel india juliet", 0L),
-      ("alpha bravo charlie delta echo foxtrot golf hotel india kilo", 1L))
-      .map { case (t, i) => (i, t, "en", "web", t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
-    try {
-      // first touch WITHOUT a store: localCheckpoint form
-      val inMem = DedupQueries.jaccardPairs(spark, corpusDir)
-        .orderBy(col("doc_a"), col("doc_b")).collect().toSeq
-      assert(new java.io.File(storeDir).listFiles().forall(_ == null),
-        "no store configured yet — nothing may be written")
-      // flip the conf WITHOUT resetting: the next touch must build the
-      // store-backed form (previously the stale memo entry kept serving
-      // the checkpoint form for the rest of the context)
-      spark.conf.set(Artifacts.ModeKey, storeDir)
-      val stored = DedupQueries.jaccardPairs(spark, corpusDir)
-        .orderBy(col("doc_a"), col("doc_b")).collect().toSeq
-      assert(stored === inMem)
-      assert(new java.io.File(storeDir).listFiles()
-        .exists(_.getName.endsWith("_neardup_pairs_v1")),
-        "store-backed artifact directory must exist after the conf flip")
-    } finally {
-      spark.conf.unset(Artifacts.ModeKey)
-      Artifacts.reset()
-    }
-  }
-
-  test("value memo re-resolves when the store conf flips (composite keys include store)") {
-    // composites wrapped in Artifacts.value (ivf_index, nb_model,
-    // bigram_lm) hold inner frame results whose memo keys include the
-    // resolved store; the outer value key must too, or flipping the
-    // conf after first touch serves the previously-resolved composition
-    val storeDir = tempDir("artvalflip")
-    var builds = 0
-    def get(): String =
-      Artifacts.value(spark, "/tmp/valflip_probe", "valflip_probe") {
-        builds += 1; s"build$builds"
-      }
-    try {
-      assert(get() === "build1")
-      assert(get() === "build1", "same config: memoized")
-      spark.conf.set(Artifacts.ModeKey, storeDir)
-      assert(get() === "build2", "store flip must re-resolve the value")
-      spark.conf.unset(Artifacts.ModeKey)
-      assert(get() === "build1", "the no-store form is still memoized")
-    } finally {
-      spark.conf.unset(Artifacts.ModeKey)
-      Artifacts.reset()
-    }
-  }
-
-  test("disk store: a builder-version bump stops matching the old entry and rebuilds") {
-    import spark.implicits._
-    val corpusDir = tempDir("artver_data")
-    val storeDir = tempDir("artver")
-    Seq((0L, "a b c"), (1L, "d e f"))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
-    spark.conf.set(Artifacts.ModeKey, storeDir)
-    try {
-      def build(v: String) = Artifacts.frame(spark, corpusDir, "verprobe",
-        version = if (v == "old") 1 else 2) {
-        Seq((v, 1L)).toDF("semantics", "n")
-      }
-      assert(build("old").select("semantics").head().getString(0) === "old")
-      Artifacts.reset()
-      // same name, bumped version: must NOT serve the v1 parquet
-      assert(build("new").select("semantics").head().getString(0) === "new")
-      val names = new java.io.File(storeDir).listFiles().map(_.getName).sorted
-      assert(names.exists(_.endsWith("_verprobe_v1")) &&
-        names.exists(_.endsWith("_verprobe_v2")), names.mkString(","))
-      // and no temp directory is left behind by the rename-commit path
-      assert(!names.exists(_.contains(".tmp-")), names.mkString(","))
-    } finally {
-      spark.conf.unset(Artifacts.ModeKey)
-      Artifacts.reset()
-    }
   }
 
   test("rank-frame family: pct frame equals a driver-side exact percentile recomputation") {
@@ -408,50 +252,6 @@ class ArtifactsSpec extends SparkSpec {
     assert(qh === qhExpected)
   }
 
-  test("stored VALUE kinds round-trip the store losslessly (PQ, IVF-PQ, BPE, IVF index, rrf)") {
-    def deep3(a: Array[Array[Array[Long]]]) = a.map(_.map(_.toSeq).toSeq).toSeq
-    val storeDir = tempDir("artval")
-    spark.conf.set(Artifacts.ModeKey, storeDir)
-    try {
-      Artifacts.reset()
-      // first session: trains + writes the standing tables
-      val (cent1, pan1) = PqQueries.pqModel(spark, dir)
-      val (co1, fi1, q01) = PqQueries.ivfpqModel(spark, dir)
-      val bpe1 = BpeQueries.trained(spark, dir)
-      val (asg1, c1) = IvfQueries.index(spark, dir)
-      val asgRows1 = asg1.orderBy(col("vec_id")).collect().toSeq
-      val cRows1 = c1.orderBy(col("cell")).collect().toSeq
-      val rrf1 = RetrievalQueries.fusedRrf(spark, dir)
-        .orderBy(col("doc_id")).collect().toSeq
-      val stored = new java.io.File(storeDir).listFiles().map(_.getName)
-      Seq("pq_model", "ivfpq_model", "bpe_trained", "ivf_assigned",
-        "ivf_centroids", "ivf_margins", "rrf_fused").foreach(n =>
-        assert(stored.exists(_.contains(s"_${n}_v")), s"$n missing from store"))
-      // second "session" (memo cleared): everything must DECODE from
-      // the store — and decode bit-identically to the fresh build
-      Artifacts.reset()
-      val (cent2, pan2) = PqQueries.pqModel(spark, dir)
-      assert(deep3(cent2) === deep3(cent1))
-      assert(pan2.map { case (id, a) => (id, a.toSeq) }.toSeq ===
-        pan1.map { case (id, a) => (id, a.toSeq) }.toSeq)
-      val (co2, fi2, q02) = PqQueries.ivfpqModel(spark, dir)
-      assert(deep3(co2) === deep3(co1))
-      assert(deep3(fi2) === deep3(fi1))
-      assert(q02.toSeq === q01.toSeq)
-      val bpe2 = BpeQueries.trained(spark, dir)
-      assert(bpe2.merges === bpe1.merges)
-      assert(bpe2.pieces === bpe1.pieces)
-      val (asg2, c2) = IvfQueries.index(spark, dir)
-      assert(asg2.orderBy(col("vec_id")).collect().toSeq === asgRows1)
-      assert(c2.orderBy(col("cell")).collect().toSeq === cRows1)
-      assert(RetrievalQueries.fusedRrf(spark, dir)
-        .orderBy(col("doc_id")).collect().toSeq === rrf1)
-    } finally {
-      spark.conf.unset(Artifacts.ModeKey)
-      Artifacts.reset()
-    }
-  }
-
   test("artifacts are memoized and survive catalog.clearCache") {
     val a = CorpusQueries.clusterMap(spark, dir)
     val n = a.count()
@@ -466,40 +266,35 @@ class ArtifactsSpec extends SparkSpec {
     assert(p eq DedupQueries.jaccardPairs(spark, dir))
   }
 
-  test("an in-place rewrite of the input rebuilds frame and stored-value artifacts (memo and store)") {
+  test("an in-place rewrite of the input rebuilds frame and value artifacts") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val store = tempDir("artrewrite_store")
-    Seq("memo", store).foreach { mode =>
-      val d = tempDir("artrewrite")
-      val docs = Paths.get(s"$d/documents.parquet")
-      Files.copy(Paths.get(s"$dir/documents.parquet"), docs)
-      def tokens(build: Boolean) =
-        (if (build) ExtendedQueries.docTokensBuild(spark, d) else ExtendedQueries.docTokens(spark, d))
-          .orderBy(col("doc_id")).collect().toSeq
-      def merges = BpeQueries.trained(spark, d).merges
-      graft.QuerySpec.scoped(spark, Map(Artifacts.ModeKey -> mode)) {
-        try {
-          val (tokens0, merges0) = (tokens(build = false), merges)
-          assert(tokens0 === tokens(build = true) && merges0 === TokenizeStream.trainMerges(words(d), 8), mode)
-          // rewrite the one file in place: half the rows, text reversed
-          val rows = s"${tempDir("artrewrite_rows")}/out"
-          graft.Tables.documents(spark, dir).filter(col("doc_id") % 2 === 0)
-            .withColumn("text", reverse(col("text")))
-            .coalesce(1).write.parquet(rows)
-          val part = new java.io.File(rows).listFiles().filter(_.getName.endsWith(".parquet")).head
-          Files.copy(part.toPath, docs, StandardCopyOption.REPLACE_EXISTING)
-          val (tokensFresh, mergesFresh) = (tokens(build = true), TokenizeStream.trainMerges(words(d), 8))
-          assert(tokensFresh != tokens0 && mergesFresh != merges0, "the rewrite must change both artifacts")
-          assert(tokens(build = false) === tokensFresh, s"$mode: stale doc_tokens served after the rewrite")
-          assert(merges === mergesFresh, s"$mode: stale bpe_trained served after the rewrite")
-          val scopes = Artifacts.memoScopes(d)
-          assert(scopes.exists(_.endsWith("doc_tokens_v1")) && scopes.exists(_.endsWith("bpe_trained_v1")) &&
-            scopes.distinct.size === scopes.size, s"$mode: one memo entry per artifact after the rewrite: $scopes")
-        } finally Artifacts.reset()
-      }
+    val d = tempDir("artrewrite")
+    val docs = Paths.get(s"$d/documents.parquet")
+    Files.copy(Paths.get(s"$dir/documents.parquet"), docs)
+    def tokens(build: Boolean) =
+      (if (build) ExtendedQueries.docTokensBuild(spark, d) else ExtendedQueries.docTokens(spark, d))
+        .orderBy(col("doc_id")).collect().toSeq
+    def merges = BpeQueries.trained(spark, d).merges
+    graft.QuerySpec.scoped(spark, Map(Artifacts.ModeKey -> "memo")) {
+      try {
+        val (tokens0, merges0) = (tokens(build = false), merges)
+        assert(tokens0 === tokens(build = true) && merges0 === TokenizeStream.trainMerges(words(d), 8))
+        // rewrite the one file in place: half the rows, text reversed
+        val rows = s"${tempDir("artrewrite_rows")}/out"
+        graft.Tables.documents(spark, dir).filter(col("doc_id") % 2 === 0)
+          .withColumn("text", reverse(col("text")))
+          .coalesce(1).write.parquet(rows)
+        val part = new java.io.File(rows).listFiles().filter(_.getName.endsWith(".parquet")).head
+        Files.copy(part.toPath, docs, StandardCopyOption.REPLACE_EXISTING)
+        val (tokensFresh, mergesFresh) = (tokens(build = true), TokenizeStream.trainMerges(words(d), 8))
+        assert(tokensFresh != tokens0 && mergesFresh != merges0, "the rewrite must change both artifacts")
+        assert(tokens(build = false) === tokensFresh, "stale doc_tokens served after the rewrite")
+        assert(merges === mergesFresh, "stale bpe_trained served after the rewrite")
+        val scopes = Artifacts.memoScopes(d)
+        assert(scopes.exists(_.endsWith("doc_tokens")) && scopes.exists(_.endsWith("bpe_trained")) &&
+          scopes.distinct.size === scopes.size, s"one memo entry per artifact after the rewrite: $scopes")
+      } finally Artifacts.reset()
     }
-    assert(new java.io.File(store).listFiles().count(_.getName.endsWith("_bpe_trained_v1")) === 2,
-      "store mode must write one bpe_trained entry per data version")
   }
 
   test("one session flips off <-> memo with identical results; a bad mode names the conf") {
@@ -516,7 +311,7 @@ class ArtifactsSpec extends SparkSpec {
       assert(off.forall(_._2.nonEmpty))
       assert(run("memo") === off)
       assert(run("off") === off)
-      Seq("", "1", "true", "relative/store", "store:x").foreach { bad =>
+      Seq("", "1", "true", "relative/store", "store:x", "/tmp/artifact_store").foreach { bad =>
         val e = graft.QuerySpec.scoped(spark, Map(Artifacts.ModeKey -> bad)) {
           intercept[IllegalArgumentException](DedupQueries.jaccardPairs(spark, dir))
         }

@@ -148,8 +148,6 @@ class NewOpsPlanShapeSpec extends SparkSpec {
     // the LM-broadcast discipline lives in the docNll BUILDER
     // (PipelinePlanShapeSpec); the registered consumer is a
     // |S|-row rollup of the standing per-doc NLL artifact
-    // documents-scan-specific pin (not any-FileScan): with the artifact
-    // store enabled the doc_nll read-back is itself a parquet FileScan
     val p = finalPlan("q144_doremi_reweight")
     assert(!p.contains("documents.parquet") && !p.contains("graft_ln_small"),
       s"q144 must read the doc_nll artifact, not re-score the corpus:\n$p")
@@ -261,21 +259,11 @@ class NewOpsPlanShapeSpec extends SparkSpec {
   test("CC/cluster consumers read the standing artifact, not a rebuilt clustering") {
     // the cluster_map artifact is materialized RDD blocks — consumers
     // must scan it (ExistingRDD), not re-run the shingle/pair/CC chain
-    // in store mode (spark.graft.artifacts=<path>) the artifact reads back as a
-    // parquet FileScan of the store path instead of ExistingRDD blocks
-    // (q97 also legitimately scans documents for the canonical text);
-    // the invariant in both modes is "the clustering comes from the
-    // artifact, never a rebuilt shingle/pair/CC chain"
-    val store = spark.conf.getOption(Artifacts.ModeKey).filterNot(Set("memo", "off")).getOrElse("")
+    // (q97 also legitimately scans documents for the canonical text)
     Seq("q97_cluster_canonical", "q128_cluster_sizes", "q142_softdedup_weights")
       .foreach { q =>
-        val p = finalPlan(q)
-        if (store.nonEmpty)
-          assert(p.contains(store),
-            s"$q must scan the stored cluster_map/pairs artifact at $store")
-        else
-          assert(p.contains("Scan ExistingRDD"),
-            s"$q must read the cluster_map/pairs artifact blocks")
+        assert(finalPlan(q).contains("Scan ExistingRDD"),
+          s"$q must read the cluster_map/pairs artifact blocks")
       }
   }
 
@@ -306,15 +294,9 @@ class NewOpsPlanShapeSpec extends SparkSpec {
   }
 
   test("q174/q175 ride the standing pair artifact, no shingle re-derivation") {
-    // same store-mode scoping as the CC-consumer pin above
-    val store = spark.conf.getOption(Artifacts.ModeKey).filterNot(Set("memo", "off")).getOrElse("")
     Seq("q174_transitivity_audit", "q175_minhash_calibration").foreach { q =>
       val p = finalPlan(q)
-      if (store.nonEmpty)
-        assert(p.contains(store),
-          s"$q must scan the stored pair artifact at $store")
-      else
-        assert(p.contains("Scan ExistingRDD"), s"$q must read artifact blocks")
+      assert(p.contains("Scan ExistingRDD"), s"$q must read artifact blocks")
       assert(!p.contains("CartesianProduct"), q)
     }
   }

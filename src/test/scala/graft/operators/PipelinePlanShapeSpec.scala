@@ -218,9 +218,7 @@ class PipelinePlanShapeSpec extends SparkSpec {
     // artifact (the q94/q150 consumer pattern) — the corpus passes
     // live in the builder, pinned below
     val p = finalPlan("q93_dsir_select")
-    // the suite convention (q99/q37 pins): assert no CORPUS rescan,
-    // not "no parquet at all" — under a `spark.graft.artifacts` store the
-    // dsir_logits artifact legitimately reads back as a parquet scan
+    // the suite convention (q99/q37 pins): assert no CORPUS rescan
     assert(!p.contains("documents.parquet") && !p.contains("text#"),
       s"q93 must serve from the standing dsir_logits table:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("Join"),
@@ -294,10 +292,7 @@ class PipelinePlanShapeSpec extends SparkSpec {
   test("docNll consumers read the doc_nll artifact — no corpus re-score") {
     // q99 is the cheapest pure consumer: its warm plan must be a
     // per-source rollup of the artifact, never a documents scan
-    // assert the DOCUMENTS scan is gone specifically (not any FileScan):
-    // under a `spark.graft.artifacts` store path the artifact itself
-    // legitimately reads back as a parquet FileScan, and the pin must
-    // hold in both modes
+    // assert the DOCUMENTS scan is gone specifically (not any FileScan)
     val p99 = finalPlan("q99_ppl_filter")
     assert(!p99.contains("documents.parquet") && !p99.contains("text#"),
       s"q99 must read the doc_nll artifact, not re-scan documents:\n$p99")
@@ -307,8 +302,6 @@ class PipelinePlanShapeSpec extends SparkSpec {
   }
 
   test("q37 reads the doc_tokens artifact — the regex kernel runs only in the build") {
-    // same store-mode scoping as the docNll consumer pin: the artifact
-    // itself may read back as a parquet FileScan under the store
     val p37 = finalPlan("q37_bpe_tokens")
     assert(!p37.contains("documents.parquet") && !p37.contains("text#"),
       s"q37 must read the doc_tokens artifact, not re-run the regex pass:\n$p37")
