@@ -20,14 +20,20 @@ final class CoachSession(
   lazy val meta: MetaWorkflow.MetaTables =
     MetaWorkflow.run(spark, metaBatches(), minTotal, minPerType)
 
-  /** ensure_user (:601-615): Phase 1 for one player's raw battle log. */
+  /** The card dimension as a lookup literal, collected once per session
+    * and shared by every [[analyzeUser]]. */
+  private lazy val lookup = DeckType.cardLookup(cardMeta)
+
+  /** ensure_user (:601-615): Phase 1 for one player's raw battle log:
+    * one Spark job, which fetches and classifies the log; the tables
+    * are built on first read ([[UserWorkflow.UserTables]]). */
   def analyzeUser(rawBattles: DataFrame): UserWorkflow.UserTables =
-    UserWorkflow.run(spark, rawBattles, cardMeta)
+    UserWorkflow.run(spark, rawBattles, lookup)
 
   /** The two meta context tables, each rendered once per session. */
   private lazy val metaRows = new ContextRows(Map(
-    "meta_deck_summary" -> meta.deckSummary,
-    "meta_matchups" -> meta.matchupSummary))
+    "meta_deck_summary" -> (() => meta.deckSummary),
+    "meta_matchups" -> (() => meta.matchupSummary)))
 
   /** qa_answer (:621-642): classify → select tables → assemble context
     * → health check. The returned context is what the expert LLM call

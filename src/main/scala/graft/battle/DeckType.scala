@@ -14,12 +14,13 @@ import org.apache.spark.sql.functions._
   *    convenient.
   *  - `classifyDecks`: one row-level projection over the deck array.
   *    The card dimension (keyed by name) becomes a map literal built
-  *    once per workflow call ([[cardLookup]]); counts, the elixir sum
-  *    and the 4-card cycle are higher-order functions over the looked-up
-  *    cards; the CASE cascade sits on top. Every feature comes from the
-  *    row's own deck, so there is no explode, no join back and no
-  *    shuffle: the input plan is read once, and a row is classified
-  *    wherever it already is — the scale path for billions of decks.
+  *    once per workflow call or coach session ([[cardLookup]]); counts,
+  *    the elixir sum and the 4-card cycle are higher-order functions
+  *    over the looked-up cards; the CASE cascade sits on top. Every
+  *    feature comes from the row's own deck, so there is no explode, no
+  *    join back and no shuffle: the input plan is read once, and a row
+  *    is classified wherever it already is — the scale path for
+  *    billions of decks.
   *
   * Semantics preserved from the reference:
   *  - avg elixir = sum(known elixirs) / 8.0 — FIXED denominator 8, null
@@ -61,9 +62,9 @@ object DeckType {
   // ------------------------------------------------------------ tier 2
   /** The card dimension as a `map<name, struct<elixir, is_big_tank,
     * is_bait_piece, is_bridge_spam_piece>>` literal. Collects the
-    * (tiny) dimension once; build it once per workflow call and pass it
-    * to every [[classifyDecks]] of that call. A null flag counts as
-    * false. */
+    * (tiny) dimension once; build it once per workflow call or coach
+    * session and pass it to every [[classifyDecks]] there. A null flag
+    * counts as false. */
   def cardLookup(cardMeta: DataFrame): Column = {
     val traits = cardMeta
       .select(col("name"), col("elixir").cast("int"),

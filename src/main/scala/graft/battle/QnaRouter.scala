@@ -101,14 +101,15 @@ object QnaRouter extends QuestionClassifier {
     else None
 }
 
-/** Context rows of a fixed set of tables, each table rendered
+/** Context rows of a fixed set of tables, each table built and rendered
   * ([[QnaRouter.renderRows]], top [[QnaRouter.TopN]]) on its first use
   * and kept for the life of this object, so answers over the same
-  * tables start no Spark job after the first. Safe under concurrent
+  * tables start no Spark job after the first. The tables are thunks:
+  * building this object forces none of them. Safe under concurrent
   * callers: a table is rendered at most once. */
-final class ContextRows(tables: Map[String, DataFrame]) {
-  private final class Slot(df: DataFrame) {
-    lazy val rows: IndexedSeq[String] = QnaRouter.renderRows(df, QnaRouter.TopN)
+final class ContextRows(tables: Map[String, () => DataFrame]) {
+  private final class Slot(df: () => DataFrame) {
+    lazy val rows: IndexedSeq[String] = QnaRouter.renderRows(df(), QnaRouter.TopN)
   }
   private val slots = tables.map { case (name, df) => name -> new Slot(df) }
 

@@ -150,19 +150,16 @@ object UserAnalytics {
   }
 
   /** build_user_summary_table (user_workflow.py:39-43): summary →
-    * {metric, value} unpivot. */
-  def summaryTable(battles: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Column
+    * {metric, value} rows, one per summary column, sorted by metric.
+    * The unpivot is an explode (a Generate), which keeps its input's
+    * partitioning, so a single-partition input sorts in place; Spark's
+    * `unpivot` plans an Expand, which does not, and the sort would add
+    * an exchange. `stack` keeps the partitioning too, but types
+    * `metric` nullable. */
+  def summaryTable(battles: DataFrame): DataFrame =
     computeSummary(battles)
-      .select(
-        col("games").cast("double").as("games"),
-        col("wins").cast("double").as("wins"),
-        col("losses").cast("double").as("losses"),
-        col("draws").cast("double").as("draws"),
-        col("win_rate"))
-      .unpivot(Array.empty[Column],
-        Array(col("games"), col("wins"), col("losses"), col("draws"), col("win_rate")),
-        "metric", "value")
+      .select(explode(array(Seq("games", "wins", "losses", "draws", "win_rate").map(m =>
+        struct(lit(m).as("metric"), col(m).cast("double").as("value"))): _*)).as("p"))
+      .select(col("p.metric"), col("p.value"))
       .orderBy(col("metric"))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.battle
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Workflow-level entry points — the engine-side equivalents of the
@@ -11,52 +11,57 @@ import org.apache.spark.sql.functions._
 object UserWorkflow {
 
   /** All Phase 1 outputs (user_workflow.py:370-400 fan-out +
-    * build_user_llm_tables_node :323-363). */
-  final case class UserTables(
-      normalized: DataFrame,
-      summary: DataFrame,
-      summaryTable: DataFrame,
-      deckTypeSummary: DataFrame,
-      deckTypeMatchups: DataFrame,
-      userDeckMatchups: DataFrame,
-      cardBest: DataFrame,
-      cardWorst: DataFrame,
-      deckBest: DataFrame,
-      deckWorst: DataFrame) {
+    * build_user_llm_tables_node :323-363) over one player's classified
+    * battle log, held as a single-partition local relation
+    * ([[normalized]]). Every table is a `lazy val`: it is analyzed on
+    * its first read, so a coach session builds only the tables it
+    * renders, and no table plans an exchange (the input reports
+    * `SinglePartition`, so per-player group-bys and sorts run in
+    * place). */
+  final class UserTables private[UserWorkflow] (
+      val normalized: DataFrame,
+      private[battle] val games: Long) {
+
+    lazy val summary: DataFrame = UserAnalytics.computeSummary(normalized)
+    lazy val summaryTable: DataFrame = UserAnalytics.summaryTable(normalized)
+    lazy val deckTypeSummary: DataFrame = UserAnalytics.summarizeDeckTypes(normalized)
+    lazy val deckTypeMatchups: DataFrame = UserAnalytics.deckTypeMatchups(normalized)
+    lazy val userDeckMatchups: DataFrame =
+      UserAnalytics.userDeckMatchups(normalized.sparkSession, normalized)
+    lazy val cardBest: DataFrame = UserAnalytics.cardPerformance(normalized)
+    lazy val cardWorst: DataFrame = UserAnalytics.cardPerformance(normalized, worst = true)
+    lazy val deckBest: DataFrame = UserAnalytics.deckPerformance(normalized)
+    lazy val deckWorst: DataFrame = UserAnalytics.deckPerformance(normalized, worst = true)
 
     /** The player's four Phase 2 context tables by [[QnaRouter]] name,
       * each rendered on its first use and then reused by every answer
       * over these tables (build_user_llm_tables_node computes them
       * once, user_workflow.py:323-363). */
     private[battle] val contextRows = new ContextRows(Map(
-      "user_summary" -> summaryTable,
-      "user_deck_summary" -> deckTypeSummary,
-      "user_matchups" -> deckTypeMatchups,
-      "card_performance" -> cardBest))
-
-    /** Ranked games played, read from [[summary]] on first use. */
-    private[battle] lazy val games: Long = summary.collect()(0).getAs[Long]("games")
+      "user_summary" -> (() => summaryTable),
+      "user_deck_summary" -> (() => deckTypeSummary),
+      "user_matchups" -> (() => deckTypeMatchups),
+      "card_performance" -> (() => cardBest)))
   }
 
-  /** raw battle-log DataFrame (BattleSchema.raw) + card metadata →
-    * normalize → classify both sides (one projection) → cache → six
-    * aggregations from the one cached input (mirrors the reference
-    * computing all analytics from one normalized list,
-    * user_workflow.py:265-290). */
-  def run(spark: SparkSession, rawBattles: DataFrame, cardMeta: DataFrame): UserTables = {
-    val classified = DeckType.classifyBattles(Normalize(rawBattles), DeckType.cardLookup(cardMeta))
-      .cache()
-    UserTables(
-      normalized = classified,
-      summary = UserAnalytics.computeSummary(classified),
-      summaryTable = UserAnalytics.summaryTable(classified),
-      deckTypeSummary = UserAnalytics.summarizeDeckTypes(classified),
-      deckTypeMatchups = UserAnalytics.deckTypeMatchups(classified),
-      userDeckMatchups = UserAnalytics.userDeckMatchups(spark, classified),
-      cardBest = UserAnalytics.cardPerformance(classified),
-      cardWorst = UserAnalytics.cardPerformance(classified, worst = true),
-      deckBest = UserAnalytics.deckPerformance(classified),
-      deckWorst = UserAnalytics.deckPerformance(classified, worst = true))
+  /** raw battle-log DataFrame (BattleSchema.raw) → normalize → classify
+    * both sides through `lookup` ([[DeckType.cardLookup]]) → collect
+    * once → a `coalesce(1)` local relation that every table reads
+    * (mirrors the reference computing all analytics from one
+    * normalized list, user_workflow.py:265-290).
+    *
+    * One player's log is one API page (the battlelog endpoint returns
+    * the player's ~25 most recent battles, battles.py:20-44), so the
+    * driver holds it whole. The tables then carry no fetch or
+    * classification lineage: each runs as one job over the collected
+    * rows, and [[UserTables.games]] is the collected row count.
+    * `normalized` is not cached, so `normalized.unpersist()` is a
+    * no-op. */
+  def run(spark: SparkSession, rawBattles: DataFrame, lookup: Column): UserTables = {
+    val classified = DeckType.classifyBattles(Normalize(rawBattles), lookup)
+    val rows = classified.collect()
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), classified.schema)
+    new UserTables(local.coalesce(1), rows.length.toLong)
   }
 }
 

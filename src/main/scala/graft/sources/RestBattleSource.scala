@@ -66,11 +66,13 @@ final class UrlRestClient(
   *  - items-unwrap mirrors battles.py:38-44 / players.py:13-23: the
   *    endpoint may return a bare JSON array or an {"items": [...]}
   *    wrapper; both normalize to the same rows.
-  *  - The fetch is DISTRIBUTED: tags become a Dataset, one client per
-  *    partition (the per-partition-expensive-resource pattern), bodies
-  *    parsed with an explicit schema via from_json — never schema
-  *    inference. At 100 TB-scale ingest the fetch parallelism is the
-  *    partition count and the driver never holds response bodies.
+  *  - The fetch is DISTRIBUTED: the distinct tags are parallelized
+  *    straight into at most `defaultParallelism` slices (no shuffle),
+  *    one client per partition (the per-partition-expensive-resource
+  *    pattern), bodies parsed with an explicit schema via from_json —
+  *    never schema inference. At 100 TB-scale ingest the fetch
+  *    parallelism is the partition count and the driver never holds
+  *    response bodies.
   */
 object RestBattleSource {
 
@@ -108,8 +110,9 @@ object RestBattleSource {
     import spark.implicits._
     val wrapSchema = StructType(Seq(
       StructField("items", ArrayType(BattleSchema.raw))))
-    val bodies = spark.createDataset(tags.map(normalizeTag).distinct)
-      .repartition(math.max(1, math.min(tags.size, spark.sparkContext.defaultParallelism)))
+    val distinctTags = tags.map(normalizeTag).distinct
+    val slices = math.max(1, math.min(distinctTags.size, spark.sparkContext.defaultParallelism))
+    val bodies = spark.createDataset(spark.sparkContext.parallelize(distinctTags, slices))
       .mapPartitions { it =>
         it.map(tag => (tag, unwrapItems(client.get(battlelogPath(tag)))))
       }

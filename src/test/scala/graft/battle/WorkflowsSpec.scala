@@ -7,7 +7,7 @@ class WorkflowsSpec extends SparkSpec {
 
   test("UserWorkflow.run produces every Phase 1 table from raw JSON battles") {
     val t = UserWorkflow.run(spark, BattleFixtures.rawBattlesDf(spark),
-      BattleFixtures.cardMetaDf(spark))
+      DeckType.cardLookup(BattleFixtures.cardMetaDf(spark)))
     assert(t.normalized.count() === 4) // valid ranked full-deck battles in fixture
     assert(t.summary.collect()(0).getAs[Long]("games") === 4)
     assert(t.summaryTable.count() === 5) // games/wins/losses/draws/win_rate

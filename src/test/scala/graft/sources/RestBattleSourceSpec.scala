@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.battle.{BattleFixtures, MetaWorkflow, UserWorkflow}
+import graft.battle.{BattleFixtures, DeckType, MetaWorkflow, UserWorkflow}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -67,7 +67,7 @@ class RestBattleSourceSpec extends SparkSpec {
   test("UserWorkflow runs end-to-end through the REST source") {
     val client = new FixtureRestClient(Map("/players/%23ME/battlelog" -> battleArray))
     val raw = RestBattleSource.fetchBattles(spark, client, Seq("#me"))
-    val t = UserWorkflow.run(spark, raw, BattleFixtures.cardMetaDf(spark))
+    val t = UserWorkflow.run(spark, raw, DeckType.cardLookup(BattleFixtures.cardMetaDf(spark)))
     assert(t.normalized.count() === 4) // same valid battles as the fixture path
     assert(t.summary.collect()(0).getAs[Long]("games") === 4)
     assert(t.deckTypeSummary.columns.contains("win_rate"))
@@ -107,7 +107,7 @@ class RestBattleSourceSpec extends SparkSpec {
     val path = RestBattleSource.battlelogPath("#ONCE")
     val client = new CountingClient(new FixtureRestClient(Map(path -> battleArray)))
     val raw = RestBattleSource.fetchBattles(spark, client, Seq("#once"))
-    val t = UserWorkflow.run(spark, raw, BattleFixtures.cardMetaDf(spark))
+    val t = UserWorkflow.run(spark, raw, DeckType.cardLookup(BattleFixtures.cardMetaDf(spark)))
     Seq(t.normalized, t.summary, t.summaryTable, t.deckTypeSummary, t.deckTypeMatchups,
       t.userDeckMatchups, t.cardBest, t.cardWorst, t.deckBest, t.deckWorst).foreach(_.collect())
     assert(CountingClient.count(path) === 1)
